@@ -1119,6 +1119,9 @@ object ExplainCheck {
         "Window", "HashAggregate", "BroadcastHashJoin")),
     "q_mm_incremental_dedup" -> (Seq("BroadcastHashJoin", "HashAggregate", "Batched: true", "PushedFilters: ["),
       Seq("CartesianProduct", "SortMergeJoin", "BroadcastNestedLoopJoin", "Window")),
+    // band self-join: its build side is the unflagged banded rows, which
+    // broadcast at sf0.001; a SortMergeJoin here means the hot-flag outer
+    // joins' (product-of-children) size estimate has reached the self-join
     "q_mm_perceptual_dedup" -> (Seq("BroadcastHashJoin", "Generate", "HashAggregate", "Batched: true"),
       Seq("CartesianProduct", "SortMergeJoin", "BroadcastNestedLoopJoin", "Window")),
     "q_mm_pipeline" -> (Seq("BroadcastHashJoin", "HashAggregate", "Batched: true"),

@@ -560,6 +560,17 @@ object Multimodal {
     //    it must not suppress the pair), and each pair survives exactly
     //    once, at its lowest surviving shared band, with identical
     //    values (hamming/dhash_match are functionally dependent).
+    //  - The self-join's build (b) side reads the unflagged banded0, not
+    //    banded. Same rows that can match: the join pins a.band = b.band
+    //    and a.chunk = b.chunk, every surviving a row sits in a bucket
+    //    that is not hot, and hotness depends only on (band, chunk), so
+    //    every matching b row is in a surviving bucket too; firstMatch
+    //    reads only a's flags and both ahash values. Why it matters:
+    //    size-only statistics estimate an outer join as the product of
+    //    its children's sizes, so the four flag joins put banded at
+    //    about input^5; with banded on both sides the planner broadcasts
+    //    neither, and a SortMergeJoin shuffles both sides and runs the
+    //    flag joins twice.
     def chunkOf(c: org.apache.spark.sql.Column, t: Int) =
       pmod(shiftright(c, t * 16), lit(65536L))
     val banded =
@@ -587,7 +598,7 @@ object Multimodal {
       col("a.band") <= t || col(s"a.hot$t") ||
         chunkOf(col("a.ahash"), t) =!= chunkOf(col("b.ahash"), t))
       .reduce(_ && _)
-    banded.as("a").join(banded.as("b"),
+    banded.as("a").join(banded0.as("b"),
         col("a.band") === col("b.band") && col("a.chunk") === col("b.chunk") &&
           col("a.media_id") < col("b.media_id") && firstMatch)
       .select(col("a.media_id").as("media_a"), col("b.media_id").as("media_b"),

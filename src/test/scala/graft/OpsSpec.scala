@@ -3810,6 +3810,60 @@ class OpsSpec extends AnyFunSuite {
     assert(capped.forall { case (a, b) => a >= 6L && b >= 6L })
   }
 
+  test("perceptualPairs under a bucket cap equals brute force over surviving buckets") {
+    // ahash from its four 16-bit bands, band 0 lowest
+    def h(b0: Int, b1: Int, b2: Int, b3: Int): Long =
+      b0.toLong | (b1.toLong << 16) | (b2.toLong << 32) | (b3.toLong << 48)
+    val rows = Seq(
+      // 1..4 share band-0 chunk 0x0001: 4 members > cap 3, a hot bucket
+      (1L, h(0x0001, 0x1000, 0x2000, 0x3000), 10L, true),
+      // 1-2: hamming 3, share only the hot band 0 -> dropped
+      (2L, h(0x0001, 0x1001, 0x2001, 0x3001), 10L, true),
+      (3L, h(0x0001, 0x7000, 0x6000, 0x5000), 11L, true),
+      // 3-4: hamming 2, share the hot band 0 AND a band-2 chunk that is
+      // not hot -> kept once, at band 2
+      (4L, h(0x0001, 0x7001, 0x6000, 0x5002), 12L, true),
+      // 5-6: hamming 2, share bands 0, 1 and 2 -> kept once
+      (5L, h(0x0100, 0x0200, 0x0300, 0x0400), 13L, true),
+      (6L, h(0x0100, 0x0200, 0x0300, 0x0403), 13L, true),
+      // 7-8: hamming 3, share band 3 only
+      (7L, h(0x0A00, 0x0B00, 0x0C00, 0x0D00), 14L, true),
+      (8L, h(0x0A01, 0x0B01, 0x0C01, 0x0D00), 15L, true),
+      // undecoded twin of 5: never paired
+      (9L, h(0x0100, 0x0200, 0x0300, 0x0400), 13L, false),
+      // shares band 1 with 5 and 6 but far in hamming
+      (10L, h(0xFFFF, 0x0200, 0xFFFF, 0xFFFF), 16L, true),
+      // 11-12: sign bit set, hamming 1, share bands 1, 2 and 3
+      (11L, h(0x0F00, 0x0E00, 0x0D00, 0x8001), 17L, true),
+      (12L, h(0x0F01, 0x0E00, 0x0D00, 0x8001), 18L, true))
+    val ph = rows.toDF("media_id", "ahash", "dhash", "decoded")
+    def chunk(a: Long, t: Int): Long = (a >> (16 * t)) & 0xFFFFL
+    def brute(cap: Int): Seq[(Long, Long, Int, Boolean)] = {
+      val live = rows.filter(_._4)
+      val hot = live.flatMap(r => (0 until 4).map(t => (t, chunk(r._2, t))))
+        .groupBy(identity).collect { case (k, v) if v.size > cap => k }.toSet
+      (for {
+        a <- live; b <- live if a._1 < b._1
+        ham = java.lang.Long.bitCount(a._2 ^ b._2) if ham <= 3
+        if (0 until 4).exists(t => chunk(a._2, t) == chunk(b._2, t) &&
+          !hot((t, chunk(a._2, t))))
+      } yield (a._1, b._1, ham, a._3 == b._3)).sorted
+    }
+    def got(cap: Int) = Multimodal.perceptualPairs(ph, 3, cap).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getBoolean(3)))
+      .toSeq.sorted
+    val expected = brute(3)
+    // the cases above are live: the hot-only pair is gone, the pair that
+    // also shares a surviving band is kept
+    assert(!expected.exists(p => p._1 == 1L && p._2 == 2L))
+    assert(expected.contains((3L, 4L, 2, false)))
+    assert(got(3) == expected)
+    // uncapped, the hot-only pair comes back
+    val uncapped = brute(Dedup.Uncapped)
+    assert(uncapped.contains((1L, 2L, 3, true)))
+    assert(got(Dedup.Uncapped) == uncapped)
+  }
+
   test("perceptualHash: images narrower than the 8x8 pool do not crash") {
     import graft.ops.Multimodal
     val m = Seq(Multimodal.MediaRecord(1L, "image",
