@@ -66,8 +66,8 @@ object Bench {
       spark.catalog.clearCache()
     }
     // same idea for the bucketize → combine → densify/fill family (the
-    // other expression-heavy generated classes: map-collect aggregate,
-    // grid generate, fill windows) — on a half user-slice of real events
+    // other expression-heavy generated classes: struct-collect aggregate,
+    // densify_fill generate) — on a half user-slice of real events
     def warmTimeSeries(): Unit = {
       val raw = spark.read.parquet(s"$sfDir/events.parquet")
       val e = raw

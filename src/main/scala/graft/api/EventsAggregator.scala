@@ -43,16 +43,6 @@ class EventsAggregator(
     fillMode.getOrElse(
       if (ffill) graft.etl.Stages.ForwardFill else graft.etl.Stages.ZeroFill)
 
-  /** The RESOLVED fill policy name for the run manifest — recording the raw
-    * `ffill` boolean alone would misreport runs using the `fillMode`
-    * override (e.g. LinearInterp with ffill=false).
-    */
-  private val fillPolicy: String = fill match {
-    case graft.etl.Stages.ZeroFill => "zero"
-    case graft.etl.Stages.ForwardFill => "ffill"
-    case graft.etl.Stages.LinearInterp => "interp"
-  }
-
   private def readCsv(fileName: String, schema: org.apache.spark.sql.types.StructType): DataFrame =
     spark.read.schema(schema).option("header", "true").csv(s"$mimicPath/icu/$fileName")
 
@@ -159,6 +149,6 @@ class EventsAggregator(
       stayIndex.unpersist()
     }
     MatrixWriter.writeManifest(spark, dstPath, timestepSeconds, ffill,
-      fillPolicy, sources.map(_.name), (System.nanoTime() - t0) / 1e9)
+      fill.name, sources.map(_.name), (System.nanoTime() - t0) / 1e9)
   }
 }

@@ -1,8 +1,9 @@
 package graft.etl
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+import graft.functions.GraftFunctions.densify_fill
 
 /** The core ETL stages, each a pure `DataFrame => DataFrame` transform over
   * the long-form model `(stay_id, feature_id, tidx, value)` (SURVEY.md §1.1).
@@ -106,81 +107,47 @@ object Stages {
         first("total_windows").as("total_windows"))
 
   /** Densify the time axis: for every observed (stay, feature) pair emit one
-    * row per `tidx ∈ 0..total_windows`, filling gaps with 0.0 — optionally
-    * forward-filling first (leading gaps still 0.0). Reference
-    * `reindex(0..tidx_max)` + `fillna` (`__init__.py:124-136`).
+    * row per `tidx ∈ 0..total_windows`, filling gaps per [[FillMode]].
+    * Reference `reindex(0..tidx_max)` + `fillna` (`__init__.py:124-136`).
     *
-    * Shuffle-frugal formulation: instead of generating a dense spine and
-    * left-joining (two extra shuffles), aggregate observed cells into a
-    * per-(stay, feature) map and posexplode a dense `0..total_windows`
-    * lookup over it — a single hash aggregation whose output is already
-    * partitioned by (stay_id, feature_id), so the subsequent forward-fill
-    * window sort needs no extra exchange. Per-group state is bounded by
-    * windows-per-stay (days/step — small), so executor memory is safe at any
-    * row scale.
+    * One hash aggregation collects each pair's `(tidx, value)` cells; the
+    * compiled [[graft.functions.DensifyFill]] kernel turns them into the
+    * dense, filled series in O(total_windows + cells), and `posexplode`
+    * returns it to long form — no spine join, no Window. A cell whose
+    * combined value is null (e.g. the mean of an all-null window) is a gap
+    * in every mode, the same as a window with no cell.
+    *
+    * The kernel allocates `total_windows + 1` doubles per series, and
+    * nothing here bounds `total_windows`: a stay with a corrupt `outtime`
+    * makes one huge series (capping windows per stay is ROADMAP D3).
     *
     * Input/output: long form `(stay_id, feature_id, tidx, value)`.
     */
   def densify(combined: DataFrame, ffill: Boolean): DataFrame =
     densify(combined, if (ffill) ForwardFill else ZeroFill)
 
-  sealed trait FillMode
+  /** Gap policy of [[densify]]; `name` is the kernel's mode and the run
+    * manifest's fill policy. */
+  sealed trait FillMode { def name: String }
   /** Gaps → 0.0 (the reference default, `__init__.py:132-136`). */
-  case object ZeroFill extends FillMode
+  case object ZeroFill extends FillMode { val name = "zero" }
   /** Carry last observation forward; leading gaps → 0.0 (`--ffill`). */
-  case object ForwardFill extends FillMode
+  case object ForwardFill extends FillMode { val name = "ffill" }
   /** Linear interpolation between observations (beyond-reference): interior
     * gaps get `prev + (next-prev)·(t-pt)/(nt-pt)`; leading gaps → 0.0,
     * trailing gaps carry the last observation (pandas-interpolate shape).
     */
-  case object LinearInterp extends FillMode
+  case object LinearInterp extends FillMode { val name = "interp" }
 
-  def densify(combined: DataFrame, mode: FillMode): DataFrame = {
-    val packed = combined
+  def densify(combined: DataFrame, mode: FillMode): DataFrame =
+    combined
       .groupBy("stay_id", "feature_id")
-      .agg(
-        // struct-collect (not map_from_arrays of two collect_lists): a
-        // window whose combined value is null (e.g. mean of all-null) must
-        // stay a present-key/null-value entry, and collect_list on a bare
-        // column would drop it.
-        map_from_entries(collect_list(struct(col("tidx"), col("value")))).as("cells"),
+      .agg(collect_list(struct(col("tidx"), col("value"))).as("cells"),
         first("total_windows").as("total_windows"))
-    val dense = packed
       .select(col("stay_id"), col("feature_id"),
-        posexplode(transform(
-          sequence(lit(0L), col("total_windows")),
-          t => element_at(col("cells"), t))))
-      .withColumnRenamed("pos", "tidx")
-      .withColumn("tidx", col("tidx").cast("long"))
-    // all window frames sort within the (stay, feature) partitioning the
-    // groupBy above already produced — no extra exchange
-    val wPrev = Window.partitionBy("stay_id", "feature_id").orderBy("tidx")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wNext = Window.partitionBy("stay_id", "feature_id").orderBy("tidx")
-      .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    val filled = mode match {
-      case ZeroFill => dense.withColumn("out", coalesce(col("col"), lit(0.0)))
-      case ForwardFill => dense.withColumn("out",
-        coalesce(last(col("col"), ignoreNulls = true).over(wPrev), lit(0.0)))
-      case LinearInterp =>
-        dense
-          .withColumn("pv", last(col("col"), ignoreNulls = true).over(wPrev))
-          .withColumn("pt", last(when(col("col").isNotNull, col("tidx")),
-            ignoreNulls = true).over(wPrev))
-          .withColumn("nv", first(col("col"), ignoreNulls = true).over(wNext))
-          .withColumn("nt", first(when(col("col").isNotNull, col("tidx")),
-            ignoreNulls = true).over(wNext))
-          .withColumn("out",
-            when(col("col").isNotNull, col("col"))
-              .when(col("pv").isNull, lit(0.0)) // leading gap
-              .when(col("nv").isNull, col("pv")) // trailing gap
-              .otherwise(col("pv") + (col("nv") - col("pv")) *
-                (col("tidx") - col("pt")).cast("double") /
-                (col("nt") - col("pt")).cast("double")))
-    }
-    filled.select(col("stay_id"), col("feature_id"), col("tidx"),
-      col("out").as("value"))
-  }
+        posexplode(densify_fill(col("cells"), col("total_windows"), mode.name)))
+      .select(col("stay_id"), col("feature_id"), col("pos").cast("long").as("tidx"),
+        col("col").as("value"))
 
   /** Membership filter with the reference's ½-selectivity rewrite
     * (`__init__.py:180-193`, disabled there — enabled and pushed down here):

@@ -22,10 +22,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   *    [[graft.ops.Multimodal.wavSamples]] seam zero-pads to 64·nFrames,
   *    so every frame it feeds is complete — short audio transforms with
   *    its zero tail, exactly as the staged chain did;
-  *  - off that seam, a frame the input array cannot fill yields
-  *    signature 0 — the staged chain's value there (a missing sample
-  *    nulls its butterfly pair, the null closure covers all 64 outputs
-  *    in 6 stages, and the sign-pack's `if(null > 0)` packs 0 bits).
+  *  - off that seam, a frame the input array cannot fill, or one that
+  *    holds a null sample, yields signature 0 — the staged chain's value
+  *    there (a missing or null sample nulls its butterfly pair, the null
+  *    closure covers all 64 outputs in 6 stages, and the sign-pack's
+  *    `if(null > 0)` packs 0 bits).
   *
   * Returns `array<bigint>` of exactly `nFrames` signatures in frame
   * order; null samples → null.
@@ -68,15 +69,16 @@ object WhtSigsKernel {
     var f = 0
     while (f < nFrames) {
       val start = f * FrameLen
-      if (start + FrameLen <= n) {
-        val frame = new Array[Long](FrameLen)
-        var i = 0
-        while (i < FrameLen) {
-          frame(i) = samples.getLong(start + i)
-          i += 1
-        }
-        out(f) = graft.ops.Multimodal.whtFrameSig(frame)
-      } else out(f) = 0L
+      // a frame the array cannot fill, or one with a null sample, signs 0
+      var whole = start + FrameLen <= n
+      val frame = new Array[Long](FrameLen)
+      var i = 0
+      while (whole && i < FrameLen) {
+        whole = !samples.isNullAt(start + i)
+        if (whole) frame(i) = samples.getLong(start + i)
+        i += 1
+      }
+      out(f) = if (whole) graft.ops.Multimodal.whtFrameSig(frame) else 0L
       f += 1
     }
     new GenericArrayData(out)

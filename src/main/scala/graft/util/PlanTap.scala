@@ -12,6 +12,14 @@ import org.apache.spark.sql.DataFrame
   * through [[local]], which — only while a tool holds capture open —
   * records the INPUT's formatted plan before checkpointing. Off by
   * default: the bench/verify hot paths pay one volatile read.
+  *
+  * Capture is process-wide, not per thread: between [[start]] and [[stop]]
+  * every [[local]] call in the JVM records into the same buffer. It
+  * assumes one thread constructs the plans being audited, as
+  * `ExplainCheck` and `PlanDump` do. A caller that builds plans from
+  * several threads at once would see their captures interleaved;
+  * `EventsAggregator.run` does (up to four source threads), but its
+  * pipelines do not route through `local`.
   */
 object PlanTap {
   @volatile private var capturing = false

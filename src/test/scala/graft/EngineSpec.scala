@@ -303,4 +303,59 @@ class EngineSpec extends AnyFunSuite {
     assert(readCsvLines(dst.resolve("2/outputevents_features.csv")).length == 2)
     assert(readCsvLines(dst.resolve("3/outputevents_features.csv")).length == 1)
   }
+
+  test("densify: no Window in the executed plan, rows unchanged, every fill mode") {
+    import org.apache.spark.sql.execution.GenerateExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import graft.etl.Stages.{FillMode, ForwardFill, LinearInterp, ZeroFill}
+    object plans extends AdaptiveSparkPlanHelper
+    val root = Files.createTempDirectory("graft-mimic-dense")
+    writeFixtures(root)
+    // (source, stay, feature) -> values at tidx 0..total_windows, as the
+    // window-based densify produced them on this fixture
+    val m = 3.6666666666666665 // mean {1, 3, 7} of chartevents w0
+    val expected: Map[FillMode, Map[(String, Long, Long), Seq[Double]]] = Map(
+      ZeroFill -> Map(
+        ("chartevents", 1L, 100L) -> Seq(m, 0.0, 5.0, 0.0, 0.0, 0.0),
+        ("chartevents", 1L, 200L) -> Seq(0.0, 0.0, 0.0, 4.0, 0.0, 0.0),
+        ("inputevents", 1L, 300L) -> Seq(1.0, 1.0, 1.0, 2.0, 0.0, 0.0),
+        ("outputevents", 2L, 400L) -> Seq(10.0, 0.0, 0.0, 0.0, 2.0),
+        ("procedureevents", 1L, 500L) -> Seq(3.0, 3.0, 3.0, 0.0, 0.0, 0.0)),
+      ForwardFill -> Map(
+        ("chartevents", 1L, 100L) -> Seq(m, m, 5.0, 5.0, 5.0, 5.0),
+        ("chartevents", 1L, 200L) -> Seq(0.0, 0.0, 0.0, 4.0, 4.0, 4.0),
+        ("inputevents", 1L, 300L) -> Seq(1.0, 1.0, 1.0, 2.0, 2.0, 2.0),
+        ("outputevents", 2L, 400L) -> Seq(10.0, 10.0, 10.0, 10.0, 2.0),
+        ("procedureevents", 1L, 500L) -> Seq(3.0, 3.0, 3.0, 3.0, 3.0, 3.0)),
+      LinearInterp -> Map(
+        ("chartevents", 1L, 100L) -> Seq(m, 4.333333333333333, 5.0, 5.0, 5.0, 5.0),
+        ("chartevents", 1L, 200L) -> Seq(0.0, 0.0, 0.0, 4.0, 4.0, 4.0),
+        ("inputevents", 1L, 300L) -> Seq(1.0, 1.0, 1.0, 2.0, 2.0, 2.0),
+        ("outputevents", 2L, 400L) -> Seq(10.0, 8.0, 6.0, 4.0, 2.0),
+        ("procedureevents", 1L, 500L) -> Seq(3.0, 3.0, 3.0, 3.0, 3.0, 3.0)))
+    for ((mode, want) <- expected) {
+      val agg = new EventsAggregator(spark, root.toString, root.resolve("unused").toString,
+        fillMode = Some(mode))
+      val got = Sources.all.flatMap { src =>
+        val df = agg.aggregate(src)
+        val rows = df.collect()
+        // the executed (final AQE) plan: no Window operator of any kind,
+        // and the walk does reach the densify Generate
+        val executed = df.queryExecution.executedPlan
+        val windows = plans.collect(executed) {
+          case p if p.nodeName.contains("Window") => p.nodeName
+        }
+        assert(windows.isEmpty, s"$mode/${src.name}: $windows in\n$executed")
+        assert(plans.collect(executed) { case g: GenerateExec => g }.nonEmpty,
+          s"$mode/${src.name}: no Generate in\n$executed")
+        rows.groupBy(r => (src.name, r.getLong(0), r.getLong(1))).map {
+          case (k, rs) =>
+            val byT = rs.map(r => r.getLong(2) -> r.getDouble(3)).sortBy(_._1)
+            assert(byT.map(_._1).toSeq == byT.indices.map(_.toLong), s"$mode $k tidx")
+            k -> byT.map(_._2).toSeq
+        }
+      }.toMap
+      assert(got == want, s"$mode")
+    }
+  }
 }

@@ -1867,6 +1867,31 @@ class OpsSpec extends AnyFunSuite {
       sigs.getLong(3) == 0L)
   }
 
+  test("WhtSigs kernel: a frame holding a null sample signs 0") {
+    import graft.ops.Multimodal
+    def walsh(r: Int, i: Int) = if (Integer.bitCount(r & i) % 2 == 0) 1 else -1
+    val fa = (0 until 64).map(i =>
+      (1 to 16).map(r => (if (r % 3 == 0) -1 else 1) * 100 * walsh(r, i)).sum
+        .toLong)
+    val expSig = Multimodal.whtFrameSig(fa.toArray)
+    // frame 1 reads 0 where the null sits: the kernel must not transform
+    // that frame (its signature would be non-zero)
+    val withZero = fa ++ fa.updated(5, 0L)
+    assert(Multimodal.whtFrameSig(withZero.drop(64).toArray) != 0L)
+    val samples: Seq[Option[Long]] =
+      fa.map(Some(_)) ++ fa.map(Some(_)).updated(5, None)
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    val direct = graft.functions.WhtSigsKernel.compute(
+      new GenericArrayData(
+        samples.map(_.map(java.lang.Long.valueOf).orNull).toArray[Any]), 2)
+    assert(direct.getLong(0) == expSig && direct.getLong(1) == 0L)
+    // and through the codegen'd column
+    val viaCol = Seq(Tuple1(samples)).toDF("s")
+      .select(graft.functions.GraftFunctions.wht_sigs(col("s"), 2))
+      .head().getSeq[Long](0)
+    assert(viaCol == Seq(expSig, 0L))
+  }
+
   test("k-core: cascade peel, bounded-round over-approximation, degrees") {
     import graft.ops.Graph
     // triangle {1,2,3} with a tail 3-4-5: k=2 peels 5, then 4 (cascade);

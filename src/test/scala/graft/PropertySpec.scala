@@ -112,6 +112,88 @@ object PropertySpec extends Properties("graft.stages") {
         .count() == 0
     }
 
+  /** One sparse series for the densify kernel: `total_windows` (0 and a
+    * negative value included), cells at distinct `tidx` — some with a
+    * null value, some outside `0..total_windows`, often one at 0 and one
+    * at `total_windows`, and a single cell in about a quarter of them.
+    */
+  private val genSeries: Gen[(Long, List[(Long, Option[Double])])] = for {
+    tw <- Gen.frequency(2 -> Gen.const(0L), 1 -> Gen.const(-1L),
+      10 -> Gen.choose(1L, 40L))
+    k <- Gen.frequency(2 -> Gen.const(1), 6 -> Gen.choose(0, 12))
+    atZero <- Gen.oneOf(true, false)
+    atEnd <- Gen.oneOf(true, false)
+    picks <- Gen.listOfN(k, Gen.choose(-3L, tw + 3))
+    vals <- Gen.listOfN(k + 2, Gen.frequency(
+      1 -> Gen.const(None),
+      3 -> Gen.choose(-1000000L, 1000000L).map(x => Some(x / 1000.0)),
+      1 -> Gen.choose(-1e9, 1e9).map(Some(_))))
+  } yield {
+    val ts = (Option.when(atZero)(0L) ++ Option.when(atEnd)(tw) ++ picks)
+      .toList.distinct
+    (tw, ts.zip(vals))
+  }
+
+  /** Brute-force reindex + fill, read off the former window formulation:
+    * the value at t is the cell's (a null value or no cell is a gap), the
+    * previous / next observation is the last / first non-gap at or
+    * before / after t, and interpolation uses the same double op order.
+    */
+  private def denseRef(cells: List[(Long, Option[Double])], tw: Long,
+      mode: Int): Seq[Double] = {
+    import graft.functions.DensifyFillKernel.{Forward, Zero}
+    val at = cells.toMap
+    val col = (0L to tw).map(t => at.getOrElse(t, None))
+    col.indices.map { t =>
+      val prev = (0 to t).reverse.find(col(_).isDefined)
+      val next = (t until col.size).find(col(_).isDefined)
+      if (mode == Zero) col(t).getOrElse(0.0)
+      else if (mode == Forward) prev.fold(0.0)(col(_).get)
+      else (col(t), prev, next) match {
+        case (Some(v), _, _) => v
+        case (None, None, _) => 0.0
+        case (None, Some(p), None) => col(p).get
+        case (None, Some(p), Some(q)) =>
+          val (pv, nv) = (col(p).get, col(q).get)
+          pv + (nv - pv) * (t - p).toLong.toDouble / (q - p).toLong.toDouble
+      }
+    }
+  }
+
+  private def cellArray(cells: Seq[(Long, Option[Double])]) =
+    new org.apache.spark.sql.catalyst.util.GenericArrayData(cells.map {
+      case (t, v) => org.apache.spark.sql.catalyst.InternalRow(t, v.map(Double.box).orNull)
+    }.toArray[Any])
+
+  property("densify kernel equals a brute-force reindex + fill, every mode") =
+    forAll(Gen.listOfN(300, genSeries)) { series =>
+      import graft.functions.DensifyFillKernel.{Forward, Interp, Zero, compute}
+      val bad = for {
+        (tw, cells) <- series
+        mode <- Seq(Zero, Forward, Interp)
+        got = compute(cellArray(cells), tw, mode).toDoubleArray().toSeq
+        // exact: == on doubles, no tolerance
+        if got != denseRef(cells, tw, mode)
+      } yield s"tw=$tw mode=$mode cells=$cells got=$got"
+      bad.isEmpty :| bad.headOption.getOrElse("")
+    }
+
+  property("densify: a duplicate tidx in one series raises") = {
+    import spark.implicits._
+    import scala.util.Try
+    import graft.functions.DensifyFillKernel
+    def raises(body: => Any): Boolean = Try(body).failed.toOption
+      .exists(e => String.valueOf(e.getMessage).contains("duplicate tidx"))
+    // straight on the kernel, the second cell's value null
+    val direct = raises(DensifyFillKernel.compute(
+      cellArray(Seq(2L -> Some(1.0), 2L -> None)), 4L, DensifyFillKernel.Zero))
+    // and through the stage, in every fill mode
+    val dup = Seq((1L, 7L, 2L, 1.0, 4L), (1L, 7L, 2L, 3.0, 4L))
+      .toDF("stay_id", "feature_id", "tidx", "value", "total_windows")
+    direct && Seq(Stages.ZeroFill, Stages.ForwardFill, Stages.LinearInterp)
+      .forall(m => raises(Stages.densify(dup, m).collect()))
+  }
+
   property("clamp: tidx in [0, total_windows]; only post-outtime dropped") =
     forAll(genStays.flatMap(st => genPointEvents(st).map(ev => (st, ev)))) {
       case (stays, events) =>
