@@ -66,9 +66,13 @@ class EventsAggregator(
     }
 
   /** Long-form `(stay_id, feature_id, tidx, value)` densified series for one
-    * source — the engine's canonical output; `run()` writes it as matrices.
+    * source — the engine's canonical output (the CSV sink writes it unexploded).
     */
-  def aggregate(source: EventSource): DataFrame = {
+  def aggregate(source: EventSource): DataFrame =
+    Stages.densify(combined(source), fill)
+
+  /** One source's combined cells `(stay_id, feature_id, tidx, value, total_windows)`. */
+  private def combined(source: EventSource): DataFrame = {
     val raw = readCsv(source.fileName, source.schema)
     val keyed0 = raw
       .withColumn("feature_id", source.featureExpr.cast("long"))
@@ -91,9 +95,8 @@ class EventsAggregator(
           .select("stay_id", "event_epoch_time", "feature_id", "value")
     }
 
-    val bucketized = Stages.bucketize(pointed, stayIndex, timestepSeconds)
-    val combined = Stages.combine(bucketized, source.combiner)
-    Stages.densify(combined, fill)
+    Stages.combine(Stages.bucketize(pointed, stayIndex, timestepSeconds),
+      source.combiner)
   }
 
   /** Run all sources: write matrices + dummy files + manifest (K1-K3).
@@ -113,8 +116,8 @@ class EventsAggregator(
     // output trees) — submit them from parallel threads so one source's
     // sink/scan phases overlap another's compute; Spark schedules
     // concurrent jobs from multiple threads natively. The stay dimension is
-    // materialized ONCE up front (persist + count): every pipeline reuses
-    // it several times (bucketize join, sink join, dummy anti-join), which
+    // materialized ONCE up front (persist + count): every pipeline reads it
+    // in its bucketize join and again for the CSV sink's header rows, which
     // would otherwise rescan icustays.csv per use.
     stayIndex.persist().count()
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
@@ -126,7 +129,8 @@ class EventsAggregator(
     import scala.util.{Failure, Try}
     val writeOne: EventSource => Unit = sink match {
       case graft.io.CsvMatrixSink => source =>
-        MatrixWriter.write(aggregate(source), stayIndex, dstPath, source.name)
+        MatrixWriter.writeSeries(Stages.densifySeries(combined(source), fill),
+          stayIndex, dstPath, source.name)
       case graft.io.LongParquetSink => source =>
         MatrixWriter.writeLongForm(aggregate(source), dstPath, source.name)
     }

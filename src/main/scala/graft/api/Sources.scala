@@ -1,5 +1,6 @@
 package graft.api
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.model._
 import graft.schemas.MimicSchemas
@@ -11,9 +12,15 @@ import graft.schemas.MimicSchemas
   */
 object Sources {
 
+  /** `c` as a double with NaN read as missing (null), so `avg`/`sum` skip
+    * it the way pandas' `skipna` does in the reference's combine.
+    */
+  private def number(c: Column): Column =
+    nanvl(c.cast("double"), lit(null).cast("double"))
+
   /** chartevents: point events, MEAN-combined, value = `valuenum`
-    * (`__init__.py:228-262`). Null `valuenum` rows are skipped by `avg`,
-    * matching pandas skipna.
+    * (`__init__.py:228-262`). Null and NaN `valuenum` rows are skipped by
+    * `avg`, matching pandas skipna.
     */
   val chartevents: EventSource = EventSource(
     name = "chartevents",
@@ -21,14 +28,15 @@ object Sources {
     schema = MimicSchemas.chartevents,
     timeSpec = PointTime("charttime"),
     featureExpr = col("itemid").cast("long"),
-    valueExpr = col("valuenum").cast("double"),
+    valueExpr = number(col("valuenum")),
     combiner = MeanCombine)
 
   /** inputevents: interval events, SUM-combined, weight-normalized dose
     * `amount / patientweight` (`__init__.py:265-341`). Note the divergence
     * documented in SURVEY.md §2.8 F6: pandas emits ±inf on zero weight,
-    * Spark's Divide emits null (the row then contributes nothing to the sum).
-    * We keep Spark's null — real MIMIC weights are > 0.
+    * here `try_divide` emits null, so the row contributes nothing to the sum
+    * (a bare `/` would abort the whole run with `DIVIDE_BY_ZERO` under ANSI
+    * mode). Real MIMIC weights are > 0.
     */
   val inputevents: EventSource = EventSource(
     name = "inputevents",
@@ -36,7 +44,8 @@ object Sources {
     schema = MimicSchemas.inputevents,
     timeSpec = IntervalTime("starttime", "endtime"),
     featureExpr = col("itemid").cast("long"),
-    valueExpr = col("amount").cast("double") / col("patientweight").cast("double"),
+    valueExpr = number(try_divide(col("amount").cast("double"),
+      col("patientweight").cast("double"))),
     combiner = SumCombine)
 
   /** outputevents: point events, SUM-combined, value = `float(value)`
@@ -48,7 +57,7 @@ object Sources {
     schema = MimicSchemas.outputevents,
     timeSpec = PointTime("charttime"),
     featureExpr = col("itemid").cast("long"),
-    valueExpr = col("value").cast("double"),
+    valueExpr = number(col("value")),
     combiner = SumCombine)
 
   /** procedureevents: interval events, SUM-combined (`__init__.py:380-457` —
@@ -61,7 +70,7 @@ object Sources {
     schema = MimicSchemas.procedureevents,
     timeSpec = IntervalTime("starttime", "endtime"),
     featureExpr = col("itemid").cast("long"),
-    valueExpr = col("value").cast("double"),
+    valueExpr = number(col("value")),
     combiner = SumCombine)
 
   val all: Seq[EventSource] = Seq(chartevents, inputevents, outputevents, procedureevents)

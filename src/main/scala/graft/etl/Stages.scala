@@ -106,22 +106,9 @@ object Stages {
       .agg(combiner.agg(col("value")).as("value"),
         first("total_windows").as("total_windows"))
 
-  /** Densify the time axis: for every observed (stay, feature) pair emit one
-    * row per `tidx ∈ 0..total_windows`, filling gaps per [[FillMode]].
-    * Reference `reindex(0..tidx_max)` + `fillna` (`__init__.py:124-136`).
-    *
-    * One hash aggregation collects each pair's `(tidx, value)` cells; the
-    * compiled [[graft.functions.DensifyFill]] kernel turns them into the
-    * dense, filled series in O(total_windows + cells), and `posexplode`
-    * returns it to long form — no spine join, no Window. A cell whose
-    * combined value is null (e.g. the mean of an all-null window) is a gap
-    * in every mode, the same as a window with no cell.
-    *
-    * The kernel allocates `total_windows + 1` doubles per series, and
-    * nothing here bounds `total_windows`: a stay with a corrupt `outtime`
-    * makes one huge series (capping windows per stay is ROADMAP D3).
-    *
-    * Input/output: long form `(stay_id, feature_id, tidx, value)`.
+  /** [[densifySeries]] `posexplode`d back to the long form
+    * `(stay_id, feature_id, tidx, value)`: one row per `tidx ∈
+    * 0..total_windows` for every observed (stay, feature) pair.
     */
   def densify(combined: DataFrame, ffill: Boolean): DataFrame =
     densify(combined, if (ffill) ForwardFill else ZeroFill)
@@ -140,14 +127,35 @@ object Stages {
   case object LinearInterp extends FillMode { val name = "interp" }
 
   def densify(combined: DataFrame, mode: FillMode): DataFrame =
+    densifySeries(combined, mode)
+      .select(col("stay_id"), col("feature_id"), posexplode(col("series")))
+      .select(col("stay_id"), col("feature_id"), col("pos").cast("long").as("tidx"),
+        col("col").as("value"))
+
+  /** Densify the time axis, gaps filled per [[FillMode]] — the reference's
+    * `reindex(0..tidx_max)` + `fillna` (`__init__.py:124-136`). Input: the
+    * combined long form; output: one row per observed (stay, feature) pair,
+    * `(stay_id, feature_id, total_windows, series)` with `series(t)` the
+    * value at `tidx = t ∈ 0..total_windows`.
+    *
+    * One hash aggregation collects each pair's `(tidx, value)` cells; the
+    * compiled [[graft.functions.DensifyFill]] kernel turns them into the
+    * dense, filled series in O(total_windows + cells) — no spine join, no
+    * Window. A cell whose combined value is null (e.g. the mean of an
+    * all-null window) is a gap in every mode, the same as a window with no
+    * cell.
+    *
+    * The kernel allocates `total_windows + 1` doubles per series, and
+    * nothing here bounds `total_windows`: a stay with a corrupt `outtime`
+    * makes one huge series (capping windows per stay is ROADMAP D3).
+    */
+  def densifySeries(combined: DataFrame, mode: FillMode): DataFrame =
     combined
       .groupBy("stay_id", "feature_id")
       .agg(collect_list(struct(col("tidx"), col("value"))).as("cells"),
         first("total_windows").as("total_windows"))
-      .select(col("stay_id"), col("feature_id"),
-        posexplode(densify_fill(col("cells"), col("total_windows"), mode.name)))
-      .select(col("stay_id"), col("feature_id"), col("pos").cast("long").as("tidx"),
-        col("col").as("value"))
+      .select(col("stay_id"), col("feature_id"), col("total_windows"),
+        densify_fill(col("cells"), col("total_windows"), mode.name).as("series"))
 
   /** Membership filter with the reference's ½-selectivity rewrite
     * (`__init__.py:180-193`, disabled there — enabled and pushed down here):

@@ -39,12 +39,15 @@ case object LongParquetSink extends SinkMode
   * `feature_id`, cells = combined value with 0.0 fill. A requested stay with
   * no events still gets a header-only file (`__init__.py:218-225`).
   *
-  * Spark-first shape: the matrix rows are built as data (one CSV line per
-  * (stay, feature) via `collect_list` + `array_join` — all codegen'd), then
-  * `repartition($"stay_id")` so one task owns all of a stay's rows and
-  * `foreachPartition` streams them to exact-named files. No global pivot —
-  * width is a per-stay function, so a single wide schema cannot exist
-  * (SURVEY.md §1.3) — and no driver-side loop over facts.
+  * Spark-first shape ([[writeSeries]]): each densify-kernel series becomes
+  * one CSV line as data (`concat_ws` + `array_join`, codegen'd), one header
+  * row per `stayIdx` stay is unioned in, and ONE job writes both:
+  * `repartition($"stay_id")` gives a stay's rows to one task, the sort puts
+  * its header first, and `foreachPartition` opens the file at the header and
+  * streams the lines after it. An eventless stay has a header row and no
+  * lines, so K2's header-only file needs no anti-join and no second job. No
+  * global pivot — width is a per-stay function, so a single wide schema
+  * cannot exist (SURVEY.md §1.3) — and only executor tasks touch the facts.
   *
   * `dstPath` may carry any supported scheme: remote schemes (hdfs://,
   * s3a://, ...) write through the Hadoop `FileSystem` resolved from the
@@ -96,51 +99,55 @@ object MatrixWriter {
           fs.create(new Path(fullPath), true), StandardCharsets.UTF_8))
     }
 
+  /** Long-form adapter over [[writeSeries]]: regroups `(stay_id,
+    * feature_id, tidx, value)` rows into one `tidx`-ordered series per
+    * (stay, feature). Rows of stays missing from `stayIdx` are not written.
+    */
   def write(densified: DataFrame, stayIdx: DataFrame, dstPath: String,
-      sourceName: String): Unit = {
-    val spark = densified.sparkSession
-    val hconf =
-      new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
-    // persisted: consumed twice (file write + produced-stay anti-join for
-    // dummies) — without this the WHOLE upstream pipeline re-executes for
-    // the dummy pass. One compact row per (stay, feature).
-    val lines = densified
-      .groupBy("stay_id", "feature_id")
-      .agg(array_sort(collect_list(struct(col("tidx"), col("value")))).as("cells"))
-      .select(col("stay_id"), col("feature_id"),
-        concat_ws(",", col("feature_id").cast("string"),
-          array_join(transform(col("cells"), c => c.getField("value").cast("string")), ","))
-          .as("line"))
-      .join(broadcast(stayIdx.select("stay_id", "total_windows")), Seq("stay_id"))
-      .persist()
+      sourceName: String): Unit =
+    writeSeries(
+      densified.groupBy("stay_id", "feature_id")
+        .agg(array_sort(collect_list(struct(col("tidx"), col("value"))))
+          .getField("value").as("series")),
+      stayIdx, dstPath, sourceName)
 
-    lines
+  /** One matrix line per `(stay_id, feature_id, series: array<double>)` row
+    * and one header per `stayIdx` (`stay_id`, `total_windows`) stay. */
+  def writeSeries(series: DataFrame, stayIdx: DataFrame, dstPath: String,
+      sourceName: String): Unit = {
+    val hconf = new SerializableHadoopConf(
+      series.sparkSession.sparkContext.hadoopConfiguration)
+    // kind 0 = header row, 1 = matrix line: a null feature_id is a real
+    // (unparseable-itemid) line, so it cannot mark the header
+    val lines = series
+      .select(col("stay_id"), lit(1).as("kind"), col("feature_id"),
+        concat_ws(",", col("feature_id").cast("string"),
+          array_join(col("series").cast("array<string>"), ",")).as("line"))
+    stayIdx.select(col("stay_id"), lit(0).as("kind"), col("total_windows"))
+      .unionByName(lines, allowMissingColumns = true)
       .repartition(col("stay_id"))
-      .sortWithinPartitions("stay_id", "feature_id")
-      .select("stay_id", "total_windows", "line")
+      .sortWithinPartitions("stay_id", "kind", "feature_id")
       .foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>
-        var currentStay = Long.MinValue
+        var openStay = Long.MinValue
         var out: BufferedWriter = null
         def close(): Unit = if (out != null) { out.close(); out = null }
         try {
           rows.foreach { r =>
             val stay = r.getLong(0)
-            if (stay != currentStay) {
+            if (r.getInt(1) == 0) {
               close()
-              currentStay = stay
+              openStay = stay
               out = openWriter(hconf.value,
                 s"$dstPath/$stay/${sourceName}_features.csv")
-              out.write(header(r.getLong(1)))
+              out.write(header(r.getLong(2)))
+              out.newLine()
+            } else if (out != null && stay == openStay) {
+              out.write(r.getString(4))
               out.newLine()
             }
-            out.write(r.getString(2))
-            out.newLine()
           }
         } finally close()
       }
-
-    writeDummies(lines, stayIdx, dstPath, sourceName)
-    lines.unpersist()
   }
 
   /** Long-form partitioned-parquet sink — the >100k-stays alternative to
@@ -174,30 +181,6 @@ object MatrixWriter {
 
   private def header(totalWindows: Long): String =
     (0L to totalWindows).mkString("feature_id,", ",", "")
-
-  /** K2: header-only matrices for requested stays that produced no rows —
-    * a metadata-only anti-join over the stay dimension; facts are never
-    * collected. The header writes run in `foreachPartition` on the
-    * EXECUTORS, not a driver loop: at 10⁶ missing stays a driver-serial
-    * loop is 10⁶ sequential remote-FS round-trips, while here each task
-    * streams its partition's headers in parallel (same per-file bytes,
-    * same filenames — byte-identical output).
-    */
-  private def writeDummies(produced: DataFrame, stayIdx: DataFrame,
-      dstPath: String, sourceName: String): Unit = {
-    val hconf = new SerializableHadoopConf(
-      stayIdx.sparkSession.sparkContext.hadoopConfiguration)
-    stayIdx.select("stay_id", "total_windows")
-      .join(produced.select("stay_id").distinct(), Seq("stay_id"), "left_anti")
-      .foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>
-        rows.foreach { r =>
-          val out = openWriter(hconf.value,
-            s"$dstPath/${r.getLong(0)}/${sourceName}_features.csv")
-          try { out.write(header(r.getLong(1))); out.newLine() }
-          finally out.close()
-        }
-      }
-  }
 
   /** K3: run manifest, mirroring `/root/reference/src/mimic2ts/__main__.py:83-91`
     * plus the RESOLVED fill policy (the raw `ffill` flag alone misreports

@@ -99,7 +99,8 @@ object StreamingAggregator {
       }
 
   /** Fold the partial store and write the per-stay matrices through the
-    * batch engine's own sink ([[graft.io.MatrixWriter]]) — a consumer
+    * batch run's own CSV path ([[graft.etl.Stages.densifySeries]] +
+    * [[graft.io.MatrixWriter.writeSeries]]) — a consumer
     * cannot tell whether a matrix came from the batch or the streaming
     * path. `stayIndex` needs (stay_id, intime, total_windows).
     */
@@ -109,7 +110,7 @@ object StreamingAggregator {
     val combined = finalizeView(spark.read.parquet(storePath), combiner)
       .join(broadcast(stayIndex.select("stay_id", "total_windows")),
         Seq("stay_id"), "inner")
-    val dense = graft.etl.Stages.densify(combined, fill)
-    graft.io.MatrixWriter.write(dense, stayIndex, dstPath, sourceName)
+    graft.io.MatrixWriter.writeSeries(graft.etl.Stages.densifySeries(combined, fill),
+      stayIndex, dstPath, sourceName)
   }
 }

@@ -1,6 +1,7 @@
 package graft
 
-import java.nio.file.{Files, Path}
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Path, StandardOpenOption}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.SparkSession
@@ -13,7 +14,8 @@ import graft.api.{EventsAggregator, Sources}
   * pre-intime clamp, post-outtime drop, boundary event at exactly
   * `total_windows`, null valuenum, zero-length interval, non-grid-aligned
   * interval, multi-event window (mean vs sum), stay with no events for a
-  * source (dummy file), ffill leading gap.
+  * source (dummy file), ffill leading gap; on fixture variants, a NaN
+  * valuenum, a zero patientweight and an unparseable itemid.
   */
 class EngineSpec extends AnyFunSuite {
 
@@ -99,6 +101,15 @@ class EngineSpec extends AnyFunSuite {
 
   private def readCsvLines(p: Path): Seq[String] =
     Files.readAllLines(p).asScala.toSeq
+
+  /** A fresh copy of the fixtures with `extra` (file, row) pairs appended. */
+  private def fixturesWith(extra: (String, String)*): Path = {
+    val root = Files.createTempDirectory("graft-mimic-x")
+    writeFixtures(root)
+    for ((file, row) <- extra)
+      Files.write(root.resolve(s"icu/$file"), Seq(row).asJava, StandardOpenOption.APPEND)
+    root
+  }
 
   lazy val outDir: Path = {
     val root = Files.createTempDirectory("graft-mimic")
@@ -357,5 +368,62 @@ class EngineSpec extends AnyFunSuite {
       }.toMap
       assert(got == want, s"$mode")
     }
+  }
+
+  test("CSV sink: run() writes the bytes MatrixWriter.write(aggregate) writes, every fill mode") {
+    import graft.etl.Stages.{ForwardFill, LinearInterp, ZeroFill}
+    // an unparseable itemid is a null feature_id: still written, sorted first
+    val root = fixturesWith("chartevents.csv" ->
+      "2,20,2,2020-01-01 01:10:00,2020-01-01 01:11:00,x,2,2.0,bpm,0")
+    def tree(dir: Path): Map[String, String] =
+      Files.walk(dir).iterator.asScala
+        .filter(p => p.getFileName.toString.endsWith("_features.csv"))
+        .map(p => dir.relativize(p).toString ->
+          new String(Files.readAllBytes(p), StandardCharsets.UTF_8))
+        .toMap
+    for (mode <- Seq(ZeroFill, ForwardFill, LinearInterp)) {
+      val viaRun = Files.createTempDirectory("graft-out-run")
+      val viaWrite = Files.createTempDirectory("graft-out-write")
+      new EventsAggregator(spark, root.toString, viaRun.toString,
+        fillMode = Some(mode)).run()
+      val agg = new EventsAggregator(spark, root.toString, viaWrite.toString,
+        fillMode = Some(mode))
+      Sources.all.foreach(src => graft.io.MatrixWriter.write(
+        agg.aggregate(src), agg.stayIndex, viaWrite.toString, src.name))
+      val got = tree(viaRun)
+      assert(got.size == 12, s"$mode: ${got.keySet}") // 3 stays × 4 sources
+      // stay 2: chartevents holds only the null-feature line; inputevents
+      // is header-only although outputevents has events
+      assert(got("2/chartevents_features.csv").linesIterator.size == 2, s"$mode")
+      assert(got("2/inputevents_features.csv") == "feature_id,0,1,2,3,4\n", s"$mode")
+      assert(got == tree(viaWrite), s"$mode")
+    }
+  }
+
+  test("inputevents: a zero patientweight row adds nothing and aborts nothing") {
+    // same interval and item as the fixture's first stay-1 dose, weight 0
+    val root = fixturesWith("inputevents.csv" ->
+      ("1,10,1,2020-01-01 00:30:00,2020-01-01 02:30:00,2020-01-01 00:31:00,300," +
+        "6.0,mL,3.0,mL/hour,3,3,Fluids,,Main,Continuous,0.0,100,mL,0,0,0,FinishedRunning,6.0,3.0"))
+    val dst = Files.createTempDirectory("graft-out-w0")
+    new EventsAggregator(spark, root.toString, dst.toString,
+      sources = Seq(Sources.inputevents)).run()
+    val r300 = readCsvLines(dst.resolve("1/inputevents_features.csv"))(1)
+      .split(",").drop(1).map(_.toDouble)
+    assert(r300.toSeq == Seq(1.0, 1.0, 1.0, 2.0, 0.0, 0.0))
+  }
+
+  test("chartevents: a NaN valuenum is missing, as pandas skipna") {
+    val root = fixturesWith(
+      "chartevents.csv" -> "2,20,2,2020-01-01 00:10:00,2020-01-01 00:11:00,100,1,1.0,bpm,0",
+      "chartevents.csv" -> "2,20,2,2020-01-01 00:20:00,2020-01-01 00:21:00,100,NaN,NaN,bpm,0",
+      "chartevents.csv" -> "2,20,2,2020-01-01 01:20:00,2020-01-01 01:21:00,100,NaN,NaN,bpm,0")
+    val dst = Files.createTempDirectory("graft-out-nan")
+    new EventsAggregator(spark, root.toString, dst.toString,
+      sources = Seq(Sources.chartevents)).run()
+    val r100 = readCsvLines(dst.resolve("2/chartevents_features.csv"))(1)
+      .split(",").drop(1).map(_.toDouble)
+    // w0 = mean {1.0, NaN} = 1.0; w1's NaN-only window is a gap → 0.0
+    assert(r100.toSeq == Seq(1.0, 0.0, 0.0, 0.0, 0.0))
   }
 }
