@@ -543,16 +543,16 @@ object Bench {
     // driver-tail contract (r17, VERDICT r16 item 2): the full line above
     // is ~15 KB at 314 gates and the driver keeps only a ~2 KB stdout
     // tail, so its parser has read `parsed: null` since round 1. Print a
-    // SECOND, tail-sized summary line LAST — same schema, same `value`,
-    // `queries` restricted to the heaviest gates so the line stays under
-    // ~1.5 KB — and keep the full line (stdout AND the benchOut file)
-    // untouched: nothing is removed or renamed, the summary is an
-    // addition sized to survive the tail.
+    // SECOND, tail-sized summary line LAST — same `metric`/`value`; its
+    // per-gate map holds only the 36 heaviest gates, so it is keyed
+    // `queries_top` (next to `n`, the full gate count) and the line stays
+    // under ~1.5 KB. The full line (stdout AND the benchOut file) keeps
+    // `queries` whole; that artifact is what the tools/ readers parse.
     val topQs = results.sortBy { case (n, s) => (-s, n) }.take(36)
       .map { case (k, v) => f""""$k":$v%.3f""" }
       .mkString("{", ",", "}")
     println(
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$topQs,"n":${results.size},"failed":$failedJson,$hostJson,"sf":"$sfDir"$shardJson,"full":"$benchOut"}""")
+      s"""{"metric":"total","value":$total,"unit":"sec","queries_top":$topQs,"n":${results.size},"failed":$failedJson,$hostJson,"sf":"$sfDir"$shardJson,"full":"$benchOut"}""")
     spark.stop()
     if (failed.nonEmpty) sys.exit(1)
   }

@@ -12,11 +12,13 @@ import graft.schemas.MimicSchemas
   */
 object Sources {
 
-  /** `c` as a double with NaN read as missing (null), so `avg`/`sum` skip
-    * it the way pandas' `skipna` does in the reference's combine.
+  /** `c` as a double with NaN and non-numeric text read as missing (null),
+    * so `avg`/`sum` skip it the way pandas' `skipna` does in the
+    * reference's combine. `try_cast`: under ANSI mode a plain `cast` of
+    * one non-numeric string aborts the whole run with `CAST_INVALID_INPUT`.
     */
   private def number(c: Column): Column =
-    nanvl(c.cast("double"), lit(null).cast("double"))
+    nanvl(c.try_cast("double"), lit(null).cast("double"))
 
   /** chartevents: point events, MEAN-combined, value = `valuenum`
     * (`__init__.py:228-262`). Null and NaN `valuenum` rows are skipped by

@@ -88,47 +88,12 @@ object TopKAgg {
       ExpressionEncoder[Seq[LongEntry]]()
   }
 
-  /** (sort key asc, tag asc) — string-tagged entries (terms, labels)
-    * where the tag is both the payload and the tiebreak.
-    */
-  final case class TaggedEntry(key: Long, tag: String)
-
-  final class TaggedTopK(k: Int)
-      extends Aggregator[TaggedEntry, ArrayBuffer[TaggedEntry], Seq[TaggedEntry]] {
-    require(k >= 1, "k must be positive")
-    private val trimAt = math.max(4 * k, 64)
-    private implicit val ord: Ordering[TaggedEntry] =
-      Ordering.by((e: TaggedEntry) => (e.key, e.tag))
-
-    override def zero: ArrayBuffer[TaggedEntry] = ArrayBuffer.empty
-    override def reduce(b: ArrayBuffer[TaggedEntry],
-        e: TaggedEntry): ArrayBuffer[TaggedEntry] =
-      trimmed(b += e, k, trimAt)
-    override def merge(a: ArrayBuffer[TaggedEntry],
-        b: ArrayBuffer[TaggedEntry]): ArrayBuffer[TaggedEntry] =
-      trimmed(a ++= b, k, trimAt)
-    override def finish(b: ArrayBuffer[TaggedEntry]): Seq[TaggedEntry] =
-      b.sorted.take(k).toSeq
-    override def bufferEncoder: Encoder[ArrayBuffer[TaggedEntry]] =
-      ExpressionEncoder[ArrayBuffer[TaggedEntry]]()
-    override def outputEncoder: Encoder[Seq[TaggedEntry]] =
-      ExpressionEncoder[Seq[TaggedEntry]]()
-  }
-
   /** `smallest_k(k)(key, id, value)` → `array<struct<key,id,value>>` of the
     * k smallest (key, id) entries, ascending — posexplode for 1-based ranks.
     */
   def smallest_k(k: Int): (Column, Column, Column) => Column = {
     val fn = udaf(new DoubleTopK(k), Encoders.product[Entry])
     (key, id, value) => fn(key, id, value)
-  }
-
-  /** `smallest_k_tagged(k)(key, tag)` → `array<struct<key,tag>>`, the k
-    * smallest (key, tag) — negate a count for descending heavy-hitters.
-    */
-  def smallest_k_tagged(k: Int): (Column, Column) => Column = {
-    val fn = udaf(new TaggedTopK(k), Encoders.product[TaggedEntry])
-    (key, tag) => fn(key, tag)
   }
 
   /** `smallest_k_long(k)(key, id)` → `array<struct<key,id>>`, k smallest. */

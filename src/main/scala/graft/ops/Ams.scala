@@ -72,48 +72,6 @@ object Ams {
         .as(Seq("seed", "z")): _*)
   }
 
-  /** Scalar twin of the Column-side digest-bit signs — the streaming
-    * tracker folds occurrences with the SAME md5 bits, so stream and
-    * batch hold identical Z sums (parity by construction). Adds key's d
-    * signs into `z` IN PLACE.
-    */
-  /** Per-thread MD5 instance for the streaming hot paths — `getInstance`
-    * + a fresh digest object per RECORD is pure allocation churn inside
-    * a per-event fold; `reset()` via `digest()` makes reuse safe.
-    */
-  private[graft] val threadMd5 =
-    new ThreadLocal[java.security.MessageDigest] {
-      override def initialValue(): java.security.MessageDigest =
-        java.security.MessageDigest.getInstance("MD5")
-    }
-
-  private[graft] def foldSigns(z: Array[Long], key: String,
-      d: Int): Unit = {
-    val dig = threadMd5.get().digest(key.getBytes("UTF-8"))
-    var e = 0
-    while (e < d) {
-      // hex nibble e/4 (high nibble first within each byte), bit e%4 —
-      // identical to substring(md5hex, e/4+1, 1) >> (e%4) & 1
-      val b = dig(e / 8) & 0xff
-      val nib = if (e % 8 < 4) b >>> 4 else b & 0xf
-      z(e) += 1L - 2L * ((nib >>> (e % 4)) & 1)
-      e += 1
-    }
-  }
-
-  /** Scalar twin of [[f2Estimate]]'s fold: integer block means over s1,
-    * exact middle element of the s2 sorted means.
-    */
-  private[graft] def estimateOf(z: Array[Long], s1: Int, s2: Int): Long = {
-    val means = (0 until s2).map { g =>
-      var t = 0L
-      var e = g * s1
-      while (e < (g + 1) * s1) { t += z(e) * z(e); e += 1 }
-      t / s1
-    }.sorted
-    means(s2 / 2)
-  }
-
   /** Median over s2 blocks of the mean over s1 squared sums (both
     * integer: block mean is `Σ Z² div s1`, median is the exact middle
     * element of the s2 sorted block means — s2 odd keeps it rank-exact).

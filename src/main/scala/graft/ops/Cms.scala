@@ -49,15 +49,6 @@ object Cms {
     (base * lit(2L * i + 1)).bitwiseXOR(lit(i * Phi))
       .bitwiseAND(lit((w - 1).toLong))
 
-  /** The d bucket positions of a key as one array column — shared with
-    * the streaming tracker ([[graft.streaming.StreamingCms]]) so stream
-    * and batch address the identical counters. */
-  def bucketsOf(key: Column, d: Int, w: Int): Column = {
-    checkParams(d, w)
-    val b = base52(key)
-    array((0 until d).map(bucketOf(b, _, w).cast("int")): _*)
-  }
-
   private def checkParams(d: Int, w: Int): Unit = {
     require(d >= 1 && d <= 8, "d in [1, 8] — base52 * 15 must stay in a long")
     require(w >= 2 && (w & (w - 1)) == 0, "w must be a power of two (bit mask)")

@@ -1101,41 +1101,6 @@ object Dedup {
     containmentPairsScoped(docs, idCol, textCol, k, minContainPpm,
       dfCap).df
 
-  /** Scalar 64-bit token SimHash of an already-normalized token list —
-    * the IDENTICAL math as [[graft.functions.SigAggregators.simhash_combine]]
-    * (md5-hex nibbles, per-bit majority with ties → 0, bit j lives in
-    * band j/16 at position j%16), packaged for row-local callers: the
-    * streaming trackers hash each segment statelessly with this core so
-    * stream and batch signatures agree bit-for-bit (the
-    * `Multimodal.hashImage` discipline). Parity with the aggregator is
-    * pinned by spec.
-    */
-  private[graft] def simhashOf(tokens: Seq[String]): Long = {
-    val sums = new Array[Int](64)
-    var n = 0
-    tokens.foreach { tk =>
-      val hx = java.security.MessageDigest.getInstance("MD5")
-        .digest(tk.getBytes("UTF-8")).take(8)
-        .map("%02x".format(_)).mkString
-      var p = 0
-      while (p < 16) {
-        val c = hx.charAt(p)
-        val nib = if (c <= '9') c - '0' else c - 'a' + 10
-        var b = 0
-        while (b < 4) { sums(4 * p + b) += (nib >>> b) & 1; b += 1 }
-        p += 1
-      }
-      n += 1
-    }
-    var sig = 0L
-    var j = 0
-    while (j < 64) {
-      if (2 * sums(j) > n) sig |= 1L << j
-      j += 1
-    }
-    sig
-  }
-
   /** Cross-doc NEAR-dup segment detection — the fuzzy complement of
     * [[segmentDedup]] (which only collapses byte-identical segments): the
     * boilerplate that varies by a date, a counter, or one templated token
@@ -1374,20 +1339,15 @@ object Dedup {
     * text, so chunk equality never rides a birthday-prone 64-bit value.
     */
   def contentChunks(docs: DataFrame, idCol: String, textCol: String,
-      k: Int = 8, mask: Int = 63, keep: Seq[String] = Nil): DataFrame = {
+      k: Int = 8, mask: Int = 63): DataFrame = {
     require(k >= 2, "need k >= 2")
     require(mask >= 1 && (mask & (mask + 1)) == 0,
       "mask must be 2^b - 1 (the boundary test is h mod (mask+1) == 0)")
-    // `keep`: extra input columns carried through unchanged (the
-    // streaming tracker threads event_time this way)
-    val kc = keep.map(col)
     val base = docs
-      .select(col(idCol).as("doc_id") +:
-        TextOps.normalize(col(textCol)).as("nm") +: kc: _*)
-      .select(col("doc_id") +: col("nm") +:
-        codepoints(col("nm")).as("cps") +: kc: _*)
-      .select(col("doc_id") +: col("nm") +:
-        kgramHashes(col("cps"), k).as("ghs") +: kc: _*)
+      .select(col(idCol).as("doc_id"),
+        TextOps.normalize(col(textCol)).as("nm"))
+      .select(col("doc_id"), col("nm"), codepoints(col("nm")).as("cps"))
+      .select(col("doc_id"), col("nm"), kgramHashes(col("cps"), k).as("ghs"))
     val nm = col("nm")
     val len = length(nm)
     // candidate boundary positions: the k-gram ENDING at i (i in k..L) —
@@ -1407,17 +1367,16 @@ object Dedup {
       struct((idx - 1).as("chunk_idx"), (prev + 1).as("start"),
         (cur - prev).as("len"))
     })
-    base.select(col("doc_id") +: nm +: b2.as("b2") +: kc: _*)
-      .select(col("doc_id") +: nm +: explode(chunks).as("c") +: kc: _*)
+    base.select(col("doc_id"), nm, b2.as("b2"))
+      .select(col("doc_id"), nm, explode(chunks).as("c"))
       // an empty-normalized doc keeps its single zero-length chunk — it
       // must survive the store round-trip (and the oracle's per-doc
       // row), not silently vanish
       .where(col("c.len") > 0 || length(nm) === 0)
-      .select(col("doc_id") +: col("c.chunk_idx").as("chunk_idx") +:
-        col("c.start").as("start") +: col("c.len").as("len") +:
-        nm.substr(col("c.start"), col("c.len")).as("chunk") +:
-        md5(nm.substr(col("c.start"), col("c.len"))).as("chunk_fp") +:
-        kc: _*)
+      .select(col("doc_id"), col("c.chunk_idx").as("chunk_idx"),
+        col("c.start").as("start"), col("c.len").as("len"),
+        nm.substr(col("c.start"), col("c.len")).as("chunk"),
+        md5(nm.substr(col("c.start"), col("c.len"))).as("chunk_fp"))
   }
 
   /** Per-document storage-dedup report over [[contentChunks]] output:

@@ -39,14 +39,15 @@ import org.apache.spark.sql.functions._
   * regardless of key cardinality — then an m-bounded per-group fold.
   * No distinct shuffle of the raw key domain. State is m small ints per
   * group FOREVER, mergeable by register-wise max (union of sketches =
-  * sketch of the union), which is what the streaming tracker keys on.
+  * sketch of the union), which is what the persisted serving path
+  * ([[mergeRegisters]]) keys on.
   */
 object Hll {
 
   /** Register count m = 2^p, rank width r = 52 − p, max rank S = r + 1. */
   def m(p: Int): Int = 1 << p
 
-  /** Precision guard shared by every HLL entry point (batch + streaming).
+  /** Precision guard shared by every HLL entry point.
     * Upper bound is 9, NOT 12: the integer estimate's numerator is
     * m²·2^S = 2^(p+53), which fits a signed Long only for p ≤ 9 — at
     * p = 10 it wraps to Long.MinValue and at 11/12 to 0, silently
@@ -95,8 +96,9 @@ object Hll {
   }
 
   /** Scalar estimate off a full register array (index j ⇒ registers(j),
-    * 0 = empty) — shared with [[graft.streaming.StreamingHll]] so stream
-    * and batch report the identical number for identical inputs.
+    * 0 = empty) — the scalar reference for the columnar chain
+    * [[estimateFromRegisters]]: identical registers give the identical
+    * number.
     */
   def estimateOf(registers: Array[Int], p: Int): Long = {
     requireP(p)

@@ -451,9 +451,9 @@ object Multimodal {
     * image; the downstream near-dup join works on the hashes alone.
     */
   /** Decode one payload and pool it into (width, height, aHash, dHash) —
-    * the shared executor-side core of [[perceptualHash]] and the
-    * streaming visual-dedup tracker. None = quarantine (unreadable, no
-    * registered codec, or past the product-overflow pixel envelope).
+    * the executor-side core of [[perceptualHash]]. None = quarantine
+    * (unreadable, no registered codec, or past the product-overflow
+    * pixel envelope).
     */
   private[graft] def hashImage(
       payload: Array[Byte]): Option[(Int, Int, Long, Long)] = {
@@ -916,9 +916,9 @@ object Multimodal {
     * seam ([[wavWhtFp]]) is pure Column algebra; the decoder touches each
     * payload once per partition iterator, like [[decodeWav]].
     */
-  /** Shared PCM16LE extraction (the single decode truth for [[wavSamples]]
-    * and the streaming audio tracker): first `maxN` samples zero-padded to
-    * `maxN`; None for undecodable / non-PCM16LE payloads.
+  /** PCM16LE extraction (the single decode truth for [[wavSamples]]):
+    * first `maxN` samples zero-padded to `maxN`; None for undecodable /
+    * non-PCM16LE payloads.
     */
   private[graft] def decodePcm16le(payload: Array[Byte],
       maxN: Int): Option[Array[Long]] = {
@@ -960,8 +960,9 @@ object Multimodal {
 
   /** Driver/executor-side replica of one frame's WHT sign signature —
     * the SAME butterfly order and sign pin (> 0) as the [[wavWhtFp]]
-    * staged columns, in plain integer Scala: the streaming tracker hashes
-    * with this and a spec asserts batch parity bit-for-bit.
+    * staged columns, in plain integer Scala: [[graft.functions.WhtSigsKernel]]
+    * hashes each frame with this, and a spec asserts parity with the
+    * staged columns bit-for-bit.
     */
   private[graft] def whtFrameSig(frame: Array[Long]): Long = {
     require(frame.length == 64, "frame must be 64 samples")

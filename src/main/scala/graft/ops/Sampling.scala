@@ -193,26 +193,6 @@ object Sampling {
     *
     * Returns (idCol, weightCol, prio, tau, w_hat), the k kept rows.
     */
-  /** Scalar twin of the priority formula — the streaming tracker draws
-    * the SAME md5-40bit uniform and integer priority as the batch gate,
-    * so stream and batch rank identically (parity by construction).
-    * Enforces the same w ∈ [0, 2²²] envelope, loudly.
-    */
-  private[graft] def prioOf(id: String, w: Long): Long = {
-    require(w >= 0 && w <= (1L << 22),
-      s"prioritySample: weight outside [0, 2^22] envelope: $w")
-    val dig = Ams.threadMd5.get().digest(id.getBytes("UTF-8"))
-    var h = 0L
-    var i = 0
-    while (i < 10) { // first 10 hex nibbles = first 5 bytes
-      val b = dig(i / 2) & 0xff
-      val nib = if (i % 2 == 0) b >>> 4 else b & 0xf
-      h = (h << 4) | nib
-      i += 1
-    }
-    w * (1L << 40) / (h + 1)
-  }
-
   def prioritySample(df: org.apache.spark.sql.DataFrame, idCol: String,
       weightCol: String, k: Int): org.apache.spark.sql.DataFrame = {
     require(k >= 1, s"k must be positive, got $k")

@@ -15,7 +15,8 @@ import graft.api.{EventsAggregator, Sources}
   * `total_windows`, null valuenum, zero-length interval, non-grid-aligned
   * interval, multi-event window (mean vs sum), stay with no events for a
   * source (dummy file), ffill leading gap; on fixture variants, a NaN
-  * valuenum, a zero patientweight and an unparseable itemid.
+  * valuenum, a zero patientweight, a non-numeric outputevents value and
+  * an unparseable itemid.
   */
 class EngineSpec extends AnyFunSuite {
 
@@ -425,5 +426,17 @@ class EngineSpec extends AnyFunSuite {
       .split(",").drop(1).map(_.toDouble)
     // w0 = mean {1.0, NaN} = 1.0; w1's NaN-only window is a gap → 0.0
     assert(r100.toSeq == Seq(1.0, 0.0, 0.0, 0.0, 0.0))
+  }
+
+  test("outputevents: a non-numeric value adds nothing and aborts nothing") {
+    // same stay, item and window as the fixture's 5.5 + 4.5 = 10.0 pair
+    val root = fixturesWith("outputevents.csv" ->
+      "2,20,2,2020-01-01 00:30:00,2020-01-01 00:31:00,400,abc,mL")
+    val dst = Files.createTempDirectory("graft-out-nonnum")
+    new EventsAggregator(spark, root.toString, dst.toString,
+      sources = Seq(Sources.outputevents)).run()
+    val r400 = readCsvLines(dst.resolve("2/outputevents_features.csv"))(1)
+      .split(",").drop(1).map(_.toDouble)
+    assert(r400.toSeq == Seq(10.0, 0.0, 0.0, 0.0, 2.0))
   }
 }

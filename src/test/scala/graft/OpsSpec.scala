@@ -3680,20 +3680,6 @@ class OpsSpec extends AnyFunSuite {
     assert(Dedup.jaccardPairs(d, "doc_id", "text", 3, 0.8).count() == 0L)
   }
 
-  test("simhashOf: scalar core matches the batch aggregator bit-for-bit") {
-    import graft.ops.Dedup
-    val texts = Seq((1L, "The quick brown fox"),
-      (2L, "lorem ipsum dolor sit amet"), (3L, "x"),
-      (4L, "sign up for our weekly newsletter and get the best stories"))
-    val d = texts.toDF("doc_id", "text")
-    val batch = Dedup.simhashSignatures(d, "doc_id", "text").collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    texts.foreach { case (id, t) =>
-      val toks = t.toLowerCase.trim.split("\\s+").toSeq
-      assert(Dedup.simhashOf(toks) == batch(id), s"doc $id")
-    }
-  }
-
   test("segmentNearDup: variant boilerplate surfaces, exact dups collapse") {
     import graft.ops.Dedup
     val bpA = "sign up for our weekly newsletter and get the best " +

@@ -23,297 +23,6 @@ class StreamingSpec extends AnyFunSuite {
 
   private def ts(s: String): Timestamp = Timestamp.valueOf(s)
 
-  test("stateful sessionizer closes sessions on gap and on watermark timeout") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.{SessionEvent, StreamingSessionizer}
-    val source = MemoryStream[SessionEvent]
-    val sessions = StreamingSessionizer.sessionize(
-      source.toDS(), gapSeconds = 1800, watermarkDelay = "0 seconds")
-    val q = sessions.writeStream.outputMode("append")
-      .format("memory").queryName("sessions_out").start()
-    try {
-      // batch 1: user 1 has two events 10 min apart (one session), then a
-      // 2-hour gap to a third event -> first session closes mid-batch
-      source.addData(
-        SessionEvent(1L, ts("2020-01-01 00:00:00"), 1.0),
-        SessionEvent(1L, ts("2020-01-01 00:10:00"), 2.0),
-        SessionEvent(1L, ts("2020-01-01 02:10:00"), 4.0))
-      q.processAllAvailable()
-      // batch 2: far-future event for user 2 advances the watermark past
-      // user 1's open session + gap -> timeout closes it
-      source.addData(SessionEvent(2L, ts("2020-01-02 00:00:00"), 8.0))
-      q.processAllAvailable()
-      source.addData(SessionEvent(2L, ts("2020-01-03 00:00:00"), 16.0))
-      q.processAllAvailable()
-
-      val got = spark.table("sessions_out")
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(3), r.getDouble(4))).toSet
-      // user 1: session {1.0, 2.0} closed by gap; session {4.0} by timeout
-      assert(got.contains((1L, 2L, 3.0)))
-      assert(got.contains((1L, 1L, 4.0)))
-      // user 2's first event closed by the day-3 watermark advance
-      assert(got.contains((2L, 1L, 8.0)))
-    } finally q.stop()
-  }
-
-  test("streaming funnel advances stages in order, ignores out-of-order stages") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.StreamingFunnel
-    val source = MemoryStream[(Long, String, Timestamp)]
-    val out = StreamingFunnel.track(
-      source.toDF().toDF("user_id", "event_type", "event_time"),
-      horizonSeconds = 86400, watermarkDelay = "0 seconds")
-    val q = out.writeStream.outputMode("append")
-      .format("memory").queryName("funnel_out").start()
-    try {
-      // user 1 walks view→click in batch 1; user 2's click precedes any
-      // view → ignored (the batch gate's t >= t0 join drops it too)
-      source.addData(
-        (1L, "view", ts("2020-01-01 00:00:00")),
-        (1L, "click", ts("2020-01-01 00:01:00")),
-        (1L, "view", ts("2020-01-01 00:01:10")), // repeat stage → ignored
-        (2L, "click", ts("2020-01-01 00:00:10")))
-      q.processAllAvailable()
-      // batch 2: user 1 purchases (CROSS-batch advance with exact delay);
-      // user 2 views (restarts nothing — first stage), then purchases
-      // while still awaiting click → ignored
-      source.addData(
-        (1L, "purchase", ts("2020-01-01 00:03:00")),
-        (2L, "view", ts("2020-01-01 00:02:00")),
-        (2L, "purchase", ts("2020-01-01 00:02:30")))
-      q.processAllAvailable()
-      val got = spark.table("funnel_out").collect()
-        .map(r => (r.getLong(0), r.getInt(1), r.getString(2),
-          r.getLong(4))).toSet
-      val expected = Set(
-        (1L, 1, "view", 0L),
-        (1L, 2, "click", 60L),
-        (1L, 3, "purchase", 120L), // 00:03:00 − 00:01:00
-        (2L, 1, "view", 0L))
-      assert(got == expected, s"got $got")
-    } finally q.stop()
-  }
-
-  test("streaming burst detector evaluates closed hours against trailing rate") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.StreamingBursts
-    // hours 0..6: one event each (the quiet baseline); hour 7: a 10-event
-    // spike; batch 2's hour-8 event CLOSES hour 7 and must fire the alert.
-    // Hours 1..6 close with either trail_n < 6 or cnt below 3x — no alert.
-    val baseline = (0 to 6).map(h =>
-      ("api", ts(f"2020-01-01 $h%02d:15:00")))
-    val spike = (0 until 10).map(m =>
-      ("api", ts(f"2020-01-01 07:${m * 5}%02d:00")))
-    val b2 = Seq(("api", ts("2020-01-01 08:01:00")))
-    val source = MemoryStream[(String, Timestamp)]
-    val out = StreamingBursts.detect(
-      source.toDF().toDF("event_type", "event_time"),
-      horizonSeconds = 86400, watermarkDelay = "0 seconds")
-    val q = out.writeStream.outputMode("append")
-      .format("memory").queryName("burst_out").start()
-    try {
-      source.addData(baseline ++ spike: _*); q.processAllAvailable()
-      val afterB1 = spark.table("burst_out").count()
-      assert(afterB1 == 0, s"no hour with >=6h evidence bursts in batch 1")
-      source.addData(b2: _*); q.processAllAvailable()
-      val got = spark.table("burst_out").collect()
-        .map(r => (r.getString(0), r.getLong(1), r.getLong(2),
-          r.getLong(3), r.getLong(4))).toSet
-      // hour 7 = epoch hour 438295 + 7? No: epoch hours for 2020-01-01 are
-      // absolute — recompute from the timestamp itself for robustness
-      val hr7 = ts("2020-01-01 07:00:00").getTime / 1000 / 3600
-      assert(got == Set(("api", hr7, 10L, 7L, 7L)), s"got $got")
-    } finally q.stop()
-  }
-
-  test("streaming change points match the batch lag filter across batches") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.StreamingChangePoints
-    val b1 = Seq(
-      (1L, "hr", ts("2020-01-01 00:00:00"), 1.0),
-      (1L, "hr", ts("2020-01-01 00:01:00"), 1.0), // repeat → dropped
-      (1L, "hr", ts("2020-01-01 00:02:00"), 2.0), // change → kept
-      (2L, "hr", ts("2020-01-01 00:00:30"), 2.0)) // other stream head → kept
-    // batch 2: head repeats stream 1's remembered last (2.0) → the
-    // CROSS-batch suppression the state exists for; then a change; plus a
-    // brand-new (user, type) stream whose head always emits
-    val b2 = Seq(
-      (1L, "hr", ts("2020-01-01 00:03:00"), 2.0),
-      (1L, "hr", ts("2020-01-01 00:04:00"), 3.0),
-      (1L, "spo2", ts("2020-01-01 00:04:30"), 3.0))
-    val source = MemoryStream[(Long, String, Timestamp, Double)]
-    val out = StreamingChangePoints.compress(
-      source.toDF().toDF("user_id", "event_type", "event_time", "value"),
-      horizonSeconds = 86400, watermarkDelay = "0 seconds")
-    val q = out.writeStream.outputMode("append")
-      .format("memory").queryName("cp_out").start()
-    try {
-      source.addData(b1: _*); q.processAllAvailable()
-      source.addData(b2: _*); q.processAllAvailable()
-      val got = spark.table("cp_out").collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getLong(2),
-          r.getDouble(3))).toSet
-      // ground truth: the BATCH lag filter over the concatenated input —
-      // the q_ts_dedup_consecutive plan itself
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("user_id", "event_type")
-        .orderBy("event_time")
-      val expected = (b1 ++ b2)
-        .toDF("user_id", "event_type", "event_time", "value")
-        .withColumn("prev", lag(col("value"), 1).over(w))
-        .where(col("prev").isNull || col("value") =!= col("prev"))
-        .select(col("user_id"), col("event_type"),
-          (col("event_time").cast("long")).as("ts_epoch"), col("value"))
-        .collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getLong(2),
-          r.getDouble(3))).toSet
-      assert(got == expected, s"stream $got vs batch $expected")
-      assert(got.size == 5) // 7 in, 2 suppressed (1 in-batch, 1 cross-batch)
-    } finally q.stop()
-  }
-
-  test("streaming dedup keeps first-seen per fingerprint, re-admits after horizon") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.StreamingDedup
-    case class Doc(doc_id: Long, event_time: Timestamp, text: String)
-    val source = MemoryStream[(Long, Timestamp, String)]
-    val kept = StreamingDedup.firstSeen(
-      source.toDF().toDF("doc_id", "event_time", "text"),
-      horizonSeconds = 3600, watermarkDelay = "0 seconds")
-    val q = kept.writeStream.outputMode("append")
-      .format("memory").queryName("dedup_out").start()
-    try {
-      // batch 1: two copies of A (case/whitespace variants → same
-      // fingerprint) + one B → keep the earliest A (id 2) and B
-      source.addData(
-        (5L, ts("2020-01-01 00:10:00"), "Hello  World"),
-        (2L, ts("2020-01-01 00:05:00"), "hello world"),
-        (3L, ts("2020-01-01 00:06:00"), "something else"))
-      q.processAllAvailable()
-      // batch 2: another A inside the horizon → dropped
-      source.addData((7L, ts("2020-01-01 00:30:00"), "HELLO WORLD"))
-      q.processAllAvailable()
-      // advance the watermark past lastSeen(00:30) + 1h, expiring A's state
-      source.addData((8L, ts("2020-01-01 02:00:00"), "unrelated new doc"))
-      q.processAllAvailable()
-      source.addData((9L, ts("2020-01-01 03:00:00"), "another unrelated"))
-      q.processAllAvailable()
-      // batch 5: A returns AFTER the horizon → re-admitted
-      source.addData((11L, ts("2020-01-01 03:10:00"), "hello world"))
-      q.processAllAvailable()
-      source.addData((12L, ts("2020-01-02 00:00:00"), "watermark pusher"))
-      q.processAllAvailable()
-
-      val keptIds = spark.table("dedup_out")
-        .collect().map(_.getLong(0)).toSet
-      assert(keptIds.contains(2L) && !keptIds.contains(5L) && !keptIds.contains(7L),
-        s"first-seen A must win: $keptIds")
-      assert(keptIds.contains(3L) && keptIds.contains(8L) && keptIds.contains(9L))
-      assert(keptIds.contains(11L), s"post-horizon duplicate must re-admit: $keptIds")
-    } finally q.stop()
-  }
-
-  test("streaming segment dedup: batch parity in arrival order, horizon re-admit") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.StreamingSegmentDedup
-    val source = MemoryStream[(Long, Timestamp, String)]
-    val kept = StreamingSegmentDedup.keptSegments(
-      source.toDF().toDF("doc_id", "event_time", "text"),
-      sep = "\n", horizonSeconds = 3600, watermarkDelay = "0 seconds")
-    val q = kept.writeStream.outputMode("append")
-      .format("memory").queryName("segdedup_out").start()
-    try {
-      // batch 1: nav repeats across docs 1/2 AND within doc 2
-      source.addData(
-        (1L, ts("2020-01-01 00:01:00"), "nav\nalpha one\nfoot"),
-        (2L, ts("2020-01-01 00:02:00"), "nav\nbeta two\nnav"))
-      q.processAllAvailable()
-      // batch 2: doc 3 re-sights foot and nav inside the horizon
-      source.addData((3L, ts("2020-01-01 00:03:00"), "gamma three\nfoot\nnav"))
-      q.processAllAvailable()
-      // advance watermark past lastSeen(nav)=00:03 + 1h, expiring state
-      source.addData((8L, ts("2020-01-01 02:00:00"), "unrelated text here"))
-      q.processAllAvailable()
-      source.addData((9L, ts("2020-01-01 03:00:00"), "more unrelated"))
-      q.processAllAvailable()
-      // nav returns AFTER the horizon -> re-admitted
-      source.addData((11L, ts("2020-01-01 03:10:00"), "nav"))
-      q.processAllAvailable()
-      source.addData((12L, ts("2020-01-02 00:00:00"), "watermark pusher"))
-      q.processAllAvailable()
-
-      val got = spark.table("segdedup_out").collect()
-        .map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSet
-      // batch parity: arrival order == id order, so first-seen-wins must
-      // reproduce the batch operator's (min doc, min pos) canonical set
-      val batchDocs = Seq(
-        (1L, "nav\nalpha one\nfoot"), (2L, "nav\nbeta two\nnav"),
-        (3L, "gamma three\nfoot\nnav")).toDF("doc_id", "text")
-      val clean = graft.ops.Dedup.segmentDedup(batchDocs, "doc_id", "text")
-        .collect().map(r => r.getLong(0) -> r.getString(6)).toMap
-      val stitched = got.filter(_._1 <= 3L).groupBy(_._1)
-        .view.mapValues(s => s.toSeq.sortBy(_._2).map(_._3).mkString("\n"))
-        .toMap
-      Seq(1L, 2L, 3L).foreach { id =>
-        assert(stitched.getOrElse(id, "") == clean(id),
-          s"doc $id: ${stitched.get(id)} vs batch ${clean(id)}")
-      }
-      assert(got.contains((11L, 0, "nav")),
-        s"post-horizon segment must re-admit: $got")
-      assert(!got.exists(k => k._1 == 3L && k._3 == "nav"))
-    } finally q.stop()
-  }
-
-  test("streaming chunk dedup: batch fp parity, cross-batch no re-emit") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.StreamingChunkDedup
-    val para = "the quarterly report shows steady growth across " +
-      "all regions with particular strength in the northern market " * 4
-    val source = MemoryStream[(Long, Timestamp, String)]
-    val fresh = StreamingChunkDedup.newChunks(
-      source.toDF().toDF("doc_id", "event_time", "text"),
-      horizonSeconds = 3600, watermarkDelay = "0 seconds")
-    val q = fresh.writeStream.outputMode("append")
-      .format("memory").queryName("chunkdedup_out").start()
-    try {
-      // batch 1: two docs sharing the paragraph at different offsets
-      source.addData(
-        (1L, ts("2020-01-01 00:01:00"), s"intro for doc one $para"),
-        (2L, ts("2020-01-01 00:02:00"),
-          s"a different opening line here $para"))
-      q.processAllAvailable()
-      // batch 2: a re-crawl (doc 1's exact text) inside the horizon —
-      // EVERY chunk is already stored, zero new payloads
-      val afterB1 = spark.table("chunkdedup_out").count()
-      source.addData((3L, ts("2020-01-01 00:10:00"),
-        s"intro for doc one $para"))
-      q.processAllAvailable()
-      assert(spark.table("chunkdedup_out").count() == afterB1,
-        "an unchanged re-crawl must emit no new chunk payloads")
-      // batch 3: an edited head — only the touched chunk(s) are new
-      source.addData((4L, ts("2020-01-01 00:20:00"),
-        s"intro for doc one EDITED $para"))
-      q.processAllAvailable()
-      val got = spark.table("chunkdedup_out").collect()
-        .map(r => (r.getString(0), r.getString(1))).toSet
-      // parity: the emitted distinct-fp set == the batch chunker's
-      // distinct fps over everything that arrived
-      val batchDocs = Seq(
-        (1L, s"intro for doc one $para"),
-        (2L, s"a different opening line here $para"),
-        (3L, s"intro for doc one $para"),
-        (4L, s"intro for doc one EDITED $para")).toDF("doc_id", "text")
-      val want = graft.ops.Dedup.contentChunks(batchDocs, "doc_id", "text")
-        .select("chunk_fp", "chunk").collect()
-        .map(r => (r.getString(0), r.getString(1))).toSet
-      assert(got == want, s"stream fps ${got.size} vs batch ${want.size}")
-      // each fingerprint emitted exactly once
-      val all = spark.table("chunkdedup_out").collect().map(_.getString(0))
-      assert(all.length == all.distinct.length)
-    } finally q.stop()
-  }
-
   test("foreachBatch matrix sink produces byte-identical files to the batch sink") {
     implicit val sqlCtx = spark.sqlContext
     import java.nio.file.Files
@@ -407,935 +116,6 @@ class StreamingSpec extends AnyFunSuite {
       assert(streamed.contains((1L, 7L, 0L, 14.0 / 3)))
       assert(streamed.contains((1L, 7L, 1L, 6.0)))
       assert(!streamed.exists(_._3 > 5L)) // post-stay dropped
-    } finally q.stop()
-  }
-
-  test("streaming window clusters match the batch clustering per closed window") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.StreamingClusters
-    val out = java.nio.file.Files.createTempDirectory("sc_out").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("sc_ckpt").toString
-    val source = MemoryStream[(Long, Timestamp, String)]
-    val closed = StreamingClusters.windowedDocSets(
-      source.toDF().toDF("doc_id", "event_time", "text"),
-      windowDuration = "1 hour", watermarkDelay = "0 seconds")
-    // threshold 0.5 so the fox-sentence variants chain into one cluster
-    val q = StreamingClusters.sink(closed, out, ckpt,
-      k = 3, nHashes = 64, bands = 32, threshold = 0.5).start()
-    try {
-      // window [00:00, 01:00): docs 0/1/3 are near-dup variants (the
-      // OpsSpec fixture — 0~1, 0~3, 1~3 at j >= 5/9), 2 unrelated, 4 has
-      // no 3-shingles at all (must still label itself)
-      source.addData(
-        (0L, ts("2020-01-01 00:05:00"), "the quick brown fox jumps over the lazy dog"),
-        (1L, ts("2020-01-01 00:10:00"), "the quick brown fox jumps over the lazy cat"),
-        (2L, ts("2020-01-01 00:15:00"), "completely different words entirely unrelated text here"),
-        (3L, ts("2020-01-01 00:20:00"), "THE  Quick   Brown fox jumps over the lazy dog"),
-        (4L, ts("2020-01-01 00:25:00"), "tiny"))
-      q.processAllAvailable()
-      // window [01:00, 02:00) arrivals ALSO close window 0 (watermark 0)
-      source.addData(
-        (10L, ts("2020-01-01 01:10:00"), "the quick brown fox jumps over the lazy dog"),
-        (11L, ts("2020-01-01 01:15:00"), "the quick brown fox jumps over the lazy cat"),
-        (12L, ts("2020-01-01 01:20:00"), "nothing like the others at all in any way"))
-      q.processAllAvailable()
-      // pusher closes window 1
-      source.addData((99L, ts("2020-01-01 03:00:00"), "watermark pusher"))
-      q.processAllAvailable()
-
-      // window_start is now the partition column (idempotent dynamic-
-      // overwrite sink) — select by name, not position
-      val outDf = spark.read.parquet(out)
-      assert(outDf.select("converged").distinct().collect()
-        .map(_.getBoolean(0)).toSeq == Seq(true))
-      val got = outDf
-        .select("window_start", "doc_id", "cluster_id")
-        .collect()
-        .map(r => (r.getTimestamp(0).toString, r.getLong(1), r.getLong(2)))
-        .toSet
-      val w0 = "2020-01-01 00:00:00.0"
-      val w1 = "2020-01-01 01:00:00.0"
-      assert(got == Set(
-        (w0, 0L, 0L), (w0, 1L, 0L), (w0, 3L, 0L), // transitive chain → min id
-        (w0, 2L, 2L), (w0, 4L, 4L),               // singletons label themselves
-        (w1, 10L, 10L), (w1, 11L, 10L),           // same text, NEW window → new cluster
-        (w1, 12L, 12L)))
-
-      // parity: the batch operator on window 0's slice produces the same labels
-      val w0docs = Seq(
-        (0L, "the quick brown fox jumps over the lazy dog"),
-        (1L, "the quick brown fox jumps over the lazy cat"),
-        (2L, "completely different words entirely unrelated text here"),
-        (3L, "THE  Quick   Brown fox jumps over the lazy dog"),
-        (4L, "tiny")).toDF("doc_id", "text")
-      val batchPairs = graft.ops.Dedup.minhashLshPairs(
-        w0docs, "doc_id", "text", 3, 64, 32, 0.5)
-      val batchLabels = graft.ops.Dedup.components(batchPairs, 20)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val streamedW0 = got.filter(_._1 == w0)
-        .map { case (_, d, c) => d -> c }.toMap
-      assert(batchLabels.forall { case (d, c) => streamedW0(d) == c },
-        s"streamed window-0 labels $streamedW0 must cover batch $batchLabels")
-
-      // replay idempotency: re-writing window 0's rows the way a failed
-      // micro-batch replay would (same dynamic-overwrite writer) must leave
-      // the dataset unchanged — a blind append would double the window
-      val before = spark.read.parquet(out).count()
-      spark.read.parquet(out)
-        .where(col("window_start") === lit(ts("2020-01-01 00:00:00")))
-        .select("doc_id", "cluster_id", "converged", "window_start")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("window_start")
-        .parquet(out)
-      assert(spark.read.parquet(out).count() == before)
-    } finally q.stop()
-  }
-
-  test("streaming label propagation matches the batch operator per closed window") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.StreamingLabelProp
-    val out = java.nio.file.Files.createTempDirectory("slp_out").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("slp_ckpt").toString
-    val source = MemoryStream[(Long, Long, Timestamp)]
-    val closed = StreamingLabelProp.windowedEdgeSets(
-      source.toDF().toDF("a", "b", "event_time"),
-      windowDuration = "1 hour", watermarkDelay = "0 seconds")
-    val q = StreamingLabelProp.sink(closed, out, ckpt, iters = 4).start()
-    try {
-      // window 0: triangle {1,2,3} (converges to all-1 by round 2: the
-      // smallest-label tie rule) + pair {10,11} (synchronous LPA 2-cycles
-      // on bipartite structure; 4 fixed rounds land it back on identity)
-      source.addData(
-        (1L, 2L, ts("2020-01-01 00:05:00")),
-        (2L, 3L, ts("2020-01-01 00:10:00")),
-        (1L, 3L, ts("2020-01-01 00:15:00")),
-        (10L, 11L, ts("2020-01-01 00:20:00")))
-      q.processAllAvailable()
-      // window 1 arrival closes window 0 (watermark 0); single edge
-      source.addData((5L, 6L, ts("2020-01-01 01:10:00")))
-      q.processAllAvailable()
-      // pusher closes window 1
-      source.addData((98L, 99L, ts("2020-01-01 03:00:00")))
-      q.processAllAvailable()
-
-      val got = spark.read.parquet(out)
-        .select("window_start", "node", "label")
-        .collect()
-        .map(r => (r.getTimestamp(0).toString, r.getLong(1), r.getLong(2)))
-        .toSet
-      val w0 = "2020-01-01 00:00:00.0"
-      val w1 = "2020-01-01 01:00:00.0"
-      assert(got == Set(
-        (w0, 1L, 1L), (w0, 2L, 1L), (w0, 3L, 1L), // triangle community
-        (w0, 10L, 10L), (w0, 11L, 11L),           // 2-cycle back to ids
-        (w1, 5L, 5L), (w1, 6L, 6L)))
-
-      // parity: the batch operator on window 0's slice, byte-identical
-      val w0edges = Seq((1L, 2L), (2L, 3L), (1L, 3L), (10L, 11L))
-        .toDF("a", "b")
-      val w0nodes = Seq(1L, 2L, 3L, 10L, 11L).toDF("node")
-      val batch = graft.ops.Graph.labelPropagation(w0edges, w0nodes, 4)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val streamedW0 = got.filter(_._1 == w0)
-        .map { case (_, n, l) => n -> l }.toMap
-      assert(streamedW0 == batch,
-        s"streamed window-0 labels $streamedW0 != batch $batch")
-
-      // replay idempotency: the dynamic-overwrite writer re-running a
-      // window leaves the dataset unchanged
-      val before = spark.read.parquet(out).count()
-      spark.read.parquet(out)
-        .where(col("window_start") === lit(ts("2020-01-01 00:00:00")))
-        .select("node", "label", "window_start")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("window_start")
-        .parquet(out)
-      assert(spark.read.parquet(out).count() == before)
-    } finally q.stop()
-  }
-
-  test("streaming LPA over the LSH pair stream matches batch pairs->LPA per window") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.{StreamingClusters, StreamingLabelProp}
-    val out = java.nio.file.Files.createTempDirectory("slpl_out").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("slpl_ckpt").toString
-    val source = MemoryStream[(Long, Timestamp, String)]
-    val closed = StreamingClusters.windowedDocSets(
-      source.toDF().toDF("doc_id", "event_time", "text"),
-      windowDuration = "1 hour", watermarkDelay = "0 seconds")
-    val q = StreamingLabelProp.lshSink(closed, out, ckpt,
-      k = 3, nHashes = 64, bands = 32, threshold = 0.5, iters = 4).start()
-    try {
-      // the StreamingClusters fixture: docs 0/1/3 near-dup (pair triangle
-      // at threshold 0.5), 2 unrelated, 4 shingle-less
-      source.addData(
-        (0L, ts("2020-01-01 00:05:00"), "the quick brown fox jumps over the lazy dog"),
-        (1L, ts("2020-01-01 00:10:00"), "the quick brown fox jumps over the lazy cat"),
-        (2L, ts("2020-01-01 00:15:00"), "completely different words entirely unrelated text here"),
-        (3L, ts("2020-01-01 00:20:00"), "THE  Quick   Brown fox jumps over the lazy dog"))
-      q.processAllAvailable()
-      source.addData((99L, ts("2020-01-01 03:00:00"), "watermark pusher"))
-      q.processAllAvailable()
-
-      val got = spark.read.parquet(out)
-        .where(col("window_start") === lit(ts("2020-01-01 00:00:00")))
-        .select("doc_id", "label")
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      // LPA on the 0-1-3 pair triangle converges to the smallest id by
-      // round 2; pairless docs label themselves
-      assert(got == Map(0L -> 0L, 1L -> 0L, 3L -> 0L, 2L -> 2L),
-        s"got $got")
-
-      // parity: batch pairs -> batch LPA on the same slice
-      val w0docs = Seq(
-        (0L, "the quick brown fox jumps over the lazy dog"),
-        (1L, "the quick brown fox jumps over the lazy cat"),
-        (2L, "completely different words entirely unrelated text here"),
-        (3L, "THE  Quick   Brown fox jumps over the lazy dog"))
-        .toDF("doc_id", "text")
-      val pairs = graft.ops.Dedup.minhashLshPairs(
-        w0docs, "doc_id", "text", 3, 64, 32, 0.5)
-      val nodes = pairs.select(col("doc_a").as("node"))
-        .unionAll(pairs.select(col("doc_b").as("node"))).distinct()
-      val batch = graft.ops.Graph.labelPropagation(
-          pairs.select(col("doc_a").as("a"), col("doc_b").as("b")),
-          nodes, 4)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(batch.forall { case (n, l) => got(n) == l },
-        s"streamed $got must cover batch $batch")
-    } finally q.stop()
-  }
-
-  test("streaming trending terms match the batch top-k per closed window") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.StreamingTrends
-    val out = java.nio.file.Files.createTempDirectory("st_out").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("st_ckpt").toString
-    val source = MemoryStream[(Timestamp, String)]
-    val counts = StreamingTrends.windowedTermCounts(
-      source.toDF().toDF("event_time", "text"),
-      windowDuration = "1 hour", watermarkDelay = "0 seconds")
-    val q = StreamingTrends.sink(counts, out, k = 2, ckpt).start()
-    try {
-      // window 0: "spam" floods (5×), "ham" 3×, "rare" once
-      source.addData(
-        (ts("2020-01-01 00:05:00"), "spam spam spam ham"),
-        (ts("2020-01-01 00:10:00"), "spam SPAM ham"),
-        (ts("2020-01-01 00:20:00"), "ham rare"))
-      q.processAllAvailable()
-      // window 1 arrivals close window 0; tie between tied/knot broken
-      // lexicographically at rank 2
-      source.addData(
-        (ts("2020-01-01 01:10:00"), "burst burst tied knot"),
-        (ts("2020-01-01 01:20:00"), "knot tied"))
-      q.processAllAvailable()
-      source.addData((ts("2020-01-01 03:00:00"), "pusher"))
-      q.processAllAvailable()
-
-      val got = spark.read.parquet(out)
-        .select("window_start", "rank", "term", "n").collect()
-        .map(r => (r.getTimestamp(0).toString, r.getInt(1),
-          r.getString(2), r.getLong(3))).toSet
-      val w0 = "2020-01-01 00:00:00.0"
-      val w1 = "2020-01-01 01:00:00.0"
-      assert(got == Set(
-        (w0, 1, "spam", 5L), (w0, 2, "ham", 3L),
-        (w1, 1, "burst", 2L), (w1, 2, "knot", 2L))) // knot < tied at n=2
-      // parity: the same rows through the BATCH path (window + topTerms)
-      val batch = Seq(
-        (ts("2020-01-01 00:05:00"), "spam spam spam ham"),
-        (ts("2020-01-01 00:10:00"), "spam SPAM ham"),
-        (ts("2020-01-01 00:20:00"), "ham rare"),
-        (ts("2020-01-01 01:10:00"), "burst burst tied knot"),
-        (ts("2020-01-01 01:20:00"), "knot tied"),
-        (ts("2020-01-01 03:00:00"), "pusher")).toDF("event_time", "text")
-      val batchCounts = batch
-        .select(col("event_time"),
-          explode(graft.ops.TextOps.normTokens(col("text"))).as("term"))
-        .groupBy(window(col("event_time"), "1 hour"), col("term"))
-        .agg(count(lit(1)).as("n"))
-        .select(col("window.start").as("window_start"), col("term"), col("n"))
-      val batchTop = StreamingTrends.topTerms(batchCounts, 2)
-        .collect().map(r => (r.getTimestamp(0).toString, r.getInt(1),
-          r.getString(2), r.getLong(3)))
-        .filter(t => t._1 == w0 || t._1 == w1).toSet
-      assert(batchTop == got)
-    } finally q.stop()
-  }
-
-  test("stream-static enrichment joins dims per batch, defaults missing keys") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.StreamingEnrich
-    val dims = Seq(("crawl_a", "permissive"), ("crawl_b", "restricted"))
-      .toDF("source", "tier")
-    val source = MemoryStream[(Timestamp, Long, String)]
-    val enriched = StreamingEnrich.enrich(
-      source.toDF().toDF("event_time", "doc_id", "source"),
-      dims, "source", Map("tier" -> lit("unknown")))
-    val counts = StreamingEnrich.windowedDimCounts(
-      enriched, "tier", windowDuration = "1 hour",
-      watermarkDelay = "0 seconds")
-    val q = counts.writeStream.outputMode("append")
-      .format("memory").queryName("enrich_out").start()
-    try {
-      source.addData(
-        (ts("2020-01-01 00:05:00"), 0L, "crawl_a"),
-        (ts("2020-01-01 00:10:00"), 1L, "crawl_a"),
-        (ts("2020-01-01 00:20:00"), 2L, "crawl_b"),
-        (ts("2020-01-01 00:25:00"), 3L, "crawl_new")) // not in the registry
-      q.processAllAvailable()
-      // next hour's arrival closes window 0
-      source.addData((ts("2020-01-01 01:30:00"), 4L, "crawl_b"))
-      q.processAllAvailable()
-      source.addData((ts("2020-01-01 03:00:00"), 5L, "crawl_a"))
-      q.processAllAvailable()
-
-      val got = spark.table("enrich_out")
-        .collect().map(r => (r.getTimestamp(0).toString, r.getString(1),
-          r.getLong(2))).toSet
-      val w0 = "2020-01-01 00:00:00.0"
-      val w1 = "2020-01-01 01:00:00.0"
-      assert(got == Set(
-        (w0, "permissive", 2L), (w0, "restricted", 1L), (w0, "unknown", 1L),
-        (w1, "restricted", 1L)))
-      // parity: identical rows through the batch path (same join + window)
-      val batch = Seq(
-        (ts("2020-01-01 00:05:00"), 0L, "crawl_a"),
-        (ts("2020-01-01 00:10:00"), 1L, "crawl_a"),
-        (ts("2020-01-01 00:20:00"), 2L, "crawl_b"),
-        (ts("2020-01-01 00:25:00"), 3L, "crawl_new"),
-        (ts("2020-01-01 01:30:00"), 4L, "crawl_b"))
-        .toDF("event_time", "doc_id", "source")
-      val batchGot = StreamingEnrich.enrich(batch, dims, "source",
-          Map("tier" -> lit("unknown")))
-        .groupBy(window(col("event_time"), "1 hour"), col("tier"))
-        .agg(count(lit(1)).as("n"))
-        .select(col("window.start").as("window_start"), col("tier"), col("n"))
-        .collect().map(r => (r.getTimestamp(0).toString, r.getString(1),
-          r.getLong(2))).toSet
-      assert(batchGot == got)
-    } finally q.stop()
-  }
-
-  test("stream-stream join pairs within the time bound, matches the batch join") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.StreamingJoin
-    val imps = MemoryStream[(Long, Timestamp)]
-    val clicks = MemoryStream[(Long, Timestamp)]
-    val joined = StreamingJoin.withinTime(
-      imps.toDF().toDF("ad_id", "imp_time"),
-      clicks.toDF().toDF("ad_id", "click_time"),
-      "ad_id", "imp_time", "click_time",
-      maxDelay = "10 minutes", watermarkDelay = "0 seconds")
-    val q = joined.writeStream.outputMode("append")
-      .format("memory").queryName("ssj_out").start()
-    val impRows = Seq(
-      (1L, ts("2020-01-01 00:00:00")),
-      (2L, ts("2020-01-01 00:05:00")),
-      (3L, ts("2020-01-01 00:10:00")))
-    val clickRows = Seq(
-      (1L, ts("2020-01-01 00:04:00")),  // in window -> pair
-      (1L, ts("2020-01-01 00:20:00")),  // 20 min late -> out of window
-      (2L, ts("2020-01-01 00:04:00")),  // BEFORE its impression -> no pair
-      (3L, ts("2020-01-01 00:19:59")))  // just inside -> pair
-    try {
-      imps.addData(impRows.take(2): _*)
-      clicks.addData(clickRows.take(2): _*)
-      q.processAllAvailable()
-      imps.addData(impRows.drop(2): _*)
-      clicks.addData(clickRows.drop(2): _*)
-      q.processAllAvailable()
-      // push the watermark far forward so every joinable pair is emitted
-      imps.addData((99L, ts("2020-01-02 00:00:00")))
-      clicks.addData((99L, ts("2020-01-03 00:00:00")))
-      q.processAllAvailable()
-      val got = spark.table("ssj_out")
-        .select("ad_id", "imp_time", "click_time").collect()
-        .map(r => (r.getLong(0), r.getTimestamp(1).toString,
-          r.getTimestamp(2).toString)).toSet
-      // batch parity: same condition over the full static frames
-      val expected = impRows.toDF("ad_id", "imp_time").as("l")
-        .join(clickRows.toDF("ad_id", "click_time").as("r"),
-          col("l.ad_id") === col("r.ad_id") &&
-            col("click_time") >= col("imp_time") &&
-            col("click_time") <= col("imp_time") + expr("INTERVAL 10 minutes"))
-        .select(col("l.ad_id"), col("imp_time"), col("click_time")).collect()
-        .map(r => (r.getLong(0), r.getTimestamp(1).toString,
-          r.getTimestamp(2).toString)).toSet
-      assert(got == expected)
-      assert(got == Set(
-        (1L, "2020-01-01 00:00:00.0", "2020-01-01 00:04:00.0"),
-        (3L, "2020-01-01 00:10:00.0", "2020-01-01 00:19:59.0")))
-    } finally q.stop()
-  }
-
-  test("streaming near-dup LSH emits exactly the batch-verified pair set") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.StreamingNearDup
-    val texts = Seq(
-      0L -> "the quick brown fox jumps over the lazy dog",
-      1L -> "the quick brown fox jumps over the lazy cat", // near-dup of 0
-      2L -> "completely different words entirely unrelated text here",
-      3L -> "THE  Quick   Brown fox jumps over the lazy dog", // dup of 0
-      4L -> "tiny") // shingle-less -> drops out
-    val source = MemoryStream[(Long, Timestamp, String)]
-    val hits = StreamingNearDup.hits(
-      source.toDF().toDF("doc_id", "event_time", "text"),
-      k = 3, nHashes = 64, bands = 32, threshold = 0.5,
-      horizonSeconds = 86400, watermarkDelay = "0 seconds")
-    val q = hits.writeStream.outputMode("append")
-      .format("memory").queryName("snd_out").start()
-    try {
-      // arrivals split across micro-batches: 0,1 then 2,3,4 — pairs form
-      // both within a batch (0-1) and across batches (0-3, 1-3)
-      source.addData(
-        (0L, ts("2020-01-01 00:00:00"), texts(0)._2),
-        (1L, ts("2020-01-01 00:10:00"), texts(1)._2))
-      q.processAllAvailable()
-      source.addData(
-        (2L, ts("2020-01-01 00:20:00"), texts(2)._2),
-        (3L, ts("2020-01-01 00:30:00"), texts(3)._2),
-        (4L, ts("2020-01-01 00:40:00"), texts(4)._2))
-      q.processAllAvailable()
-      val got = spark.table("snd_out").collect()
-        .map(r => (r.getLong(0), r.getLong(1),
-          math.round(r.getDouble(2) * 1e9))).toSet // multi-band dups collapse
-      val batch = graft.ops.Dedup.minhashLshPairs(
-        texts.toDF("doc_id", "text"), "doc_id", "text",
-        k = 3, nHashes = 64, bands = 32, threshold = 0.5)
-        .collect().map(r => (r.getLong(0), r.getLong(1),
-          math.round(r.getDouble(2) * 1e9))).toSet
-      assert(got == batch, s"stream $got vs batch $batch")
-      assert(got.exists { case (a, b, _) => a == 0L && b == 3L }) // exact dup
-      assert(got.exists { case (a, b, _) => a == 0L && b == 1L }) // near dup
-    } finally q.stop()
-  }
-
-  test("streaming CDC apply folds change batches into the batch-equal snapshot") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.StreamingUpsert
-    val root = java.nio.file.Files.createTempDirectory("su_root").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("su_ckpt").toString
-    val base = Seq((0L, 1, "a"), (1L, 1, "b"), (2L, 1, "c"))
-      .toDF("doc_id", "version", "text")
-    StreamingUpsert.init(base, root)
-
-    val source = MemoryStream[(Long, Int, String, Boolean)]
-    val q = StreamingUpsert.sink(
-      source.toDF().toDF("doc_id", "version", "text", "deleted"),
-      root, "doc_id", "version", ckpt).start()
-    val allChanges = Seq(
-      (1L, 2, "b2", false), (3L, 1, "d", false), // batch 1
-      (2L, 2, "", true), (1L, 3, "b3", false))   // batch 2
-    try {
-      source.addData(allChanges.take(2): _*)
-      q.processAllAvailable()
-      source.addData(allChanges.drop(2): _*)
-      q.processAllAvailable()
-    } finally q.stop()
-
-    def snap() = StreamingUpsert.current(spark, root)
-      .collect().map(r => r.getLong(0) -> ((r.getInt(1), r.getString(2))))
-      .toMap
-    val got = snap()
-    // batch equivalent: all changes applied at once
-    val batchAll = graft.ops.Snapshot.upsert(base,
-      allChanges.toDF("doc_id", "version", "text", "deleted"),
-      "doc_id", "version")
-      .collect().map(r => r.getLong(0) -> ((r.getInt(1), r.getString(2))))
-      .toMap
-    assert(got == batchAll)
-    assert(got == Map(0L -> ((1, "a")), 1L -> ((3, "b3")), 3L -> ((1, "d"))))
-
-    // at-least-once replay: re-applying the LAST batch id is a no-op
-    StreamingUpsert.applyBatch(
-      allChanges.drop(2).toDF("doc_id", "version", "text", "deleted"),
-      batchId = 1L, root, "doc_id", "version")
-    assert(snap() == got)
-
-    // pruning keeps a bounded number of version dirs
-    val vdirs = new java.io.File(root).listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("v")).map(_.getName)
-    assert(vdirs.length <= 3, vdirs.mkString(","))
-  }
-
-  test("streaming media decode matches the batch decoder per record") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.ops.Multimodal
-    def pixel(x: Int, y: Int): Int = (x * 31 + y * 7) % 256 << 16 | 0x4080
-    val records = Seq(
-      Multimodal.MediaRecord(0L, "image", Multimodal.makePng(4, 3, pixel), "s"),
-      Multimodal.MediaRecord(1L, "image", Multimodal.makeBmp(4, 3, pixel), "s"),
-      Multimodal.MediaRecord(2L, "image", "junk".getBytes("UTF-8"), "s"))
-    val source = MemoryStream[Multimodal.MediaRecord]
-    // the decoder is a plain typed mapPartitions — it must compose with a
-    // streaming Dataset unchanged (per-micro-batch codec contexts)
-    val q = Multimodal.decodeImages(source.toDS()).writeStream
-      .outputMode("append").format("memory").queryName("mm_decode_out")
-      .start()
-    try {
-      source.addData(records.take(2): _*)
-      q.processAllAvailable()
-      source.addData(records.drop(2): _*)
-      q.processAllAvailable()
-    } finally q.stop()
-    val streamed = spark.table("mm_decode_out")
-      .collect().map(r => r.getLong(0) ->
-        ((r.getBoolean(1), Option(r.get(8)).map(_.asInstanceOf[Long])))).toMap
-    val batch = Multimodal.decodeImages(records.toDS())
-      .collect().map(f => f.media_id -> ((f.decoded, f.px_fp))).toMap
-    assert(streamed.keySet == batch.keySet)
-    batch.foreach { case (id, (dec, fp)) =>
-      assert(streamed(id) == ((dec, fp)), s"media $id")
-    }
-    // PNG and BMP of the same grid agree in the stream too
-    assert(batch(0L)._2.nonEmpty && batch(0L)._2 == batch(1L)._2)
-  }
-
-  test("streaming audio energy windows match the batch profile per record") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.ops.Multimodal
-    val records = Seq(
-      Multimodal.MediaRecord(0L, "audio",
-        Multimodal.makeWav(8000, Seq(100, -200, 300, 0, 0, 0, 7)), "s"),
-      Multimodal.MediaRecord(1L, "audio",
-        Multimodal.makeWav(8000, Seq(0, 0, 0)), "s"), // fully silent
-      Multimodal.MediaRecord(2L, "audio", "junk".getBytes("UTF-8"), "s"))
-    val source = MemoryStream[Multimodal.MediaRecord]
-    // the window profiler is a typed flatMap-shaped mapPartitions — it
-    // must compose with a streaming Dataset unchanged
-    val q = Multimodal.wavEnergyWindows(source.toDS(), 3).writeStream
-      .outputMode("append").format("memory").queryName("mm_energy_out")
-      .start()
-    try {
-      source.addData(records.take(2): _*)
-      q.processAllAvailable()
-      source.addData(records.drop(2): _*)
-      q.processAllAvailable()
-    } finally q.stop()
-    val streamed = spark.table("mm_energy_out").collect()
-      .map(r => (r.getLong(0), r.getInt(1)) ->
-        ((r.getLong(2), r.getLong(3), r.getLong(4), r.getBoolean(5))))
-      .toMap
-    val batch = Multimodal.wavEnergyWindows(records.toDS(), 3).collect()
-      .map(w => (w.media_id, w.win_idx) ->
-        ((w.n, w.energy, w.peak_abs, w.silent))).toMap
-    assert(streamed == batch)
-    assert(batch((1L, 0)) == ((3L, 0L, 0L, true))) // silent stream flagged
-    assert(!batch.keySet.exists(_._1 == 2L)) // junk quarantines to no rows
-  }
-
-  test("streaming segment near-dup matches batch segmentNearDup") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.ops.Dedup
-    import graft.streaming.StreamingSegmentNearDup
-    val bpA = "sign up for our weekly newsletter and get the best " +
-      "stories delivered right to your inbox every single day now"
-    val bpB = "sign up for our weekly newsletter and get the best " +
-      "stories delivered right to your inbox every single day instant"
-    val source = MemoryStream[(Long, Timestamp, String)]
-    val hits = StreamingSegmentNearDup.hits(
-      source.toDF().toDF("doc_id", "event_time", "text"),
-      sep = "\n", maxDist = 3, minTokens = 3, horizonSeconds = 86400,
-      watermarkDelay = "0 seconds")
-    val q = hits.writeStream.outputMode("append")
-      .format("memory").queryName("ssnd_out").start()
-    try {
-      // variant pair spans micro-batches; the exact repeat of bpA in
-      // batch two must refresh state, not re-emit
-      source.addData((1L, ts("2020-01-01 00:00:00"),
-        "alpha beta gamma\n" + bpA))
-      q.processAllAvailable()
-      source.addData(
-        (2L, ts("2020-01-01 00:10:00"), "delta epsilon zeta\n" + bpA),
-        (3L, ts("2020-01-01 00:20:00"), "eta theta iota\n" + bpB))
-      q.processAllAvailable()
-      val streamed = spark.table("ssnd_out").collect()
-        .map(r => (r.getString(0), r.getString(1), r.getInt(2))).toSet
-      val batch = Dedup.segmentNearDup(Seq(
-          (1L, "alpha beta gamma\n" + bpA),
-          (2L, "delta epsilon zeta\n" + bpA),
-          (3L, "eta theta iota\n" + bpB)).toDF("doc_id", "text"),
-          "doc_id", "text")
-        .collect().map(r => (r.getString(0), r.getString(1), r.getInt(2)))
-        .toSet
-      assert(streamed == batch, s"stream $streamed vs batch $batch")
-      assert(streamed.size == 1 && streamed.head._3 == 3)
-    } finally q.stop()
-  }
-
-  test("streaming visual dedup matches batch perceptualPairs bit-for-bit") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.ops.Multimodal
-    import graft.streaming.StreamingVisualDedup
-    def pix(x: Int, y: Int): Int = {
-      val ph = (x / 2 + y / 2) % 2
-      val base = if (ph == 1) 230 else 20
-      ((base + x) << 16) | ((base + y) << 8) | ((base + (x ^ y)) % 256)
-    }
-    // 1: 16x16 PNG; 2: its 2x BMP re-encode (perceptual dup, px-distinct);
-    // 3: different content; 4: undecodable junk (quarantines)
-    val payloads = Map[Long, Array[Byte]](
-      1L -> Multimodal.makePng(16, 16, pix),
-      2L -> Multimodal.makeBmp(32, 32, (x, y) => pix(x / 2, y / 2)),
-      3L -> Multimodal.makePng(16, 16, (x, y) => if (x < 8) 0xFFFFFF else 0),
-      4L -> "junk".getBytes("UTF-8"))
-    val source = MemoryStream[(Long, Timestamp, Array[Byte])]
-    val hits = StreamingVisualDedup.hits(
-      source.toDF().toDF("media_id", "event_time", "payload"),
-      maxDist = 3, horizonSeconds = 86400, watermarkDelay = "0 seconds")
-    val q = hits.writeStream.outputMode("append")
-      .format("memory").queryName("svd_out").start()
-    try {
-      // the dup pair spans MICRO-BATCHES: 1 arrives first, 2 later
-      source.addData((1L, ts("2020-01-01 00:00:00"), payloads(1L)),
-        (3L, ts("2020-01-01 00:05:00"), payloads(3L)))
-      q.processAllAvailable()
-      source.addData((2L, ts("2020-01-01 00:10:00"), payloads(2L)),
-        (4L, ts("2020-01-01 00:15:00"), payloads(4L)))
-      q.processAllAvailable()
-      val streamed = spark.table("svd_out").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getBoolean(3)))
-        .toSet // multi-band duplicates collapse in the set
-      val media = payloads.toSeq.map { case (id, p) =>
-        Multimodal.MediaRecord(id, "image", p, "s")
-      }.toDS()
-      val batch = Multimodal.perceptualPairs(
-        Multimodal.perceptualHash(media).toDF(), 3)
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getBoolean(3)))
-        .toSet
-      assert(streamed == batch, s"stream $streamed vs batch $batch")
-      assert(streamed == Set((1L, 2L, 0, true)))
-    } finally q.stop()
-  }
-
-  test("streaming audio dedup matches batch whtFpPairs bit-for-bit") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.ops.Multimodal
-    import graft.streaming.StreamingAudioDedup
-    def wave(g: Int, amp: Int): Seq[Int] = (0 until 256).map { i =>
-      val k = i % 64
-      if ((g + 1) * (k * k + k + 41) % 97 < 48) amp else -amp
-    }
-    // 1: base clip; 2: its 3x volume re-encode (WHT-sign dup); 3: other
-    // material; 4: undecodable junk (quarantines before banding)
-    val payloads = Map[Long, Array[Byte]](
-      1L -> Multimodal.makeWav(8000, wave(0, 1000)),
-      2L -> Multimodal.makeWav(8000, wave(0, 3000)),
-      3L -> Multimodal.makeWav(8000, wave(5, 1000)),
-      4L -> "junk".getBytes("UTF-8"))
-    val source = MemoryStream[(Long, Timestamp, Array[Byte])]
-    val hits = StreamingAudioDedup.hits(
-      source.toDF().toDF("media_id", "event_time", "payload"),
-      maxDist = 3, horizonSeconds = 86400, watermarkDelay = "0 seconds")
-    val q = hits.writeStream.outputMode("append")
-      .format("memory").queryName("sad_out").start()
-    try {
-      // the dup pair spans MICRO-BATCHES: 1 arrives first, 2 later
-      source.addData((1L, ts("2020-01-01 00:00:00"), payloads(1L)),
-        (3L, ts("2020-01-01 00:05:00"), payloads(3L)))
-      q.processAllAvailable()
-      source.addData((2L, ts("2020-01-01 00:10:00"), payloads(2L)),
-        (4L, ts("2020-01-01 00:15:00"), payloads(4L)))
-      q.processAllAvailable()
-      val streamed = spark.table("sad_out").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-      val media = payloads.toSeq.map { case (id, p) =>
-        Multimodal.MediaRecord(id, "audio", p, "s")
-      }.toDS()
-      val batch = Multimodal.whtFpPairs(Multimodal.wavWhtFp(media), 3)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-      assert(streamed == batch, s"stream $streamed vs batch $batch")
-      assert(streamed == Set((1L, 2L, 0)))
-    } finally q.stop()
-  }
-
-  test("streaming quantiles: running estimates equal batch per prefix") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.StreamingQuantiles
-    import graft.ops.QuantileSketch
-    val source = MemoryStream[(String, Timestamp, String, Long)]
-    val ps = Seq(25, 50, 99)
-    val q = StreamingQuantiles.estimates(
-        source.toDF().toDF("grp", "event_time", "key", "value"),
-        k = 16, ps = ps, watermarkDelay = "0 seconds")
-      .writeStream.outputMode("update")
-      .format("memory").queryName("qs_out").start()
-    def latest(): Map[(String, Int), (Long, Long)] = spark.table("qs_out")
-      .collect().map(r => (r.getString(0), r.getInt(1), r.getLong(2), r.getLong(3)))
-      .groupBy(x => (x._1, x._2)).map { case (k0, rows) =>
-        k0 -> (rows.last._3, rows.last._4) } // Update mode: last row wins
-    def batchOf(rows: Seq[(String, String, Long)]): Map[(String, Int), (Long, Long)] =
-      QuantileSketch.quantiles(rows.toDF("grp", "key", "v"),
-          Seq("grp"), col("v"), col("key"), k = 16, ps = ps)
-        .collect().map(r => (r.getString(0), r.getInt(1)) ->
-          ((r.getLong(2), r.getLong(3)))).toMap
-    try {
-      // prefix 1: 10 rows in g1 (sample unfilled -> exact quantiles)
-      val p1 = (0 until 10).map(i => ("g1", s"a$i", (i * 11 % 97).toLong))
-      source.addData(p1.map { case (g, k, v) =>
-        (g, ts("2020-01-01 00:00:01"), k, v) }: _*)
-      q.processAllAvailable()
-      assert(latest() == batchOf(p1))
-      // prefix 2: push g1 well past k=16 — tracker sample must equal the
-      // batch sample of the FULL prefix, estimates included
-      val more = (10 until 80).map(i => ("g1", s"a$i", (i * 7 % 89).toLong))
-      source.addData(more.map { case (g, k, v) =>
-        (g, ts("2020-01-01 00:00:02"), k, v) }: _*)
-      q.processAllAvailable()
-      val want = batchOf(p1 ++ more)
-      assert(latest() == want, s"stream ${latest()} vs batch $want")
-      assert(latest()(("g1", 50))._1 == 16L) // genuinely in the filled regime
-    } finally q.stop()
-  }
-
-  test("streaming KMV distinct: running estimate equals batch per prefix") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.StreamingDistinct
-    import graft.ops.Kmv
-    val source = MemoryStream[(String, Timestamp, String)]
-    val q = StreamingDistinct.estimates(
-        source.toDF().toDF("grp", "event_time", "key"),
-        k = 16, watermarkDelay = "0 seconds")
-      .writeStream.outputMode("update")
-      .format("memory").queryName("kmv_out").start()
-    def latest(): Map[String, (Int, Long)] = spark.table("kmv_out")
-      .collect().map(r => (r.getString(0), r.getInt(1), r.getLong(2)))
-      .groupBy(_._1).map { case (g, rows) =>
-        g -> (rows.last._2, rows.last._3) } // Update mode: last row wins
-    def batchOf(keys: Seq[(String, String)]): Map[String, (Int, Long)] =
-      Kmv.distinctEstimate(keys.toDF("grp", "key"), Seq("grp"),
-          col("key"), k = 16)
-        .collect().map(r =>
-          r.getString(0) -> ((r.getLong(1).toInt, r.getLong(3)))).toMap
-    try {
-      // prefix 1: 10 distinct in g1 (sketch unfilled -> exact), 3 in g2
-      val p1 = (0 until 10).map(i => ("g1", s"a$i")) ++
-        (0 until 3).map(i => ("g2", s"b$i"))
-      source.addData(p1.map { case (g, k) =>
-        (g, ts("2020-01-01 00:00:01"), k) }: _*)
-      q.processAllAvailable()
-      assert(latest() == batchOf(p1))
-      // prefix 2: push g1 past k=16 with duplicates mixed in — the
-      // tracker's sketch must equal the batch sketch of the FULL prefix
-      val more = (5 until 60).map(i => ("g1", s"a$i")) ++
-        (0 until 10).map(i => ("g1", s"a$i")) // dups, must not change it
-      source.addData(more.map { case (g, k) =>
-        (g, ts("2020-01-01 00:00:02"), k) }: _*)
-      q.processAllAvailable()
-      val want = batchOf(p1 ++ more)
-      assert(latest() == want, s"stream ${latest()} vs batch $want")
-      assert(latest()("g1")._1 == 16) // genuinely in the filled regime
-    } finally q.stop()
-  }
-
-  test("streaming HLL: running estimate equals batch per prefix") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.StreamingHll
-    import graft.ops.Hll
-    val source = MemoryStream[(String, Timestamp, String)]
-    val q = StreamingHll.estimates(
-        source.toDF().toDF("grp", "event_time", "key"),
-        p = 6, watermarkDelay = "0 seconds")
-      .writeStream.outputMode("update")
-      .format("memory").queryName("hll_out").start()
-    def latest(): Map[String, (Long, Long)] = spark.table("hll_out")
-      .collect().map(r => (r.getString(0), r.getInt(1), r.getLong(2)))
-      .groupBy(_._1).map { case (g, rows) =>
-        g -> (rows.last._2.toLong, rows.last._3) }
-    def batchOf(keys: Seq[(String, String)]): Map[String, (Long, Long)] =
-      Hll.distinctEstimate(keys.toDF("grp", "key"), Seq("grp"),
-          col("key"), p = 6)
-        .collect().map(r =>
-          r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-    try {
-      val p1 = (0 until 40).map(i => ("g1", s"a$i")) ++
-        (0 until 5).map(i => ("g2", s"b$i"))
-      source.addData(p1.map { case (g, k) =>
-        (g, ts("2020-01-01 00:00:01"), k) }: _*)
-      q.processAllAvailable()
-      assert(latest() == batchOf(p1))
-      // prefix 2: push g1 well past m = 64, duplicates must be no-ops
-      // (register max is idempotent)
-      val more = (20 until 400).map(i => ("g1", s"a$i")) ++
-        (0 until 40).map(i => ("g1", s"a$i"))
-      source.addData(more.map { case (g, k) =>
-        (g, ts("2020-01-01 00:00:02"), k) }: _*)
-      q.processAllAvailable()
-      val want = batchOf(p1 ++ more)
-      assert(latest() == want, s"stream ${latest()} vs batch $want")
-    } finally q.stop()
-  }
-
-  test("streaming CMS: running estimates equal batch per prefix") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.StreamingCms
-    import graft.ops.Cms
-    val source = MemoryStream[(String, Timestamp, String)]
-    val q = StreamingCms.estimates(
-        source.toDF().toDF("grp", "event_time", "key"),
-        d = 4, w = 64, watermarkDelay = "0 seconds")
-      .writeStream.outputMode("update")
-      .format("memory").queryName("cms_out").start()
-    def latest(): Map[(String, String), Long] =
-      spark.table("cms_out").collect()
-        .foldLeft(Map.empty[(String, String), Long]) { (m, r) =>
-          m + ((r.getString(0), r.getString(1)) -> r.getLong(2)) }
-    def batchEst(prefix: Seq[(String, String)])
-        : Map[(String, String), Long] =
-      prefix.map(_._1).distinct.flatMap { g =>
-        val ks = prefix.filter(_._1 == g).map(_._2)
-        val sk = Cms.sketch(ks.toDF("k"), col("k"), 4, 64)
-        Cms.estimate(sk, ks.distinct.toDF("k"), "k", 4, 64).collect()
-          .map(r => (g, r.getString(0)) -> r.getLong(1))
-      }.toMap
-    try {
-      // prefix 1: skewed dups in g1, a couple of keys in g2
-      val p1 = (0 until 8).flatMap(i =>
-        Seq.fill(i + 1)(("g1", s"u$i"))) ++ Seq(("g2", "x"), ("g2", "y"))
-      source.addData(p1.map { case (g, k) =>
-        (g, ts("2020-01-01 00:00:01"), k) }: _*)
-      q.processAllAvailable()
-      assert(latest() == batchEst(p1))
-      // prefix 2: re-touch some keys, add fresh ones — every estimate
-      // emitted in this batch must equal the batch CMS of the FULL prefix
-      val p2 = (4 until 12).flatMap(i =>
-        Seq.fill(2)(("g1", s"u$i"))) ++ Seq(("g2", "x"))
-      source.addData(p2.map { case (g, k) =>
-        (g, ts("2020-01-01 00:00:02"), k) }: _*)
-      q.processAllAvailable()
-      val want = batchEst(p1 ++ p2)
-      val got = latest()
-      p2.distinct.foreach { gk =>
-        assert(got(gk) == want(gk), s"$gk: stream ${got(gk)} vs ${want(gk)}")
-      }
-    } finally q.stop()
-  }
-
-  test("streaming AMS F2 tracker matches batch estimate after every batch") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.StreamingAms
-    import graft.ops.Ams
-    val source = MemoryStream[(String, Timestamp, String)]
-    val q = StreamingAms.estimates(
-        source.toDF().toDF("grp", "event_time", "key"),
-        watermarkDelay = "0 seconds")
-      .writeStream.outputMode("update")
-      .format("memory").queryName("ams_out").start()
-    def latest(): Map[String, Long] =
-      spark.table("ams_out").collect()
-        .foldLeft(Map.empty[String, Long]) { (m, r) =>
-          m + (r.getString(0) -> r.getLong(1)) }
-    def batchEst(prefix: Seq[(String, String)]): Map[String, Long] =
-      Ams.f2Estimate(prefix.toDF("grp", "key"), Seq("grp"), col("key"))
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    try {
-      val p1 = (1 to 10).flatMap(j => Seq.fill(j)(("g1", s"key-$j"))) ++
-        Seq(("g2", "a"), ("g2", "a"), ("g2", "b"))
-      source.addData(p1.map { case (g, k) =>
-        (g, ts("2020-01-01 00:00:01"), k) }: _*)
-      q.processAllAvailable()
-      assert(latest() == batchEst(p1))
-      // the second batch re-touches g1 only; its emitted estimate must
-      // equal the batch fold of the FULL prefix
-      val p2 = (5 to 14).map(j => ("g1", s"key-$j"))
-      source.addData(p2.map { case (g, k) =>
-        (g, ts("2020-01-01 00:00:02"), k) }: _*)
-      q.processAllAvailable()
-      assert(latest()("g1") == batchEst(p1 ++ p2)("g1"))
-    } finally q.stop()
-  }
-
-  test("streaming priority sample matches the batch gate after every batch") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.StreamingPrioritySample
-    import graft.ops.Sampling
-    val source = MemoryStream[(String, Timestamp, String, Long)]
-    val k = 8
-    val q = StreamingPrioritySample.estimates(
-        source.toDF().toDF("grp", "event_time", "id", "w"), k = k,
-        watermarkDelay = "0 seconds")
-      .writeStream.outputMode("update")
-      .format("memory").queryName("prio_out").start()
-    def latest(): Map[String, (Int, Long, Long)] =
-      spark.table("prio_out").collect()
-        .foldLeft(Map.empty[String, (Int, Long, Long)]) { (m, r) =>
-          m + (r.getString(0) -> ((r.getInt(1), r.getLong(2),
-            r.getLong(3)))) }
-    def batchStat(prefix: Seq[(String, String, Long)])
-        : Map[String, (Int, Long, Long)] =
-      prefix.map(_._1).distinct.map { g =>
-        val items = prefix.filter(_._1 == g).map(t => (t._2, t._3))
-        val rows = Sampling.prioritySample(items.toDF("id", "w"), "id",
-          "w", k).collect()
-        val tau = rows.head.getLong(3)
-        g -> ((rows.length, tau, rows.map(_.getLong(4)).sum))
-      }.toMap
-    try {
-      val p1 = (1 to 20).map(i => ("g1", s"doc-$i", (i % 5 + 1).toLong)) ++
-        Seq(("g2", "x", 3L), ("g2", "y", 9L))
-      source.addData(p1.map { case (g, id, w) =>
-        (g, ts("2020-01-01 00:00:01"), id, w) }: _*)
-      q.processAllAvailable()
-      assert(latest() == batchStat(p1))
-      // g2 stays under k (everything kept, tau 0, estimator exact)
-      assert(latest()("g2") == ((2, 0L, 12L)))
-      val p2 = (21 to 40).map(i => ("g1", s"doc-$i", (i % 7 + 1).toLong))
-      source.addData(p2.map { case (g, id, w) =>
-        (g, ts("2020-01-01 00:00:02"), id, w) }: _*)
-      q.processAllAvailable()
-      assert(latest()("g1") == batchStat(p1 ++ p2)("g1"))
-    } finally q.stop()
-  }
-
-  test("streaming winrate leaderboard equals batch winMatrix per prefix") {
-    implicit val sqlCtx = spark.sqlContext
-    import graft.streaming.StreamingWinrate
-    import graft.ops.Preference
-    val source = MemoryStream[(Long, Long, String, Timestamp)]
-    val q = StreamingWinrate.track(
-        source.toDF().toDF("model_a", "model_b", "outcome", "event_time"))
-      .writeStream.outputMode("update")
-      .format("memory").queryName("wr_out").start()
-    def latest(): Map[Long, (Long, Long, Long, Long, Long)] =
-      spark.table("wr_out").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
-          r.getLong(4), r.getLong(5)))
-        .groupBy(_._1).map { case (m, rows) =>
-          val x = rows.last // Update mode: last row wins
-          m -> ((x._2, x._3, x._4, x._5, x._6))
-        }
-    def batchOf(rows: Seq[(Long, Long, String)]) =
-      Preference.winMatrix(rows.toDF("ma", "mb", "o"), "ma", "mb", "o")
-        .collect().map(r => r.getLong(0) ->
-          ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4),
-            r.getLong(5)))).toMap
-    try {
-      val p1 = Seq((10L, 20L, "a"), (10L, 20L, "tie"), (20L, 30L, "b"),
-        (10L, 30L, "oops")) // malformed: dropped in both paths
-      source.addData(p1.map { case (a, b, o) =>
-        (a, b, o, ts("2020-01-01 00:00:01")) }: _*)
-      q.processAllAvailable()
-      assert(latest() == batchOf(p1))
-      // cross-batch accumulation: model 10's tallies span both batches
-      val p2 = Seq((10L, 30L, "b"), (20L, 10L, "a"), (10L, 20L, "a"))
-      source.addData(p2.map { case (a, b, o) =>
-        (a, b, o, ts("2020-01-01 00:00:02")) }: _*)
-      q.processAllAvailable()
-      val want = batchOf(p1 ++ p2)
-      assert(latest() == want, s"stream ${latest()} vs batch $want")
-      // LATE arrival: event-time far BEHIND everything already folded —
-      // with no watermark declared nothing may be dropped, so parity
-      // must hold for the late battle too
-      val p3 = Seq((30L, 20L, "tie"), (10L, 30L, "a"))
-      source.addData(p3.map { case (a, b, o) =>
-        (a, b, o, ts("2019-12-31 00:00:00")) }: _*)
-      q.processAllAvailable()
-      val want3 = batchOf(p1 ++ p2 ++ p3)
-      assert(latest() == want3, s"late-arrival stream ${latest()} vs batch $want3")
     } finally q.stop()
   }
 }
