@@ -38,6 +38,13 @@ object Kmv {
   def hash52(key: Column): Column =
     conv(substring(md5(key), 1, 13), 16, 10).cast("long")
 
+  /** The scalar estimate off a sketch buffer — shared with the streaming
+    * tracker ([[graft.streaming.StreamingDistinct]]) so stream and batch
+    * report the identical number for identical inputs. */
+  def estimateOf(mins: Array[Long], k: Int): Long =
+    if (mins.length < k) mins.length.toLong
+    else ((k - 1).toLong * HashSpace) / mins(k - 1)
+
   /** Theta-sketch set algebra over two KMV sketches (the Datasketches
     * theta idiom): with θ = min of the two k-th order statistics (an
     * unfilled side contributes θ = M), every retained hash below θ is a

@@ -26,9 +26,8 @@ final case class BurstAlert(event_type: String, hr: Long, cnt: Long,
   * fires one event into the NEXT hour instead of at end of day.
   *
   * An hour is evaluated exactly once, when it CLOSES — i.e. when the
-  * first event of a later hour arrives on the same type (the same
-  * stream-order contract [[StreamingChangePoints]] carries; the watermark
-  * bounds lateness). The comparison is the gate's integer
+  * first event of a later hour arrives on the same type (stream order;
+  * the watermark bounds lateness). The comparison is the gate's integer
   * cross-multiplication `cnt·trail_n ≥ factor·trail_sum` — no mean
   * division. Hours with no events produce no verdict (exactly like the
   * batch RANGE window, which only sees existing hourly rows). The
