@@ -52,18 +52,8 @@ class EventsAggregator(
   lazy val stayIndex: DataFrame = {
     val idx = Stages.stayIndex(readCsv("icustays.csv", graft.schemas.MimicSchemas.icustays),
       timestepSeconds)
-    stayIds.fold(idx)(ids => Stages.membershipFilter(idx, "stay_id", ids, None))
+    stayIds.fold(idx)(ids => Stages.membershipFilter(idx, "stay_id", ids))
   }
-
-  /** Feature universe from `d_items` (used for the ½-selectivity complement
-    * rewrite, reference `__init__.py:189-191`).
-    */
-  private lazy val featureUniverse: Option[Seq[Long]] =
-    featureIds.map { _ =>
-      readCsv("d_items.csv", graft.schemas.MimicSchemas.dItems)
-        .select(col("itemid").cast("long")).distinct()
-        .collect().map(_.getLong(0)).toSeq
-    }
 
   /** Long-form `(stay_id, feature_id, tidx, value)` densified series for one
     * source — the engine's canonical output (the CSV sink writes it unexploded).
@@ -78,9 +68,9 @@ class EventsAggregator(
       .withColumn("feature_id", source.featureExpr.cast("long"))
       .withColumn("value", source.valueExpr.cast("double"))
     val keyed1 = stayIds.fold(keyed0)(ids =>
-      Stages.membershipFilter(keyed0, "stay_id", ids, None))
+      Stages.membershipFilter(keyed0, "stay_id", ids))
     val keyed = featureIds.fold(keyed1)(ids =>
-      Stages.membershipFilter(keyed1, "feature_id", ids, featureUniverse))
+      Stages.membershipFilter(keyed1, "feature_id", ids))
 
     val pointed = source.timeSpec match {
       case PointTime(c) =>

@@ -649,7 +649,7 @@ object ExplainCheck {
       Seq("CartesianProduct", "Window", "BroadcastNestedLoopJoin")),
 
     // ---- bulk audit extension (r7): every remaining registered query,
-    // expectations derived from the reviewed sf0.001 plans (PlanSurvey).
+    // expectations derived from the reviewed sf0.001 executed plans.
     // must = the load-bearing nodes observed (broadcast dims, generates,
     // partial aggs, batched scans, pushed filters); mustNot = the
     // pathological shapes absent from the reviewed plan (products,

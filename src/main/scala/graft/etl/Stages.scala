@@ -106,13 +106,6 @@ object Stages {
       .agg(combiner.agg(col("value")).as("value"),
         first("total_windows").as("total_windows"))
 
-  /** [[densifySeries]] `posexplode`d back to the long form
-    * `(stay_id, feature_id, tidx, value)`: one row per `tidx ∈
-    * 0..total_windows` for every observed (stay, feature) pair.
-    */
-  def densify(combined: DataFrame, ffill: Boolean): DataFrame =
-    densify(combined, if (ffill) ForwardFill else ZeroFill)
-
   /** Gap policy of [[densify]]; `name` is the kernel's mode and the run
     * manifest's fill policy. */
   sealed trait FillMode { def name: String }
@@ -126,6 +119,10 @@ object Stages {
     */
   case object LinearInterp extends FillMode { val name = "interp" }
 
+  /** [[densifySeries]] `posexplode`d back to the long form
+    * `(stay_id, feature_id, tidx, value)`: one row per `tidx ∈
+    * 0..total_windows` for every observed (stay, feature) pair.
+    */
   def densify(combined: DataFrame, mode: FillMode): DataFrame =
     densifySeries(combined, mode)
       .select(col("stay_id"), col("feature_id"), posexplode(col("series")))
@@ -157,32 +154,10 @@ object Stages {
       .select(col("stay_id"), col("feature_id"), col("total_windows"),
         densify_fill(col("cells"), col("total_windows"), mode.name).as("series"))
 
-  /** Membership filter with the reference's ½-selectivity rewrite
-    * (`__init__.py:180-193`, disabled there — enabled and pushed down here):
-    * small keep-lists become `isin` (pushed to the scan); keep-lists covering
-    * more than half the universe become a NOT-isin over the complement.
-    * For very large lists callers should pass a DataFrame and use a
-    * `left_semi` join instead (see [[semiFilter]]).
-    *
-    * The complement rewrite is only equivalent to `isin(keep)` when the
-    * column's values all lie inside `universe` (dimension integrity — true
-    * for MIMIC itemids vs d_items); out-of-universe keys would pass the
-    * NOT-isin branch. Nulls are dropped by BOTH branches (a null key is in
-    * no keep-list), so the two branches agree for in-universe data.
+  /** Keep the rows whose `column` is in `keep`; Catalyst pushes the `isin`
+    * to the scan and hashes a long list (`OptimizeIn` → `InSet`). Null keys
+    * are in no keep-list and drop.
     */
-  def membershipFilter(df: DataFrame, column: String, keep: Seq[Long],
-      universe: Option[Seq[Long]]): DataFrame = {
-    universe match {
-      case Some(u) if keep.size > u.size / 2 =>
-        val complement = u.toSet -- keep.toSet
-        if (complement.isEmpty) df.where(col(column).isNotNull)
-        else df.where(col(column).isNotNull &&
-          !col(column).isin(complement.toSeq: _*))
-      case _ => df.where(col(column).isin(keep: _*))
-    }
-  }
-
-  /** Large-list membership as a broadcast left-semi join (SURVEY.md §2.3 J2). */
-  def semiFilter(df: DataFrame, column: String, keys: DataFrame): DataFrame =
-    df.join(broadcast(keys), Seq(column), "left_semi")
+  def membershipFilter(df: DataFrame, column: String, keep: Seq[Long]): DataFrame =
+    df.where(col(column).isin(keep: _*))
 }

@@ -187,9 +187,7 @@ object SigAggregators {
     * ([[graft.ops.Kmv]] holds the estimate algebra and the envelope).
     * Input hash values must be non-negative (the md5-prefix family).
     */
-  /** Sorted-insert of a distinct value, trimmed to k — shared by the
-    * batch aggregator and the streaming KMV tracker so both paths hold
-    * the IDENTICAL sketch for identical inputs. */
+  /** Sorted-insert of a distinct value, trimmed to k. */
   private[graft] def kmvInsert(buf: Array[Long], v: Long,
       k: Int): Array[Long] = {
     val pos = java.util.Arrays.binarySearch(buf, v)

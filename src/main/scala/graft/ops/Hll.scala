@@ -97,9 +97,8 @@ object Hll {
 
   /** Scalar estimate off a full register array (index j ⇒ registers(j),
     * 0 = empty) — the scalar reference for the columnar chain
-    * [[estimateFromRegisters]] and the estimate
-    * [[graft.streaming.StreamingHll]] emits: identical registers give the
-    * identical number.
+    * [[estimateFromRegisters]]: identical registers give the identical
+    * number.
     */
   def estimateOf(registers: Array[Int], p: Int): Long = {
     requireP(p)

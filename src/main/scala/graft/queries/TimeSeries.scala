@@ -92,7 +92,7 @@ object TimeSeries {
     "q_ts_densify" -> ((s, dir) => {
       val combined = Stages.combine(bucketized(s, dir), MeanCombine)
         .withColumn("value", round(col("value"), 6))
-      Stages.densify(combined, ffill = false)
+      Stages.densify(combined, Stages.ZeroFill)
         .select(col("stay_id").as("user_id"), col("feature_id").as("event_type"),
           col("tidx"), col("value"))
         .orderBy("user_id", "event_type", "tidx")
@@ -102,7 +102,7 @@ object TimeSeries {
     "q_ts_ffill" -> ((s, dir) => {
       val combined = Stages.combine(bucketized(s, dir), MeanCombine)
         .withColumn("value", round(col("value"), 6))
-      Stages.densify(combined, ffill = true)
+      Stages.densify(combined, Stages.ForwardFill)
         .select(col("stay_id").as("user_id"), col("feature_id").as("event_type"),
           col("tidx"), col("value"))
         .orderBy("user_id", "event_type", "tidx")

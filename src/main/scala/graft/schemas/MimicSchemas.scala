@@ -24,17 +24,6 @@ object MimicSchemas {
     StructField("outtime", StringType),
     StructField("los", DoubleType)))
 
-  val dItems: StructType = StructType(Seq(
-    StructField("itemid", LongType),
-    StructField("label", StringType),
-    StructField("abbreviation", StringType),
-    StructField("linksto", StringType),
-    StructField("category", StringType),
-    StructField("unitname", StringType),
-    StructField("param_type", StringType),
-    StructField("lownormalvalue", DoubleType),
-    StructField("highnormalvalue", DoubleType)))
-
   val chartevents: StructType = StructType(Seq(
     StructField("subject_id", LongType),
     StructField("hadm_id", LongType),

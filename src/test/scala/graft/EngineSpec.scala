@@ -439,4 +439,18 @@ class EngineSpec extends AnyFunSuite {
       .split(",").drop(1).map(_.toDouble)
     assert(r400.toSeq == Seq(10.0, 0.0, 0.0, 0.0, 2.0))
   }
+
+  test("feature filter writes only the requested features") {
+    // 100, 200, 300 are more than half of d_items' 100..500, and itemid 999
+    // is in no d_items row, so a NOT-isin over d_items' complement keeps it
+    val root = fixturesWith("chartevents.csv" ->
+      "1,10,1,2020-01-01 01:10:00,2020-01-01 01:11:00,999,8,8.0,bpm,0")
+    val dst = Files.createTempDirectory("graft-out-fid")
+    new EventsAggregator(spark, root.toString, dst.toString,
+      featureIds = Some(Seq(100L, 200L, 300L)),
+      sources = Seq(Sources.chartevents)).run()
+    val ids = readCsvLines(dst.resolve("1/chartevents_features.csv")).tail
+      .map(_.takeWhile(_ != ','))
+    assert(ids == Seq("100", "200"))
+  }
 }

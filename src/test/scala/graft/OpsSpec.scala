@@ -2120,7 +2120,7 @@ class OpsSpec extends AnyFunSuite {
       s"estimate $est too far from 20000")
     // at n = 20000 over m = 256 registers, empties are essentially gone
     assert(a.getLong(0) < 5L)
-    // the columnar chain and the streaming scalar produce the SAME number
+    // the columnar chain and the scalar reference produce the SAME number
     val regs = Hll.registerTable(keys, Seq("grp"), col("key"), p = 8)
       .collect().map(r => r.getLong(1).toInt -> r.getInt(2)).toMap
     val full = Array.tabulate(256)(j => regs.getOrElse(j, 0))

@@ -56,6 +56,14 @@ class OracleLintSpec extends AnyFunSuite {
     (proc.waitFor(), out)
   }
 
+  test("every registered gate has an oracle and every oracle a gate") {
+    val gates = SparkEntry.queries.keySet
+    val oracles = SparkEntry.oracleSql.keySet
+    assert(gates == oracles,
+      s"gates without oracle: ${(gates -- oracles).toSeq.sorted}; " +
+        s"oracles without gate: ${(oracles -- gates).toSeq.sorted}")
+  }
+
   test("every oracle binds to portable output types in DuckDB") {
     assume(haveTool, "python3+duckdb not available")
     assume(Files.exists(Paths.get(s"$sfDir/lineitem.parquet")),

@@ -91,7 +91,7 @@ object PropertySpec extends Properties("graft.stages") {
       val dense = Stages.densify(
         Stages.combine(
           Stages.bucketize(Stages.intervalExpand(iv, step), stayIdxDf(stays), step),
-          SumCombine), ffill = false)
+          SumCombine), Stages.ZeroFill)
       val got = dense.agg(sum("value")).head().getDouble(0)
       val expected = events.map(_._5).sum
       math.abs(got - expected) / expected < 1e-9
@@ -105,7 +105,7 @@ object PropertySpec extends Properties("graft.stages") {
       val idx = stayIdxDf(stays)
       val dense = Stages.densify(
         Stages.combine(Stages.bucketize(Stages.intervalExpand(iv, step), idx, step),
-          SumCombine), ffill = true)
+          SumCombine), Stages.ForwardFill)
       dense.groupBy("stay_id", "feature_id").count()
         .join(idx.select("stay_id", "total_windows"), "stay_id")
         .where(col("count") =!= col("total_windows") + 1)
