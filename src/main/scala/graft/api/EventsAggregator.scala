@@ -18,7 +18,7 @@ import graft.model._
   *    pushdown to the CSV scan via Catalyst.
   *  - the whole pipeline is one declarative Spark plan per source: scan →
   *    project → [interval expand] → broadcast stay join → bucketize → one
-  *    hash aggregation → densify → sink. No per-group Python, no driver
+  *    exchange → combine → densify → sink. No per-group Python, no driver
   *    loops over facts.
   *
   * @param stayIds    stays to keep and to emit (dummy matrices for stays with
@@ -47,22 +47,26 @@ class EventsAggregator(
     spark.read.schema(schema).option("header", "true").csv(s"$mimicPath/icu/$fileName")
 
   /** Stay dimension with epoch times and window counts, filtered to
-    * `stayIds`; small — broadcast at every use.
+    * `stayIds`; small — broadcast at every use. Collected once into a local
+    * relation, so icustays.csv is scanned once per aggregator and every
+    * pipeline's stay join and CSV header rows read the driver's copy.
     */
   lazy val stayIndex: DataFrame = {
-    val idx = Stages.stayIndex(readCsv("icustays.csv", graft.schemas.MimicSchemas.icustays),
+    val idx0 = Stages.stayIndex(readCsv("icustays.csv", graft.schemas.MimicSchemas.icustays),
       timestepSeconds)
-    stayIds.fold(idx)(ids => Stages.membershipFilter(idx, "stay_id", ids))
+    val idx = stayIds.fold(idx0)(ids => Stages.membershipFilter(idx0, "stay_id", ids))
+    spark.createDataFrame(java.util.Arrays.asList(idx.collect(): _*), idx.schema)
   }
 
   /** Long-form `(stay_id, feature_id, tidx, value)` densified series for one
-    * source — the engine's canonical output (the CSV sink writes it unexploded).
+    * source — the engine's canonical output (the CSV sink densifies the same
+    * cells in its writer).
     */
   def aggregate(source: EventSource): DataFrame =
-    Stages.densify(combined(source), fill)
+    Stages.densify(Stages.combine(bucketized(source), source.combiner), fill)
 
-  /** One source's combined cells `(stay_id, feature_id, tidx, value, total_windows)`. */
-  private def combined(source: EventSource): DataFrame = {
+  /** One source's bucketized events `(stay_id, feature_id, tidx, value, total_windows)`. */
+  private def bucketized(source: EventSource): DataFrame = {
     val raw = readCsv(source.fileName, source.schema)
     val keyed0 = raw
       .withColumn("feature_id", source.featureExpr.cast("long"))
@@ -85,8 +89,7 @@ class EventsAggregator(
           .select("stay_id", "event_epoch_time", "feature_id", "value")
     }
 
-    Stages.combine(Stages.bucketize(pointed, stayIndex, timestepSeconds),
-      source.combiner)
+    Stages.bucketize(pointed, stayIndex, timestepSeconds)
   }
 
   /** Run all sources: write matrices + dummy files + manifest (K1-K3).
@@ -105,11 +108,7 @@ class EventsAggregator(
     // source pipelines are independent (separate input files, separate
     // output trees) — submit them from parallel threads so one source's
     // sink/scan phases overlap another's compute; Spark schedules
-    // concurrent jobs from multiple threads natively. The stay dimension is
-    // materialized ONCE up front (persist + count): every pipeline reads it
-    // in its bucketize join and again for the CSV sink's header rows, which
-    // would otherwise rescan icustays.csv per use.
-    stayIndex.persist().count()
+    // concurrent jobs from multiple threads natively.
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       math.max(1, math.min(sources.size, 4)))
     implicit val ec: scala.concurrent.ExecutionContext =
@@ -119,8 +118,8 @@ class EventsAggregator(
     import scala.util.{Failure, Try}
     val writeOne: EventSource => Unit = sink match {
       case graft.io.CsvMatrixSink => source =>
-        MatrixWriter.writeSeries(Stages.densifySeries(combined(source), fill),
-          stayIndex, dstPath, source.name)
+        MatrixWriter.writeMatrices(bucketized(source), stayIndex, source.combiner, fill,
+          dstPath, source.name)
       case graft.io.LongParquetSink => source =>
         MatrixWriter.writeLongForm(aggregate(source), dstPath, source.name)
     }
@@ -138,10 +137,7 @@ class EventsAggregator(
       }
       if (sink == graft.io.LongParquetSink)
         MatrixWriter.writeStayIndex(stayIndex, dstPath)
-    } finally {
-      pool.shutdown()
-      stayIndex.unpersist()
-    }
+    } finally pool.shutdown()
     MatrixWriter.writeManifest(spark, dstPath, timestepSeconds, ffill,
       fill.name, sources.map(_.name), (System.nanoTime() - t0) / 1e9)
   }

@@ -20,9 +20,14 @@ object Stages {
     * column to epoch seconds. Reference:
     * `/root/reference/src/mimic2ts/__init__.py:84-91` (strict format) and
     * `:113-115,301-306,416-421` (event columns, same data).
+    *
+    * A string that does not parse is null, also under ANSI mode (where
+    * `to_timestamp` aborts the query with `CANNOT_PARSE_TIMESTAMP`):
+    * [[bucketize]] drops an event with a null time and [[stayIndex]] a stay
+    * with a null `intime` or `outtime`.
     */
   def epochSeconds(c: Column): Column =
-    unix_timestamp(to_timestamp(c, TimestampFmt))
+    unix_timestamp(try_to_timestamp(c, lit(TimestampFmt)))
 
   /** Stay dimension: `icustays → (stay_id, intime, outtime, total_windows)`
     * with times in epoch seconds and
@@ -31,6 +36,10 @@ object Stages {
     * This replicates the implementation (`__init__.py:93-98`), not the
     * reference's own test which asserts `ceil` (SURVEY.md §2.5 W2 documents
     * the divergence; the goldens encode `floor(...)+1`).
+    *
+    * A stay whose `intime` or `outtime` is missing or does not parse has a
+    * null `total_windows`; it is left out, so no reader of the index meets
+    * a null width, and its events drop in [[bucketize]]'s join.
     *
     * The result is small (one row per stay) and is broadcast everywhere it is
     * joined — never shuffled.
@@ -42,6 +51,7 @@ object Stages {
         epochSeconds(col("outtime")).as("outtime"))
       .withColumn("total_windows",
         floor((col("outtime") - col("intime")) / lit(timestepSeconds)).cast("long"))
+      .where(col("total_windows").isNotNull)
 
   /** Interval → point expansion for interval-typed sources (inputevents,
     * procedureevents). One mark per spanned window:
@@ -78,13 +88,16 @@ object Stages {
     * The stay index is broadcast (it is the small dimension side); a stay
     * missing from `icustays` is dropped by the inner join — the reference
     * raises `KeyError` there (`__init__.py:151-152`), so no silent semantic
-    * widening either way.
+    * widening either way. An event with a null time is dropped before the
+    * clamp, which would otherwise put it in window 0 (`greatest` skips a
+    * null).
     *
     * Input: `(stay_id, event_epoch_time, feature_id, value)`.
     * Output: `(stay_id, feature_id, tidx, value, total_windows)`.
     */
   def bucketize(events: DataFrame, stayIdx: DataFrame, timestepSeconds: Long): DataFrame =
     events
+      .where(col("event_epoch_time").isNotNull)
       .join(broadcast(stayIdx.select("stay_id", "intime", "total_windows")),
         Seq("stay_id"), "inner")
       .withColumn("tidx",
@@ -98,7 +111,9 @@ object Stages {
     * groupby-apply pyramid (`__init__.py:213-214,170-173,119-123`) dissolved
     * into ONE multi-key hash aggregation = one shuffle with map-side partial
     * aggregation. `avg`/`sum` ignore nulls exactly like pandas skipna
-    * (SURVEY.md §2.4 A3).
+    * (SURVEY.md §2.4 A3). An input already hash-partitioned by `stay_id`
+    * (the CSV sink's, [[graft.io.MatrixWriter.writeMatrices]]) satisfies the
+    * grouping's distribution, so the aggregation adds no exchange.
     */
   def combine(bucketized: DataFrame, combiner: graft.model.Combiner): DataFrame =
     bucketized
@@ -119,40 +134,33 @@ object Stages {
     */
   case object LinearInterp extends FillMode { val name = "interp" }
 
-  /** [[densifySeries]] `posexplode`d back to the long form
-    * `(stay_id, feature_id, tidx, value)`: one row per `tidx ∈
-    * 0..total_windows` for every observed (stay, feature) pair.
-    */
-  def densify(combined: DataFrame, mode: FillMode): DataFrame =
-    densifySeries(combined, mode)
-      .select(col("stay_id"), col("feature_id"), posexplode(col("series")))
-      .select(col("stay_id"), col("feature_id"), col("pos").cast("long").as("tidx"),
-        col("col").as("value"))
-
   /** Densify the time axis, gaps filled per [[FillMode]] — the reference's
     * `reindex(0..tidx_max)` + `fillna` (`__init__.py:124-136`). Input: the
-    * combined long form; output: one row per observed (stay, feature) pair,
-    * `(stay_id, feature_id, total_windows, series)` with `series(t)` the
-    * value at `tidx = t ∈ 0..total_windows`.
+    * combined long form; output: the long form
+    * `(stay_id, feature_id, tidx, value)` with one row per `tidx ∈
+    * 0..total_windows` for every observed (stay, feature) pair.
     *
     * One hash aggregation collects each pair's `(tidx, value)` cells; the
     * compiled [[graft.functions.DensifyFill]] kernel turns them into the
     * dense, filled series in O(total_windows + cells) — no spine join, no
-    * Window. A cell whose combined value is null (e.g. the mean of an
-    * all-null window) is a gap in every mode, the same as a window with no
-    * cell.
+    * Window — and `posexplode` lays it out. A cell whose combined value is
+    * null (e.g. the mean of an all-null window) is a gap in every mode, the
+    * same as a window with no cell.
     *
     * The kernel allocates `total_windows + 1` doubles per series, and
     * nothing here bounds `total_windows`: a stay with a corrupt `outtime`
     * makes one huge series (capping windows per stay is ROADMAP D3).
     */
-  def densifySeries(combined: DataFrame, mode: FillMode): DataFrame =
+  def densify(combined: DataFrame, mode: FillMode): DataFrame =
     combined
       .groupBy("stay_id", "feature_id")
       .agg(collect_list(struct(col("tidx"), col("value"))).as("cells"),
         first("total_windows").as("total_windows"))
-      .select(col("stay_id"), col("feature_id"), col("total_windows"),
+      .select(col("stay_id"), col("feature_id"),
         densify_fill(col("cells"), col("total_windows"), mode.name).as("series"))
+      .select(col("stay_id"), col("feature_id"), posexplode(col("series")))
+      .select(col("stay_id"), col("feature_id"), col("pos").cast("long").as("tidx"),
+        col("col").as("value"))
 
   /** Keep the rows whose `column` is in `keep`; Catalyst pushes the `isin`
     * to the scan and hashes a long list (`OptimizeIn` → `InSet`). Null keys

@@ -81,7 +81,7 @@ object DensifyFillKernel {
   }
 
   // per-window cell state while scattering
-  private val Absent: Byte = 0
+  val Absent: Byte = 0
   private val NullCell: Byte = 1
   private val Observed: Byte = 2
 
@@ -96,16 +96,32 @@ object DensifyFillKernel {
       val cell = cells.getStruct(i, 2)
       if (cell.isNullAt(0))
         throw new IllegalArgumentException("densify_fill: null tidx in a cell")
-      val t = cell.getLong(0)
-      if (t >= 0 && t < n) {
-        val w = t.toInt
-        if (state(w) != Absent) throw new IllegalArgumentException(
-          s"densify_fill: duplicate tidx $t in one series")
-        if (cell.isNullAt(1)) state(w) = NullCell
-        else { state(w) = Observed; out(w) = cell.getDouble(1) }
-      }
+      scatter(out, state, n, cell.getLong(0), cell.isNullAt(1),
+        if (cell.isNullAt(1)) 0.0 else cell.getDouble(1))
       i += 1
     }
+    fill(out, state, n, mode)
+    UnsafeArrayData.fromPrimitiveArray(out)
+  }
+
+  /** Place one cell on the series `out(0 until n)`, whose `state` starts
+    * [[Absent]] and `out` 0.0: a cell outside `0 until n` is ignored, a
+    * null value marks a gap, a second cell for one window raises.
+    */
+  def scatter(out: Array[Double], state: Array[Byte], n: Int, t: Long,
+      isNull: Boolean, value: Double): Unit =
+    if (t >= 0 && t < n) {
+      val w = t.toInt
+      if (state(w) != Absent) throw new IllegalArgumentException(
+        s"densify_fill: duplicate tidx $t in one series")
+      if (isNull) state(w) = NullCell
+      else { state(w) = Observed; out(w) = value }
+    }
+
+  /** Fill the gaps of a scattered series `out(0 until n)` in place, per
+    * `mode` (see [[DensifyFill]]).
+    */
+  def fill(out: Array[Double], state: Array[Byte], n: Int, mode: Int): Unit =
     if (mode != Zero) {
       // prev: the last observation so far (-1 = none, the leading gap
       // keeps 0.0); each gap between prev and the next observation t is
@@ -129,6 +145,4 @@ object DensifyFillKernel {
       }
       if (prev >= 0) java.util.Arrays.fill(out, prev + 1, n, out(prev))
     }
-    UnsafeArrayData.fromPrimitiveArray(out)
-  }
 }

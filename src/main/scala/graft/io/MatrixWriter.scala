@@ -5,8 +5,13 @@ import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.array.ByteArrayMethods
+
+import graft.etl.Stages
+import graft.functions.DensifyFillKernel
+import graft.model.Combiner
 
 /** Hadoop `Configuration` is not `Serializable`; this wrapper ships it to
   * executor tasks via its `Writable` form (public Hadoop API) so tasks can
@@ -39,15 +44,25 @@ case object LongParquetSink extends SinkMode
   * `feature_id`, cells = combined value with 0.0 fill. A requested stay with
   * no events still gets a header-only file (`__init__.py:218-225`).
   *
-  * Spark-first shape ([[writeSeries]]): each densify-kernel series becomes
-  * one CSV line as data (`concat_ws` + `array_join`, codegen'd), one header
-  * row per `stayIdx` stay is unioned in, and ONE job writes both:
-  * `repartition($"stay_id")` gives a stay's rows to one task, the sort puts
-  * its header first, and `foreachPartition` opens the file at the header and
-  * streams the lines after it. An eventless stay has a header row and no
-  * lines, so K2's header-only file needs no anti-join and no second job. No
-  * global pivot — width is a per-stay function, so a single wide schema
-  * cannot exist (SURVEY.md §1.3) — and only executor tasks touch the facts.
+  * Spark-first shape ([[writeMatrices]]), one exchange and one streaming
+  * pass per source: one header row per stay-index stay (`tidx = -1`, which
+  * bucketize never emits) is unioned into the bucketized events, and ONE
+  * `repartition($"stay_id")` gives each stay's rows to one task. The
+  * combine aggregation reuses that partitioning, `sortWithinPartitions(
+  * stay_id, feature_id, tidx)` puts each stay's header first and each
+  * (stay, feature) run's cells in window order, and a [[CsvPartitionWriter]]
+  * streams the stays: it opens a stay's file at its header, densifies and
+  * fills each feature run in reused arrays with the
+  * [[graft.functions.DensifyFillKernel]] walk, and writes the line straight
+  * to the file. An eventless stay has a header row and no cells, so K2's
+  * header-only file needs no anti-join and no second job. No global pivot —
+  * width is a per-stay function, so a single wide schema cannot exist
+  * (SURVEY.md §1.3) — and only executor tasks touch the facts.
+  *
+  * The header rows share the events' exchange on purpose: under a `Union`
+  * of two separately repartitioned sides, AQE coalesces each side's
+  * partitions on its own, so a stay's header and its lines can land in
+  * different tasks.
   *
   * `dstPath` may carry any supported scheme: remote schemes (hdfs://,
   * s3a://, ...) write through the Hadoop `FileSystem` resolved from the
@@ -56,7 +71,8 @@ case object LongParquetSink extends SinkMode
   * of whichever machine ran the task). The local scheme takes a direct
   * `java.nio` branch: without libhadoop (NativeCodeLoader warns), Hadoop's
   * RawLocalFileSystem applies permissions by EXEC'ING a `chmod` process per
-  * created file — measured ~5 ms/file, +60% wall on a 2001-file run.
+  * created file — measured ~5 ms/file, +60% wall on a 2001-file run. Only
+  * a remote destination ships the Hadoop configuration to the tasks.
   *
   * For >100k stays the per-stay-file layout itself is the bottleneck
   * (millions of small files); [[writeLongForm]] is the scale alternative.
@@ -76,78 +92,78 @@ object MatrixWriter {
     else None
   }
 
+  private def isLocal(path: String): Boolean = schemeOf(path) match {
+    case None | Some("file") => true
+    case Some(_) => false
+  }
+
   /** UTF-8 buffered writer at `fullPath`, parents created; scheme dispatch
-    * per the class note above.
+    * per the class note above. `conf` is read for remote schemes only.
     */
-  private def openWriter(conf: Configuration, fullPath: String): BufferedWriter =
-    schemeOf(fullPath) match {
-      case None | Some("file") =>
-        val p =
-          if (fullPath.startsWith("file:"))
-            java.nio.file.Paths.get(new java.net.URI(fullPath))
-          else java.nio.file.Paths.get(fullPath)
-        if (p.getParent != null) java.nio.file.Files.createDirectories(p.getParent)
-        java.nio.file.Files.newBufferedWriter(p, StandardCharsets.UTF_8)
-      case Some(_) =>
-        // no setWriteChecksum here: Path.getFileSystem returns the
-        // JVM-cached shared instance, and mutating it would disable
-        // client checksums for every other writer in the process (.crc
-        // sidecars only afflict the LOCAL ChecksumFileSystem, which the
-        // java.nio branch bypasses entirely)
-        val fs = new Path(fullPath).getFileSystem(conf)
-        new BufferedWriter(new OutputStreamWriter(
-          fs.create(new Path(fullPath), true), StandardCharsets.UTF_8))
+  private[io] def openWriter(conf: Configuration, fullPath: String): BufferedWriter =
+    if (isLocal(fullPath)) {
+      val p =
+        if (fullPath.startsWith("file:"))
+          java.nio.file.Paths.get(new java.net.URI(fullPath))
+        else java.nio.file.Paths.get(fullPath)
+      if (p.getParent != null) java.nio.file.Files.createDirectories(p.getParent)
+      java.nio.file.Files.newBufferedWriter(p, StandardCharsets.UTF_8)
+    } else {
+      // no setWriteChecksum here: Path.getFileSystem returns the
+      // JVM-cached shared instance, and mutating it would disable
+      // client checksums for every other writer in the process (.crc
+      // sidecars only afflict the LOCAL ChecksumFileSystem, which the
+      // java.nio branch bypasses entirely)
+      val fs = new Path(fullPath).getFileSystem(conf)
+      new BufferedWriter(new OutputStreamWriter(
+        fs.create(new Path(fullPath), true), StandardCharsets.UTF_8))
     }
 
-  /** Long-form adapter over [[writeSeries]]: regroups `(stay_id,
-    * feature_id, tidx, value)` rows into one `tidx`-ordered series per
-    * (stay, feature). Rows of stays missing from `stayIdx` are not written.
+  /** The run's CSV sink for one source: `bucketized` events
+    * `(stay_id, feature_id, tidx, value)` are combined per (stay, feature,
+    * window) with `combiner`, densified and filled per `fill`, and written
+    * with one header per `stayIdx` (`stay_id`, `total_windows`) stay — one
+    * exchange, one job.
+    */
+  def writeMatrices(bucketized: DataFrame, stayIdx: DataFrame, combiner: Combiner,
+      fill: Stages.FillMode, dstPath: String, sourceName: String): Unit =
+    writeSorted(Stages.combine(withHeaders(bucketized, stayIdx), combiner),
+      fill, dstPath, sourceName)
+
+  /** Write already combined `(stay_id, feature_id, tidx, value)` cells, at
+    * most one per (stay, feature, window), densified and filled per `fill`.
+    */
+  def writeCombined(combined: DataFrame, stayIdx: DataFrame, fill: Stages.FillMode,
+      dstPath: String, sourceName: String): Unit =
+    writeSorted(withHeaders(combined, stayIdx), fill, dstPath, sourceName)
+
+  /** Long-form adapter: writes the dense `(stay_id, feature_id, tidx,
+    * value)` rows of [[graft.api.EventsAggregator.aggregate]] as they are
+    * (the zero fill of a dense series is the identity). Every row's stay
+    * must be in `stayIdx`; a row of any other stay fails the write.
     */
   def write(densified: DataFrame, stayIdx: DataFrame, dstPath: String,
       sourceName: String): Unit =
-    writeSeries(
-      densified.groupBy("stay_id", "feature_id")
-        .agg(array_sort(collect_list(struct(col("tidx"), col("value"))))
-          .getField("value").as("series")),
-      stayIdx, dstPath, sourceName)
+    writeCombined(densified, stayIdx, Stages.ZeroFill, dstPath, sourceName)
 
-  /** One matrix line per `(stay_id, feature_id, series: array<double>)` row
-    * and one header per `stayIdx` (`stay_id`, `total_windows`) stay. */
-  def writeSeries(series: DataFrame, stayIdx: DataFrame, dstPath: String,
-      sourceName: String): Unit = {
-    val hconf = new SerializableHadoopConf(
-      series.sparkSession.sparkContext.hadoopConfiguration)
-    // kind 0 = header row, 1 = matrix line: a null feature_id is a real
-    // (unparseable-itemid) line, so it cannot mark the header
-    val lines = series
-      .select(col("stay_id"), lit(1).as("kind"), col("feature_id"),
-        concat_ws(",", col("feature_id").cast("string"),
-          array_join(col("series").cast("array<string>"), ",")).as("line"))
-    stayIdx.select(col("stay_id"), lit(0).as("kind"), col("total_windows"))
-      .unionByName(lines, allowMissingColumns = true)
+  /** `cells` plus one `tidx = -1` header row per `stayIdx` stay, in one
+    * hash partitioning by `stay_id`. */
+  private def withHeaders(cells: DataFrame, stayIdx: DataFrame): DataFrame =
+    stayIdx.select(col("stay_id"), lit(null).cast("long").as("feature_id"),
+        lit(-1L).as("tidx"), lit(null).cast("double").as("value"), col("total_windows"))
+      .unionByName(cells.select("stay_id", "feature_id", "tidx", "value"),
+        allowMissingColumns = true)
       .repartition(col("stay_id"))
-      .sortWithinPartitions("stay_id", "kind", "feature_id")
-      .foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>
-        var openStay = Long.MinValue
-        var out: BufferedWriter = null
-        def close(): Unit = if (out != null) { out.close(); out = null }
-        try {
-          rows.foreach { r =>
-            val stay = r.getLong(0)
-            if (r.getInt(1) == 0) {
-              close()
-              openStay = stay
-              out = openWriter(hconf.value,
-                s"$dstPath/$stay/${sourceName}_features.csv")
-              out.write(header(r.getLong(2)))
-              out.newLine()
-            } else if (out != null && stay == openStay) {
-              out.write(r.getString(4))
-              out.newLine()
-            }
-          }
-        } finally close()
-      }
+
+  private def writeSorted(cells: DataFrame, fill: Stages.FillMode, dstPath: String,
+      sourceName: String): Unit = {
+    val hconf =
+      if (isLocal(dstPath)) None
+      else Some(new SerializableHadoopConf(cells.sparkSession.sparkContext.hadoopConfiguration))
+    cells.select("stay_id", "feature_id", "tidx", "value", "total_windows")
+      .sortWithinPartitions("stay_id", "feature_id", "tidx")
+      .foreachPartition(new CsvPartitionWriter(dstPath, sourceName,
+        DensifyFillKernel.modeCode(fill.name), hconf))
   }
 
   /** Long-form partitioned-parquet sink — the >100k-stays alternative to
@@ -179,7 +195,7 @@ object MatrixWriter {
       .coalesce(1) // dimension-sized
       .write.mode("overwrite").parquet(s"$dstPath/long_stays")
 
-  private def header(totalWindows: Long): String =
+  private[io] def header(totalWindows: Long): String =
     (0L to totalWindows).mkString("feature_id,", ",", "")
 
   /** K3: run manifest, mirroring `/root/reference/src/mimic2ts/__main__.py:83-91`
@@ -189,8 +205,7 @@ object MatrixWriter {
   def writeManifest(spark: org.apache.spark.sql.SparkSession, dstPath: String,
       timestepSeconds: Long, ffill: Boolean, fillPolicy: String,
       sources: Seq[String], runtimeSec: Double): Unit = {
-    val out = openWriter(spark.sparkContext.hadoopConfiguration,
-      s"$dstPath/readme.txt")
+    val out = openWriter(spark.sparkContext.hadoopConfiguration, s"$dstPath/readme.txt")
     try out.write(
       s"""graft spark-native events aggregator
          |version: 0.1.0
@@ -201,5 +216,79 @@ object MatrixWriter {
          |sources: ${sources.mkString(", ")}
          |""".stripMargin)
     finally out.close()
+  }
+}
+
+/** The [[MatrixWriter]] task body over rows `(stay_id, feature_id, tidx,
+  * value, total_windows)` sorted by `(stay_id, feature_id, tidx)`: a
+  * `tidx = -1` row opens its stay's file and writes the header of width
+  * `total_windows + 1`; each following (feature, window) run of cells is
+  * scattered into arrays reused across runs, filled per `mode` with the
+  * [[DensifyFillKernel]] walk and written as one line. A cell whose stay
+  * has no open header fails the task: no input of [[MatrixWriter]] reaches
+  * that case, and writing nothing for it would lose the line silently.
+  */
+private final class CsvPartitionWriter(dstPath: String, sourceName: String, mode: Int,
+    hconf: Option[SerializableHadoopConf]) extends (Iterator[Row] => Unit) with Serializable {
+
+  override def apply(rows: Iterator[Row]): Unit = {
+    var out: java.io.BufferedWriter = null
+    var stay = 0L
+    var n = 0 // windows of the open stay
+    var values = new Array[Double](0)
+    var state = new Array[Byte](0)
+    var inRun = false
+    var runFeature: java.lang.Long = null
+
+    def endRun(): Unit = if (inRun) {
+      DensifyFillKernel.fill(values, state, n, mode)
+      if (runFeature != null) { out.write(runFeature.toString); out.write(',') }
+      var t = 0
+      while (t < n) {
+        if (t > 0) out.write(',')
+        val v = values(t)
+        // +0.0, the gap fill, is most of the cells
+        out.write(if (java.lang.Double.doubleToRawLongBits(v) == 0L) "0.0"
+          else java.lang.Double.toString(v))
+        t += 1
+      }
+      out.newLine()
+      inRun = false
+    }
+    def close(): Unit = if (out != null) { out.close(); out = null }
+
+    try {
+      rows.foreach { r =>
+        val rowStay = r.getLong(0)
+        val tidx = r.getLong(2)
+        if (tidx == -1L) {
+          endRun(); close()
+          stay = rowStay
+          val totalWindows = r.getLong(4)
+          require(totalWindows < ByteArrayMethods.MAX_ROUNDED_ARRAY_LENGTH,
+            s"stay $stay: total_windows $totalWindows exceeds the array limit")
+          n = math.max(totalWindows + 1, 0L).toInt
+          if (values.length < n) { values = new Array[Double](n); state = new Array[Byte](n) }
+          out = MatrixWriter.openWriter(hconf.map(_.value).orNull,
+            s"$dstPath/$stay/${sourceName}_features.csv")
+          out.write(MatrixWriter.header(totalWindows))
+          out.newLine()
+        } else {
+          if (out == null || rowStay != stay) throw new IllegalStateException(
+            s"$sourceName: cells of stay $rowStay reached the writer without its header row")
+          val feature: java.lang.Long = if (r.isNullAt(1)) null else r.getLong(1)
+          if (!inRun || feature != runFeature) {
+            endRun()
+            java.util.Arrays.fill(values, 0, n, 0.0)
+            java.util.Arrays.fill(state, 0, n, DensifyFillKernel.Absent)
+            runFeature = feature
+            inRun = true
+          }
+          DensifyFillKernel.scatter(values, state, n, tidx, r.isNullAt(3),
+            if (r.isNullAt(3)) 0.0 else r.getDouble(3))
+        }
+      }
+      endRun()
+    } finally close()
   }
 }

@@ -99,18 +99,15 @@ object StreamingAggregator {
       }
 
   /** Fold the partial store and write the per-stay matrices through the
-    * batch run's own CSV path ([[graft.etl.Stages.densifySeries]] +
-    * [[graft.io.MatrixWriter.writeSeries]]) — a consumer
-    * cannot tell whether a matrix came from the batch or the streaming
-    * path. `stayIndex` needs (stay_id, intime, total_windows).
+    * batch run's own CSV writer ([[graft.io.MatrixWriter.writeCombined]]) —
+    * a consumer cannot tell whether a matrix came from the batch or the
+    * streaming path. `stayIndex` needs (stay_id, total_windows) and must
+    * hold every stay of the store, as the one [[partials]] joined does.
     */
   def materializeMatrices(spark: SparkSession, storePath: String,
       stayIndex: DataFrame, dstPath: String, sourceName: String,
-      combiner: Combiner, fill: graft.etl.Stages.FillMode): Unit = {
-    val combined = finalizeView(spark.read.parquet(storePath), combiner)
-      .join(broadcast(stayIndex.select("stay_id", "total_windows")),
-        Seq("stay_id"), "inner")
-    graft.io.MatrixWriter.writeSeries(graft.etl.Stages.densifySeries(combined, fill),
-      stayIndex, dstPath, sourceName)
-  }
+      combiner: Combiner, fill: graft.etl.Stages.FillMode): Unit =
+    graft.io.MatrixWriter.writeCombined(
+      finalizeView(spark.read.parquet(storePath), combiner),
+      stayIndex, fill, dstPath, sourceName)
 }

@@ -103,6 +103,14 @@ class EngineSpec extends AnyFunSuite {
   private def readCsvLines(p: Path): Seq[String] =
     Files.readAllLines(p).asScala.toSeq
 
+  /** Every matrix file under `dir`, by relative path, with its bytes. */
+  private def tree(dir: Path): Map[String, String] =
+    Files.walk(dir).iterator.asScala
+      .filter(p => p.getFileName.toString.endsWith("_features.csv"))
+      .map(p => dir.relativize(p).toString ->
+        new String(Files.readAllBytes(p), StandardCharsets.UTF_8))
+      .toMap
+
   /** A fresh copy of the fixtures with `extra` (file, row) pairs appended. */
   private def fixturesWith(extra: (String, String)*): Path = {
     val root = Files.createTempDirectory("graft-mimic-x")
@@ -376,12 +384,6 @@ class EngineSpec extends AnyFunSuite {
     // an unparseable itemid is a null feature_id: still written, sorted first
     val root = fixturesWith("chartevents.csv" ->
       "2,20,2,2020-01-01 01:10:00,2020-01-01 01:11:00,x,2,2.0,bpm,0")
-    def tree(dir: Path): Map[String, String] =
-      Files.walk(dir).iterator.asScala
-        .filter(p => p.getFileName.toString.endsWith("_features.csv"))
-        .map(p => dir.relativize(p).toString ->
-          new String(Files.readAllBytes(p), StandardCharsets.UTF_8))
-        .toMap
     for (mode <- Seq(ZeroFill, ForwardFill, LinearInterp)) {
       val viaRun = Files.createTempDirectory("graft-out-run")
       val viaWrite = Files.createTempDirectory("graft-out-write")
@@ -452,5 +454,133 @@ class EngineSpec extends AnyFunSuite {
     val ids = readCsvLines(dst.resolve("1/chartevents_features.csv")).tail
       .map(_.takeWhile(_ != ','))
     assert(ids == Seq("100", "200"))
+  }
+
+  test("CSV sink: headers and lines meet however AQE coalesces the exchange") {
+    // events for stays 1 and 2 in both point sources: under these confs a
+    // header side with its own exchange coalesces to one partition and the
+    // event side to two, so headers and lines would meet only by chance
+    val extra = for (m <- 0 until 60 by 2) yield Seq(
+      "chartevents.csv" -> f"1,10,1,2020-01-01 04:$m%02d:00,2020-01-01 04:$m%02d:30,200,$m,$m.0,bpm,0",
+      "chartevents.csv" -> f"2,20,2,2020-01-01 01:$m%02d:00,2020-01-01 01:$m%02d:30,100,$m,$m.0,bpm,0",
+      "outputevents.csv" -> f"1,10,1,2020-01-01 02:$m%02d:00,2020-01-01 02:$m%02d:30,400,$m.5,mL",
+      "outputevents.csv" -> f"2,20,2,2020-01-01 01:$m%02d:00,2020-01-01 01:$m%02d:30,400,$m.5,mL")
+    val root = fixturesWith(extra.flatten: _*)
+    val byDefault = Files.createTempDirectory("graft-out-conf0")
+    new EventsAggregator(spark, root.toString, byDefault.toString).run()
+    val hostile = Seq(
+      "spark.sql.adaptive.coalescePartitions.initialPartitionNum" -> "50",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "256",
+      "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1")
+    val saved = hostile.map { case (k, _) => k -> spark.conf.getOption(k) }
+    val coalesced = Files.createTempDirectory("graft-out-conf1")
+    try {
+      hostile.foreach { case (k, v) => spark.conf.set(k, v) }
+      new EventsAggregator(spark, root.toString, coalesced.toString).run()
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+    val want = tree(byDefault)
+    assert(want.size == 12 && want("2/outputevents_features.csv").linesIterator.size == 2)
+    assert(tree(coalesced) == want)
+  }
+
+  test("CSV sink: each source's write runs one shuffle exchange and no object aggregate") {
+    import java.util.concurrent.ConcurrentLinkedQueue
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    object plans extends AdaptiveSparkPlanHelper
+    val root = Files.createTempDirectory("graft-mimic-plan")
+    writeFixtures(root)
+    val dst = Files.createTempDirectory("graft-out-plan")
+    val writes = new ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (funcName == "foreachPartition" && plans.collect(qe.executedPlan) {
+              case scan: FileSourceScanExec => scan.relation.location.rootPaths
+            }.flatten.exists(_.toString.contains(root.toString)))
+          writes.add(qe.executedPlan)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      new EventsAggregator(spark, root.toString, dst.toString).run()
+      // listener events arrive asynchronously
+      val deadline = System.nanoTime() + 30e9.toLong
+      while (writes.size < Sources.all.size && System.nanoTime() < deadline) Thread.sleep(10)
+    } finally spark.listenerManager.unregister(listener)
+    assert(writes.size == Sources.all.size)
+    writes.asScala.foreach { p =>
+      val shuffles = plans.collect(p) { case e: ShuffleExchangeExec => e }
+      assert(shuffles.size == 1, s"$p")
+      assert(plans.collect(p) { case a: ObjectHashAggregateExec => a }.isEmpty, s"$p")
+    }
+  }
+
+  test("CSV sink: a cell whose stay has no header row fails the write") {
+    import org.apache.spark.sql.functions.col
+    val root = Files.createTempDirectory("graft-mimic-nohdr")
+    writeFixtures(root)
+    val dst = Files.createTempDirectory("graft-out-nohdr")
+    val agg = new EventsAggregator(spark, root.toString, dst.toString)
+    val e = intercept[org.apache.spark.SparkException] {
+      graft.io.MatrixWriter.write(agg.aggregate(Sources.outputevents),
+        agg.stayIndex.where(col("stay_id") =!= 2L), dst.toString, "outputevents")
+    }
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("stay 2 reached the writer without")))
+  }
+
+  test("point sources: an empty or malformed event time drops the event, aborts nothing") {
+    // an empty charttime used to clamp into window 0 (greatest skips the
+    // null), and a malformed one aborted the run under ANSI
+    val root = fixturesWith(
+      "chartevents.csv" -> "1,10,1,,2020-01-01 00:31:00,100,50,50.0,bpm,0",
+      "chartevents.csv" -> "1,10,1,2020-01-01 0x:30:00,2020-01-01 00:31:00,100,50,50.0,bpm,0",
+      "outputevents.csv" -> "2,20,2,2020-13-01 00:10:00,2020-01-01 00:11:00,400,50.0,mL")
+    val dst = Files.createTempDirectory("graft-out-badpt")
+    new EventsAggregator(spark, root.toString, dst.toString,
+      sources = Seq(Sources.chartevents, Sources.outputevents)).run()
+    val r100 = readCsvLines(dst.resolve("1/chartevents_features.csv"))(1)
+      .split(",").drop(1).map(_.toDouble)
+    assert(math.abs(r100(0) - 11.0 / 3) < 1e-12)
+    val r400 = readCsvLines(dst.resolve("2/outputevents_features.csv"))(1)
+      .split(",").drop(1).map(_.toDouble)
+    assert(r400.toSeq == Seq(10.0, 0.0, 0.0, 0.0, 2.0))
+  }
+
+  test("interval sources: a malformed start or end time drops the interval, aborts nothing") {
+    val root = fixturesWith(
+      "inputevents.csv" -> ("1,10,1,2020-01-01 00:3O:00,2020-01-01 02:30:00,2020-01-01 00:31:00,300," +
+        "6.0,mL,3.0,mL/hour,3,3,Fluids,,Main,Continuous,2.0,100,mL,0,0,0,FinishedRunning,6.0,3.0"),
+      "procedureevents.csv" -> ("1,10,1,2020-01-01 00:50:00,2020-01-01 03:20,2020-01-01 00:51:00,500," +
+        "9.0,min,,,2,2,Ventilation,Continuous,2.0,0,0,FinishedRunning,9.0,"))
+    val dst = Files.createTempDirectory("graft-out-badiv")
+    new EventsAggregator(spark, root.toString, dst.toString,
+      sources = Seq(Sources.inputevents, Sources.procedureevents)).run()
+    val r300 = readCsvLines(dst.resolve("1/inputevents_features.csv"))(1)
+      .split(",").drop(1).map(_.toDouble)
+    assert(r300.toSeq == Seq(1.0, 1.0, 1.0, 2.0, 0.0, 0.0))
+    val r500 = readCsvLines(dst.resolve("1/procedureevents_features.csv"))(1)
+      .split(",").drop(1).map(_.toDouble)
+    assert(r500.toSeq == Seq(3.0, 3.0, 3.0, 0.0, 0.0, 0.0))
+  }
+
+  test("a stay with a malformed intime or outtime is left out, its events too") {
+    val root = fixturesWith(
+      "icustays.csv" -> "4,40,4,MICU,MICU,2020-01-01 00:00:00,2020-01-01 0S:00:00,0.2",
+      "icustays.csv" -> "5,50,5,MICU,MICU,,2020-01-01 03:00:00,0.1",
+      "chartevents.csv" -> "4,40,4,2020-01-01 00:30:00,2020-01-01 00:31:00,100,1,1.0,bpm,0")
+    val dst = Files.createTempDirectory("graft-out-badstay")
+    val agg = new EventsAggregator(spark, root.toString, dst.toString,
+      sources = Seq(Sources.chartevents))
+    assert(agg.stayIndex.collect().map(_.getAs[Long]("stay_id")).toSet == Set(1L, 2L, 3L))
+    agg.run()
+    assert(!Files.exists(dst.resolve("4")) && !Files.exists(dst.resolve("5")))
+    assert(tree(dst).keySet == Set(1, 2, 3).map(s => s"$s/chartevents_features.csv"))
   }
 }
