@@ -66,8 +66,8 @@ object Bench {
       spark.catalog.clearCache()
     }
     // same idea for the bucketize → combine → densify/fill family (the
-    // other expression-heavy generated classes: struct-collect aggregate,
-    // densify_fill generate) — on a half user-slice of real events
+    // combine aggregate's generated classes and the densify walk's
+    // sort and row encoders) — on a half user-slice of real events
     def warmTimeSeries(): Unit = {
       val raw = spark.read.parquet(s"$sfDir/events.parquet")
       val e = raw

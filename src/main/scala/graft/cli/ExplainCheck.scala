@@ -29,10 +29,11 @@ object ExplainCheck {
     "q_join_multiway" -> (Seq("BroadcastHashJoin"), Seq("SortMergeJoin")),
     "q_join_semi" -> (Seq("BroadcastHashJoin", "LeftSemi"), Seq("SortMergeJoin")),
     "q_ts_bucketize" -> (Seq("BroadcastHashJoin"), Seq("CartesianProduct")),
-    // densify/fill is one compiled kernel (DensifyFill) under a Generate:
-    // no Window may come back in any fill mode (nor in ffill/interp below)
-    "q_ts_densify" -> (Seq("Generate", "BroadcastHashJoin", "densify_fill"),
-      Seq("CartesianProduct", "Window")),
+    // densify/fill is one walk over stay-sorted cells (MapPartitions): no
+    // Window and no per-series aggregate may come back in any fill mode
+    // (nor in ffill/interp below)
+    "q_ts_densify" -> (Seq("MapPartitions", "BroadcastHashJoin"),
+      Seq("CartesianProduct", "Window", "ObjectHashAggregate")),
     // signature agg runs as ObjectHashAggregate (typed Aggregator buffers)
     // r16: signatures/shingle arrays are in-row (MinHashSig) — the old
     // per-doc ObjectHashAggregate shuffles are gone and must stay gone
@@ -1165,10 +1166,10 @@ object ExplainCheck {
       Seq("CartesianProduct", "SortMergeJoin", "BroadcastNestedLoopJoin", "Window")),
     "q_ts_combine_sum" -> (Seq("BroadcastHashJoin", "HashAggregate", "Batched: true", "PushedFilters: ["),
       Seq("CartesianProduct", "SortMergeJoin", "BroadcastNestedLoopJoin", "Window")),
-    "q_ts_ffill" -> (Seq("BroadcastHashJoin", "densify_fill", "Generate", "HashAggregate", "ObjectHashAggregate", "Batched: true", "PushedFilters: ["),
-      Seq("CartesianProduct", "SortMergeJoin", "BroadcastNestedLoopJoin", "Window")),
-    "q_ts_interpolate" -> (Seq("BroadcastHashJoin", "densify_fill", "Generate", "HashAggregate", "ObjectHashAggregate", "Batched: true", "PushedFilters: ["),
-      Seq("CartesianProduct", "SortMergeJoin", "BroadcastNestedLoopJoin", "Window")),
+    "q_ts_ffill" -> (Seq("BroadcastHashJoin", "MapPartitions", "HashAggregate", "Batched: true", "PushedFilters: ["),
+      Seq("CartesianProduct", "SortMergeJoin", "BroadcastNestedLoopJoin", "Window", "ObjectHashAggregate")),
+    "q_ts_interpolate" -> (Seq("BroadcastHashJoin", "MapPartitions", "HashAggregate", "Batched: true", "PushedFilters: ["),
+      Seq("CartesianProduct", "SortMergeJoin", "BroadcastNestedLoopJoin", "Window", "ObjectHashAggregate")),
     "q_ts_interval_expand" -> (Seq("BroadcastHashJoin", "Generate", "HashAggregate", "Batched: true", "PushedFilters: ["),
       Seq("CartesianProduct", "SortMergeJoin", "BroadcastNestedLoopJoin", "Window")),
     "q_ts_json_extract" -> (Seq("HashAggregate", "Batched: true"),

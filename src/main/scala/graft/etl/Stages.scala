@@ -1,16 +1,18 @@
 package graft.etl
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 
-import graft.functions.GraftFunctions.densify_fill
+import graft.functions.DensifyFillKernel
 
 /** The core ETL stages, each a pure `DataFrame => DataFrame` transform over
   * the long-form model `(stay_id, feature_id, tidx, value)` (SURVEY.md §1.1).
-  * Every stage is declarative Column algebra — Catalyst fuses the whole chain
-  * (scan → project → broadcast join → partial agg → exchange → final agg)
-  * into a single-shuffle plan with whole-stage codegen; nothing here iterates
-  * rows on the driver.
+  * Every stage but [[densify]] is declarative Column algebra that Catalyst
+  * fuses with whole-stage codegen (scan → project → broadcast join →
+  * partial agg → exchange → final agg); [[densify]] adds one exchange by
+  * stay and walks each task's sorted cells. Nothing here iterates rows on
+  * the driver.
   */
 object Stages {
 
@@ -140,27 +142,42 @@ object Stages {
     * `(stay_id, feature_id, tidx, value)` with one row per `tidx ∈
     * 0..total_windows` for every observed (stay, feature) pair.
     *
-    * One hash aggregation collects each pair's `(tidx, value)` cells; the
-    * compiled [[graft.functions.DensifyFill]] kernel turns them into the
+    * One exchange by `stay_id` and a sort within partitions put each
+    * (stay, feature) pair's cells in one task, in window order; the
+    * [[graft.functions.DensifyFillKernel]] walk turns each run into its
     * dense, filled series in O(total_windows + cells) — no spine join, no
-    * Window — and `posexplode` lays it out. A cell whose combined value is
-    * null (e.g. the mean of an all-null window) is a gap in every mode, the
-    * same as a window with no cell.
+    * Window, no per-pair aggregation buffer — and [[DensifyPartitions]]
+    * lays it out. The output stays clustered by stay and sorted, which
+    * [[graft.io.MatrixWriter.writeLongForm]] relies on. A cell whose
+    * combined value is null (e.g. the mean of an all-null window) is a gap
+    * in every mode, the same as a window with no cell.
     *
-    * The kernel allocates `total_windows + 1` doubles per series, and
+    * The walk allocates `total_windows + 1` doubles per series, and
     * nothing here bounds `total_windows`: a stay with a corrupt `outtime`
     * makes one huge series (capping windows per stay is ROADMAP D3).
     */
-  def densify(combined: DataFrame, mode: FillMode): DataFrame =
-    combined
-      .groupBy("stay_id", "feature_id")
-      .agg(collect_list(struct(col("tidx"), col("value"))).as("cells"),
-        first("total_windows").as("total_windows"))
-      .select(col("stay_id"), col("feature_id"),
-        densify_fill(col("cells"), col("total_windows"), mode.name).as("series"))
-      .select(col("stay_id"), col("feature_id"), posexplode(col("series")))
-      .select(col("stay_id"), col("feature_id"), col("pos").cast("long").as("tidx"),
-        col("col").as("value"))
+  def densify(combined: DataFrame, mode: FillMode): DataFrame = {
+    val in = combined.schema
+    val out = StructType(Seq(in("stay_id"), in("feature_id"),
+      StructField("tidx", LongType, nullable = false),
+      StructField("value", DoubleType, nullable = false)))
+    combined.select("stay_id", "feature_id", "tidx", "value", "total_windows")
+      .repartition(col("stay_id"))
+      .sortWithinPartitions("stay_id", "feature_id", "tidx")
+      .mapPartitions(DensifyPartitions(mode))(Encoders.row(out))
+  }
+
+  /** The task body of [[densify]], a value so that two densify plans of
+    * one mode compare equal: each series of the walk over rows `(stay_id,
+    * feature_id, tidx, value, total_windows)` becomes its
+    * `(stay_id, feature_id, tidx, value)` rows.
+    */
+  final case class DensifyPartitions(mode: FillMode) extends (Iterator[Row] => Iterator[Row]) {
+    override def apply(rows: Iterator[Row]): Iterator[Row] =
+      DensifyFillKernel.walk(rows, DensifyFillKernel.modeCode(mode.name)) { r =>
+        if (r.isNullAt(4)) 0 else DensifyFillKernel.seriesLength(r.getLong(4))
+      }.flatMap(s => Iterator.tabulate(s.n)(t => Row(s.stay, s.feature, t.toLong, s.values(t))))
+  }
 
   /** Keep the rows whose `column` is in `keep`; Catalyst pushes the `isin`
     * to the scan and hashes a long list (`OptimizeIn` → `InSet`). Null keys

@@ -144,10 +144,4 @@ object GraftFunctions {
     * [[WhtSigs]]. */
   def wht_sigs(samples: Column, nFrames: Int): Column =
     ColumnBridge.column(WhtSigs(ColumnBridge.expression(samples), nFrames))
-
-  /** Dense, filled `0..total_windows` series of one (stay, feature)'s
-    * `(tidx, value)` cells — see [[DensifyFill]]. */
-  def densify_fill(cells: Column, totalWindows: Column, mode: String): Column =
-    ColumnBridge.column(DensifyFill(ColumnBridge.expression(cells),
-      ColumnBridge.expression(totalWindows), mode))
 }

@@ -7,7 +7,6 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.unsafe.array.ByteArrayMethods
 
 import graft.etl.Stages
 import graft.functions.DensifyFillKernel
@@ -52,10 +51,11 @@ case object LongParquetSink extends SinkMode
   * stay_id, feature_id, tidx)` puts each stay's header first and each
   * (stay, feature) run's cells in window order, and a [[CsvPartitionWriter]]
   * streams the stays: it opens a stay's file at its header, densifies and
-  * fills each feature run in reused arrays with the
-  * [[graft.functions.DensifyFillKernel]] walk, and writes the line straight
-  * to the file. An eventless stay has a header row and no cells, so K2's
-  * header-only file needs no anti-join and no second job. No global pivot —
+  * fills each feature run with [[graft.functions.DensifyFillKernel.walk]]
+  * — the walk [[graft.etl.Stages.densify]] runs — and writes each series
+  * as a line straight to the file. An eventless stay has a header row and
+  * no cells, so K2's header-only file needs no anti-join and no second
+  * job. No global pivot —
   * width is a per-stay function, so a single wide schema cannot exist
   * (SURVEY.md §1.3) — and only executor tasks touch the facts.
   *
@@ -173,10 +173,14 @@ object MatrixWriter {
     * `(stay_id, feature_id, tidx, value)` as one parquet dataset per source
     * under `{dst}/long/source={name}/` (sources as Hive-style partitions —
     * `spark.read.parquet("{dst}/long")` exposes a `source` column with
-    * partition pruning). Rows are repartitioned and sorted by stay so each
-    * stay lives in one file with tight row-group min/max stats on `stay_id`
-    * — a per-stay read prunes to one row group instead of scanning the
-    * dataset. Use [[writeStayIndex]] once per run for the companion
+    * partition pruning). `densified` is [[graft.etl.Stages.densify]]'s
+    * output, already partitioned by stay and sorted by
+    * `(stay_id, feature_id, tidx)` within each partition, so it is written
+    * as it arrives, with no exchange of its own: each stay lives in one
+    * file with tight row-group min/max stats on `stay_id` — a per-stay read
+    * prunes to one row group instead of scanning the dataset. Another
+    * input is written in its own order and layout. Use [[writeStayIndex]]
+    * once per run for the companion
     * `(stay_id, total_windows)` table; a reader reconstructs any stay's
     * matrix from the two (dummy stays need no special casing — they are
     * simply absent from the long table).
@@ -184,8 +188,6 @@ object MatrixWriter {
   def writeLongForm(densified: DataFrame, dstPath: String,
       sourceName: String): Unit =
     densified.select("stay_id", "feature_id", "tidx", "value")
-      .repartition(col("stay_id"))
-      .sortWithinPartitions("stay_id", "feature_id", "tidx")
       .write.mode("overwrite")
       .parquet(s"$dstPath/long/source=$sourceName")
 
@@ -222,73 +224,53 @@ object MatrixWriter {
 /** The [[MatrixWriter]] task body over rows `(stay_id, feature_id, tidx,
   * value, total_windows)` sorted by `(stay_id, feature_id, tidx)`: a
   * `tidx = -1` row opens its stay's file and writes the header of width
-  * `total_windows + 1`; each following (feature, window) run of cells is
-  * scattered into arrays reused across runs, filled per `mode` with the
-  * [[DensifyFillKernel]] walk and written as one line. A cell whose stay
-  * has no open header fails the task: no input of [[MatrixWriter]] reaches
-  * that case, and writing nothing for it would lose the line silently.
+  * `total_windows + 1`; the [[DensifyFillKernel.walk]] over the cells up
+  * to the next header fills each (feature, window) run per `mode`, and
+  * each series is written as one line. A cell whose stay has no open
+  * header fails the task: no input of [[MatrixWriter]] reaches that case,
+  * and writing nothing for it would lose the line silently.
   */
 private final class CsvPartitionWriter(dstPath: String, sourceName: String, mode: Int,
     hconf: Option[SerializableHadoopConf]) extends (Iterator[Row] => Unit) with Serializable {
 
   override def apply(rows: Iterator[Row]): Unit = {
-    var out: java.io.BufferedWriter = null
-    var stay = 0L
-    var n = 0 // windows of the open stay
-    var values = new Array[Double](0)
-    var state = new Array[Byte](0)
-    var inRun = false
-    var runFeature: java.lang.Long = null
-
-    def endRun(): Unit = if (inRun) {
-      DensifyFillKernel.fill(values, state, n, mode)
-      if (runFeature != null) { out.write(runFeature.toString); out.write(',') }
-      var t = 0
-      while (t < n) {
-        if (t > 0) out.write(',')
-        val v = values(t)
-        // +0.0, the gap fill, is most of the cells
-        out.write(if (java.lang.Double.doubleToRawLongBits(v) == 0L) "0.0"
-          else java.lang.Double.toString(v))
-        t += 1
-      }
-      out.newLine()
-      inRun = false
-    }
-    def close(): Unit = if (out != null) { out.close(); out = null }
-
-    try {
-      rows.foreach { r =>
-        val rowStay = r.getLong(0)
-        val tidx = r.getLong(2)
-        if (tidx == -1L) {
-          endRun(); close()
-          stay = rowStay
-          val totalWindows = r.getLong(4)
-          require(totalWindows < ByteArrayMethods.MAX_ROUNDED_ARRAY_LENGTH,
-            s"stay $stay: total_windows $totalWindows exceeds the array limit")
-          n = math.max(totalWindows + 1, 0L).toInt
-          if (values.length < n) { values = new Array[Double](n); state = new Array[Byte](n) }
-          out = MatrixWriter.openWriter(hconf.map(_.value).orNull,
-            s"$dstPath/$stay/${sourceName}_features.csv")
-          out.write(MatrixWriter.header(totalWindows))
-          out.newLine()
-        } else {
-          if (out == null || rowStay != stay) throw new IllegalStateException(
-            s"$sourceName: cells of stay $rowStay reached the writer without its header row")
-          val feature: java.lang.Long = if (r.isNullAt(1)) null else r.getLong(1)
-          if (!inRun || feature != runFeature) {
-            endRun()
-            java.util.Arrays.fill(values, 0, n, 0.0)
-            java.util.Arrays.fill(state, 0, n, DensifyFillKernel.Absent)
-            runFeature = feature
-            inRun = true
-          }
-          DensifyFillKernel.scatter(values, state, n, tidx, r.isNullAt(3),
-            if (r.isNullAt(3)) 0.0 else r.getDouble(3))
+    val in = rows.buffered
+    def isHeader(r: Row): Boolean = !r.isNullAt(2) && r.getLong(2) == -1L
+    def headerless(stay: Long): Nothing = throw new IllegalStateException(
+      s"$sourceName: cells of stay $stay reached the writer without its header row")
+    while (in.hasNext) {
+      val h = in.next()
+      val stay = h.getLong(0)
+      if (!isHeader(h)) headerless(stay)
+      val totalWindows = h.getLong(4)
+      val n = DensifyFillKernel.seriesLength(totalWindows)
+      val cells = new scala.collection.AbstractIterator[Row] {
+        override def hasNext: Boolean = in.hasNext && !isHeader(in.head)
+        override def next(): Row = {
+          val r = in.next()
+          if (r.getLong(0) != stay) headerless(r.getLong(0))
+          r
         }
       }
-      endRun()
-    } finally close()
+      val out = MatrixWriter.openWriter(hconf.map(_.value).orNull,
+        s"$dstPath/$stay/${sourceName}_features.csv")
+      try {
+        out.write(MatrixWriter.header(totalWindows))
+        out.newLine()
+        DensifyFillKernel.walk(cells, mode)(_ => n).foreach { s =>
+          if (s.feature != null) { out.write(s.feature.toString); out.write(',') }
+          var t = 0
+          while (t < n) {
+            if (t > 0) out.write(',')
+            val v = s.values(t)
+            // +0.0, the gap fill, is most of the cells
+            out.write(if (java.lang.Double.doubleToRawLongBits(v) == 0L) "0.0"
+              else java.lang.Double.toString(v))
+            t += 1
+          }
+          out.newLine()
+        }
+      } finally out.close()
+    }
   }
 }

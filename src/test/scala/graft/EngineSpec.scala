@@ -111,6 +111,25 @@ class EngineSpec extends AnyFunSuite {
         new String(Files.readAllBytes(p), StandardCharsets.UTF_8))
       .toMap
 
+  /** AQE settings that split a small exchange into many partitions and
+    * coalesce each side of a union on its own. */
+  private val hostileCoalescing = Seq(
+    "spark.sql.adaptive.coalescePartitions.initialPartitionNum" -> "50",
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "256",
+    "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1")
+
+  /** Run `body` with the session confs `kvs` set, then restore them. */
+  private def withConf[A](kvs: Seq[(String, String)])(body: => A): A = {
+    val saved = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    try {
+      kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+      body
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   /** A fresh copy of the fixtures with `extra` (file, row) pairs appended. */
   private def fixturesWith(extra: (String, String)*): Path = {
     val root = Files.createTempDirectory("graft-mimic-x")
@@ -288,29 +307,63 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("long-parquet sink roundtrip matches the CSV matrices") {
-    val root = Files.createTempDirectory("graft-mimic-lp")
-    val dst = Files.createTempDirectory("graft-out-lp")
-    writeFixtures(root)
-    new EventsAggregator(spark, root.toString, dst.toString)
-      .run(graft.io.LongParquetSink)
     import org.apache.spark.sql.functions._
-    val long = spark.read.parquet(dst.resolve("long").toString)
-    // sources surface as a Hive partition column (partition-pruned reads)
-    assert(long.columns.toSet ==
-      Set("stay_id", "feature_id", "tidx", "value", "source"))
-    // stay 1 / chartevents / feature 100 reconstructs the CSV matrix row
-    val vals = long
-      .where(col("source") === "chartevents" && col("stay_id") === 1 &&
-        col("feature_id") === 100)
-      .orderBy("tidx").collect().map(_.getAs[Double]("value")).toSeq
-    val csv = readCsvLines(outDir.resolve("1/chartevents_features.csv"))(1)
-      .split(",").drop(1).map(_.toDouble).toSeq
-    assert(vals.size == csv.size)
-    vals.zip(csv).foreach { case (a, b) => assert(math.abs(a - b) < 1e-12) }
-    // companion stay table covers ALL requested stays (incl. eventless 3)
-    val stays = spark.read.parquet(dst.resolve("long_stays").toString)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(stays == Map(1L -> 5L, 2L -> 4L, 3L -> 2L))
+    import graft.etl.Stages.{ForwardFill, LinearInterp, ZeroFill}
+    // an unparseable itemid is a null feature_id: a series of its own
+    val root = fixturesWith("chartevents.csv" ->
+      "2,20,2,2020-01-01 01:10:00,2020-01-01 01:11:00,x,2,2.0,bpm,0")
+    for (mode <- Seq(ZeroFill, ForwardFill, LinearInterp)) {
+      val csvDst = Files.createTempDirectory("graft-out-lpcsv")
+      val dst = Files.createTempDirectory("graft-out-lp")
+      new EventsAggregator(spark, root.toString, csvDst.toString, fillMode = Some(mode)).run()
+      // stays spread over several tasks, so one file per stay is a layout
+      // the sink keeps, not one that a single task makes by itself
+      withConf(hostileCoalescing) {
+        new EventsAggregator(spark, root.toString, dst.toString, fillMode = Some(mode))
+          .run(graft.io.LongParquetSink)
+      }
+      val long = spark.read.parquet(dst.resolve("long").toString)
+      // sources surface as a Hive partition column (partition-pruned reads)
+      assert(long.columns.toSet ==
+        Set("stay_id", "feature_id", "tidx", "value", "source"))
+      // every (source, stay, feature) series, cell for cell; a CSV line one
+      // field short of its header is the null feature's
+      val fromCsv = tree(csvDst).toSeq.flatMap { case (rel, text) =>
+        val path = java.nio.file.Paths.get(rel)
+        val stay = path.getName(0).toString.toLong
+        val source = path.getFileName.toString.stripSuffix("_features.csv")
+        val lines = text.linesIterator.toList
+        val width = lines.head.split(",").length
+        lines.tail.map { l =>
+          val f = l.split(",")
+          val (feature, vals) =
+            if (f.length == width) (Some(f(0).toLong), f.tail) else (None, f)
+          (source, stay, feature) -> vals.map(_.toDouble).toSeq
+        }
+      }.toMap
+      val fromParquet = long.collect().groupBy { r =>
+        (r.getAs[String]("source"), r.getAs[Long]("stay_id"),
+          Option(r.getAs[java.lang.Long]("feature_id")).map(_.longValue))
+      }.map { case (k, rs) =>
+        val byT = rs.map(r => r.getAs[Long]("tidx") -> r.getAs[Double]("value")).sortBy(_._1)
+        assert(byT.map(_._1).toSeq == byT.indices.map(_.toLong), s"$mode $k tidx")
+        k -> byT.map(_._2).toSeq
+      }
+      assert(fromCsv.keySet.contains(("chartevents", 2L, None)), s"$mode")
+      assert(fromParquet == fromCsv, s"$mode")
+      // each stay's rows sit in exactly one file of its source
+      val files = long.select(col("source"), col("stay_id"), input_file_name().as("file"))
+        .distinct().collect()
+      val filesPerStay = files.groupBy(r => (r.getString(0), r.getLong(1))).map {
+        case (k, rs) => k -> rs.length
+      }
+      assert(filesPerStay.values.forall(_ == 1), s"$mode: $filesPerStay")
+      assert(files.map(_.getString(2)).distinct.length > 1, s"$mode")
+      // companion stay table covers ALL requested stays (incl. eventless 3)
+      val stays = spark.read.parquet(dst.resolve("long_stays").toString)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(stays == Map(1L -> 5L, 2L -> 4L, 3L -> 2L))
+    }
   }
 
   test("stay filter prunes and still emits dummies for requested empty stays") {
@@ -325,8 +378,9 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("densify: no Window in the executed plan, rows unchanged, every fill mode") {
-    import org.apache.spark.sql.execution.GenerateExec
+    import org.apache.spark.sql.execution.MapPartitionsExec
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
     import graft.etl.Stages.{FillMode, ForwardFill, LinearInterp, ZeroFill}
     object plans extends AdaptiveSparkPlanHelper
     val root = Files.createTempDirectory("graft-mimic-dense")
@@ -360,14 +414,16 @@ class EngineSpec extends AnyFunSuite {
         val df = agg.aggregate(src)
         val rows = df.collect()
         // the executed (final AQE) plan: no Window operator of any kind,
-        // and the walk does reach the densify Generate
+        // no per-series object aggregate, and the densify walk does run
         val executed = df.queryExecution.executedPlan
         val windows = plans.collect(executed) {
           case p if p.nodeName.contains("Window") => p.nodeName
         }
         assert(windows.isEmpty, s"$mode/${src.name}: $windows in\n$executed")
-        assert(plans.collect(executed) { case g: GenerateExec => g }.nonEmpty,
-          s"$mode/${src.name}: no Generate in\n$executed")
+        assert(plans.collect(executed) { case a: ObjectHashAggregateExec => a }.isEmpty,
+          s"$mode/${src.name}: an ObjectHashAggregate in\n$executed")
+        assert(plans.collect(executed) { case m: MapPartitionsExec => m }.nonEmpty,
+          s"$mode/${src.name}: no MapPartitions in\n$executed")
         rows.groupBy(r => (src.name, r.getLong(0), r.getLong(1))).map {
           case (k, rs) =>
             val byT = rs.map(r => r.getLong(2) -> r.getDouble(3)).sortBy(_._1)
@@ -468,58 +524,70 @@ class EngineSpec extends AnyFunSuite {
     val root = fixturesWith(extra.flatten: _*)
     val byDefault = Files.createTempDirectory("graft-out-conf0")
     new EventsAggregator(spark, root.toString, byDefault.toString).run()
-    val hostile = Seq(
-      "spark.sql.adaptive.coalescePartitions.initialPartitionNum" -> "50",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "256",
-      "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1")
-    val saved = hostile.map { case (k, _) => k -> spark.conf.getOption(k) }
     val coalesced = Files.createTempDirectory("graft-out-conf1")
-    try {
-      hostile.foreach { case (k, v) => spark.conf.set(k, v) }
+    withConf(hostileCoalescing) {
       new EventsAggregator(spark, root.toString, coalesced.toString).run()
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
     val want = tree(byDefault)
     assert(want.size == 12 && want("2/outputevents_features.csv").linesIterator.size == 2)
     assert(tree(coalesced) == want)
   }
 
-  test("CSV sink: each source's write runs one shuffle exchange and no object aggregate") {
-    import java.util.concurrent.ConcurrentLinkedQueue
-    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-    import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    import org.apache.spark.sql.util.QueryExecutionListener
-    object plans extends AdaptiveSparkPlanHelper
-    val root = Files.createTempDirectory("graft-mimic-plan")
-    writeFixtures(root)
-    val dst = Files.createTempDirectory("graft-out-plan")
-    val writes = new ConcurrentLinkedQueue[SparkPlan]()
-    val listener = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        if (funcName == "foreachPartition" && plans.collect(qe.executedPlan) {
+  // each source's write, by sink: its shuffle exchanges (CSV: the one by
+  // stay that combine reuses; long parquet: combine's and densify's), no
+  // object aggregate, and no Generate but intervalExpand's explode
+  for ((sink, name, exchanges) <- Seq[(graft.io.SinkMode, String, Int)](
+      (graft.io.CsvMatrixSink,
+        "CSV sink: each source's write runs one shuffle exchange and no object aggregate", 1),
+      (graft.io.LongParquetSink,
+        "long-parquet sink: each source's write runs two shuffle exchanges, no object aggregate and no densify generate", 2)))
+    test(name) {
+      import java.util.concurrent.ConcurrentLinkedQueue
+      import org.apache.spark.sql.execution.{FileSourceScanExec, GenerateExec, QueryExecution,
+        SparkPlan}
+      import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+      import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
+      import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+      import org.apache.spark.sql.util.QueryExecutionListener
+      object plans extends AdaptiveSparkPlanHelper
+      val root = Files.createTempDirectory("graft-mimic-plan")
+      writeFixtures(root)
+      val dst = Files.createTempDirectory("graft-out-plan")
+      // the source each write scans, with the write's executed plan
+      val writes = new ConcurrentLinkedQueue[(graft.model.EventSource, SparkPlan)]()
+      val listener = new QueryExecutionListener {
+        override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+          if (funcName == "foreachPartition" || funcName == "command") {
+            val scanned = plans.collect(qe.executedPlan) {
               case scan: FileSourceScanExec => scan.relation.location.rootPaths
-            }.flatten.exists(_.toString.contains(root.toString)))
-          writes.add(qe.executedPlan)
-      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+            }.flatten.map(_.toString)
+            Sources.all
+              .find(src => scanned.exists(_.endsWith(s"${root.getFileName}/icu/${src.fileName}")))
+              .foreach(src => writes.add(src -> qe.executedPlan))
+          }
+        override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+      }
+      spark.listenerManager.register(listener)
+      try {
+        new EventsAggregator(spark, root.toString, dst.toString).run(sink)
+        // listener events arrive asynchronously
+        val deadline = System.nanoTime() + 30e9.toLong
+        while (writes.size < Sources.all.size && System.nanoTime() < deadline) Thread.sleep(10)
+      } finally spark.listenerManager.unregister(listener)
+      assert(writes.asScala.map(_._1).toSet == Sources.all.toSet)
+      assert(writes.size == Sources.all.size)
+      writes.asScala.foreach { case (src, p) =>
+        val shuffles = plans.collect(p) { case e: ShuffleExchangeExec => e }
+        assert(shuffles.size == exchanges, s"${src.name}: $p")
+        assert(plans.collect(p) { case a: ObjectHashAggregateExec => a }.isEmpty,
+          s"${src.name}: $p")
+        val explodes = src.timeSpec match {
+          case _: graft.model.IntervalTime => 1
+          case _ => 0
+        }
+        assert(plans.collect(p) { case g: GenerateExec => g }.size == explodes, s"${src.name}: $p")
+      }
     }
-    spark.listenerManager.register(listener)
-    try {
-      new EventsAggregator(spark, root.toString, dst.toString).run()
-      // listener events arrive asynchronously
-      val deadline = System.nanoTime() + 30e9.toLong
-      while (writes.size < Sources.all.size && System.nanoTime() < deadline) Thread.sleep(10)
-    } finally spark.listenerManager.unregister(listener)
-    assert(writes.size == Sources.all.size)
-    writes.asScala.foreach { p =>
-      val shuffles = plans.collect(p) { case e: ShuffleExchangeExec => e }
-      assert(shuffles.size == 1, s"$p")
-      assert(plans.collect(p) { case a: ObjectHashAggregateExec => a }.isEmpty, s"$p")
-    }
-  }
 
   test("CSV sink: a cell whose stay has no header row fails the write") {
     import org.apache.spark.sql.functions.col

@@ -160,21 +160,39 @@ object PropertySpec extends Properties("graft.stages") {
     }
   }
 
-  private def cellArray(cells: Seq[(Long, Option[Double])]) =
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(cells.map {
-      case (t, v) => org.apache.spark.sql.catalyst.InternalRow(t, v.map(Double.box).orNull)
-    }.toArray[Any])
+  /** The densify walk over `series`, each one (stay, feature) run of rows
+    * `(stay_id, feature_id, tidx, value, total_windows)` in walk order:
+    * four runs a stay, the first with a null feature. Returns each run's
+    * dense series by its index in `series`; a run without cells has no
+    * rows, so it has no series either.
+    */
+  private def walked(series: List[(Long, List[(Long, Option[Double])])],
+      mode: Int): Map[Int, Seq[Double]] = {
+    import org.apache.spark.sql.Row
+    import graft.functions.DensifyFillKernel.{seriesLength, walk}
+    def key(i: Int): (Long, java.lang.Long) =
+      (i / 4L, if (i % 4 == 0) null else java.lang.Long.valueOf(i % 4L))
+    val rows = series.zipWithIndex.flatMap { case ((tw, cells), i) =>
+      val (stay, feature) = key(i)
+      cells.sortBy(_._1).map { case (t, v) => Row(stay, feature, t, v.map(Double.box).orNull, tw) }
+    }
+    walk(rows.iterator, mode)(r => seriesLength(r.getLong(4))).map { s =>
+      series.indices.find(key(_) == ((s.stay, s.feature))).get ->
+        s.values.take(s.n).toSeq
+    }.toMap
+  }
 
   property("densify kernel equals a brute-force reindex + fill, every mode") =
     forAll(Gen.listOfN(300, genSeries)) { series =>
-      import graft.functions.DensifyFillKernel.{Forward, Interp, Zero, compute}
+      import graft.functions.DensifyFillKernel.{Forward, Interp, Zero}
       val bad = for {
-        (tw, cells) <- series
         mode <- Seq(Zero, Forward, Interp)
-        got = compute(cellArray(cells), tw, mode).toDoubleArray().toSeq
+        got = walked(series, mode)
+        ((tw, cells), i) <- series.zipWithIndex
+        want = Option.when(cells.nonEmpty)(denseRef(cells, tw, mode))
         // exact: == on doubles, no tolerance
-        if got != denseRef(cells, tw, mode)
-      } yield s"tw=$tw mode=$mode cells=$cells got=$got"
+        if got.get(i) != want
+      } yield s"tw=$tw mode=$mode cells=$cells got=${got.get(i)}"
       bad.isEmpty :| bad.headOption.getOrElse("")
     }
 
@@ -184,14 +202,31 @@ object PropertySpec extends Properties("graft.stages") {
     import graft.functions.DensifyFillKernel
     def raises(body: => Any): Boolean = Try(body).failed.toOption
       .exists(e => String.valueOf(e.getMessage).contains("duplicate tidx"))
-    // straight on the kernel, the second cell's value null
-    val direct = raises(DensifyFillKernel.compute(
-      cellArray(Seq(2L -> Some(1.0), 2L -> None)), 4L, DensifyFillKernel.Zero))
+    // straight on the walk, the second cell's value null
+    val direct = raises(walked(List(4L -> List(2L -> Some(1.0), 2L -> None)),
+      DensifyFillKernel.Zero))
     // and through the stage, in every fill mode
     val dup = Seq((1L, 7L, 2L, 1.0, 4L), (1L, 7L, 2L, 3.0, 4L))
       .toDF("stay_id", "feature_id", "tidx", "value", "total_windows")
     direct && Seq(Stages.ZeroFill, Stages.ForwardFill, Stages.LinearInterp)
       .forall(m => raises(Stages.densify(dup, m).collect()))
+  }
+
+  property("densify: a null tidx raises, a negative or null total_windows yields no rows, an oversize one fails") = {
+    import spark.implicits._
+    import scala.util.Try
+    def raises(df: org.apache.spark.sql.DataFrame, msg: String): Boolean =
+      Try(df.collect()).failed.toOption.exists(e => Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null).exists(t => String.valueOf(t.getMessage).contains(msg)))
+    def cells(rows: (Long, Option[Long], Option[Long])*) =
+      rows.map { case (stay, tidx, tw) => (stay, 7L, tidx, 1.0, tw) }
+        .toDF("stay_id", "feature_id", "tidx", "value", "total_windows")
+    Seq(Stages.ZeroFill, Stages.ForwardFill, Stages.LinearInterp).forall { m =>
+      Stages.densify(cells((1L, Some(0L), Some(-1L)), (2L, Some(0L), None)), m).count() == 0 &&
+        raises(Stages.densify(cells((1L, None, Some(4L))), m), "null tidx") &&
+        raises(Stages.densify(cells((1L, Some(0L), Some(Int.MaxValue.toLong))), m),
+          "exceeds the array limit")
+    }
   }
 
   property("clamp: tidx in [0, total_windows]; only post-outtime dropped") =
