@@ -1,25 +1,158 @@
 package graft
+
+import java.nio.file.{Files, Paths}
+
 import org.apache.spark.sql.SparkSession
 
-/** Benchmark main: one warmed JVM, every query timed individually (sorted
-  * name order), one JSON line on stdout. Warmup touches every table and
-  * runs one small pipeline so the first measured query doesn't absorb the
-  * session's file-index/codegen startup (~5 s) — without it the
-  * alphabetically-first query's number is mostly warmup noise.
+import graft.util.LocalSession
+
+/** The gate harness: every mode times gates with the one [[timeGate]] and
+  * reads gates from `SPARK_GRAFT_SF_DIR` (default sf0.1) unless it names
+  * its own directories. The first argument picks the mode:
+  *
+  *  - none: the sweep — one warmed JVM, every gate timed once in sorted
+  *    name order, one JSON line on stdout and in `SPARK_GRAFT_BENCH_OUT`
+  *    (`SPARK_GRAFT_SHARD="i/n"` times one slice), then a tail-sized
+  *    summary line. Warmup touches every table and runs one small
+  *    pipeline per family, so the first measured gate doesn't absorb the
+  *    session's file-index/codegen startup (~5 s).
+  *  - `probe [--all | gate ...]`: first-run cost (Janino compile + JIT of
+  *    the generated classes) against steady state in one JVM. Named gates
+  *    (default `q_doc_minhash_lsh q_doc_simhash_pairs`) run three rounds,
+  *    one `PROBE round=…` line each; `--all` runs every gate cold then
+  *    twice steady in sorted order (the sweep's own order, so earlier
+  *    gates' codegen pre-warms later ones as in the sweep), writes the
+  *    ratio table to `perf_probe.json` in the working directory and prints
+  *    the 15 highest ratios. A gate far over its steady band in a sweep is
+  *    a first-compile hole a warmup must cover if its ratio is high here
+  *    too, and host contention if the ratio is ~1.
+  *  - `plans <outDir> <suffix> [gate ...]`: `explain("formatted")` of each
+  *    gate (default: all) plus its [[graft.util.PlanTap]] pre-checkpoint
+  *    plans, to `<outDir>/<gate>_<suffix>.txt` — the before/after plan
+  *    artifacts a round commits under `plans/`.
+  *  - `scale <sfDir> <scaledDir> <factor> build|buildfull|probe [gate ...]`:
+  *    `build` writes a `factor`× replica of `sfDir` to `scaledDir` with
+  *    [[graft.cli.ScaleProbe.buildScaled]] (`buildfull` replicates the
+  *    TPC-H star too); `probe` warms each gate on `sfDir`, times it on both
+  *    directories, and prints one `[scale-probe-json]` line that
+  *    `tools/factor_audit.py` reads.
+  *
+  * A gate that throws is reported and fails the run (exit 1) in every
+  * mode: recorded as a fast time, a broken gate would improve the total.
   */
 object Bench {
+  private val usage =
+    """usage: graft.Bench
+      |       graft.Bench probe [--all | gate ...]
+      |       graft.Bench plans <outDir> <suffix> [gate ...]
+      |       graft.Bench scale <sfDir> <scaledDir> <factor> build|buildfull|probe [gate ...]
+      |""".stripMargin
+
+  /** Gates that threw in this JVM. */
+  private val failed = scala.collection.mutable.LinkedHashSet.empty[String]
+
+  /** The gate timer: wall seconds of gate `name` on `dir` run to
+    * `.count()`. A throw is recorded in [[failed]] and printed; the cache
+    * is cleared after every gate, bounding intra-query `persist()` use. */
+  private def timeGate(spark: SparkSession, name: String, dir: String): Double = {
+    val gate = SparkEntry.queries.get(name)
+    val t0 = System.nanoTime()
+    try gate.getOrElse(sys.error(s"unknown gate '$name'"))(spark, dir).count()
+    catch { case e: Throwable =>
+      failed += name
+      System.err.println(s"[bench] $name FAILED: $e")
+    }
+    finally spark.catalog.clearCache()
+    (System.nanoTime() - t0) / 1e9
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val mode: SparkSession => Unit = args.toList match {
+      case Nil => sweep(_, sfDir)
+      case "probe" :: names => probe(_, sfDir, names)
+      case "plans" :: outDir :: suffix :: names => plans(_, sfDir, outDir, suffix, names)
+      case "scale" :: base :: scaled :: factor :: (op @ ("build" | "buildfull" | "probe")) :: gates
+          if factor.nonEmpty && factor.forall(_.isDigit) =>
+        scale(_, base, scaled, factor.toInt, op, gates)
+      case _ => System.err.print(usage); sys.exit(2)
+    }
+    val spark = LocalSession()
+    mode(spark)
+    spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
+  }
+
+  private def probe(spark: SparkSession, sfDir: String, args: List[String]): Unit =
+    if (args.headOption.contains("--all")) {
+      // steady = min of the two steady passes (least-contended estimate)
+      val names = SparkEntry.queries.keys.toSeq.sorted
+      val cold = names.map(n => n -> timeGate(spark, n, sfDir)).toMap
+      val s1 = names.map(n => n -> timeGate(spark, n, sfDir)).toMap
+      val s2 = names.map(n => n -> timeGate(spark, n, sfDir)).toMap
+      val steady = names.map(n => n -> math.min(s1(n), s2(n))).toMap
+      val ratio = names.map(n => n -> cold(n) / math.max(steady(n), 1e-9)).toMap
+      val rows = names.map { n =>
+        val fl = if (failed.contains(n)) ""","failed":true""" else ""
+        f""""$n":{"cold":${cold(n)}%.3f,"steady":${steady(n)}%.3f,"ratio":${ratio(n)}%.2f$fl}"""
+      }
+      Files.write(Paths.get("perf_probe.json"),
+        (rows.mkString("{", ",", "}") + "\n").getBytes("UTF-8"))
+      names.sortBy(n => -ratio(n)).take(15).foreach { n =>
+        println(f"PROBE $n cold=${cold(n)}%.2f steady=${steady(n)}%.2f ratio=${ratio(n)}%.1f")
+      }
+    } else {
+      val names = if (args.nonEmpty) args else Seq("q_doc_minhash_lsh", "q_doc_simhash_pairs")
+      for (round <- 1 to 3; name <- names)
+        println(f"PROBE round=$round $name ${timeGate(spark, name, sfDir)}%.2f s")
+    }
+
+  private def plans(spark: SparkSession, sfDir: String, outDir: String, suffix: String,
+      args: List[String]): Unit = {
+    val names = if (args.nonEmpty) args else SparkEntry.queries.keys.toSeq.sorted
+    Files.createDirectories(Paths.get(outDir))
+    names.foreach { name =>
+      try {
+        val fn = SparkEntry.queries.getOrElse(name, sys.error(s"unknown gate '$name'"))
+        graft.util.PlanTap.start()
+        val df = fn(spark, sfDir)
+        val tapped = graft.util.PlanTap.stop()
+        val plan = (df.queryExecution.explainString(
+          org.apache.spark.sql.execution.FormattedMode) +:
+          tapped.map { case (tag, p) => s"\n== Pre-checkpoint plan: $tag ==\n$p" })
+          .mkString("\n")
+        Files.write(Paths.get(s"$outDir/${name}_$suffix.txt"), plan.getBytes("UTF-8"))
+        println(s"[plans] wrote $name ($suffix)")
+      } catch { case e: Throwable =>
+        failed += name
+        System.err.println(s"[plans] $name FAILED: $e")
+      }
+      finally spark.catalog.clearCache()
+    }
+  }
+
+  private def scale(spark: SparkSession, sfDir: String, outDir: String, factor: Int,
+      op: String, gates: List[String]): Unit =
+    if (op == "probe") {
+      // one warmup pass on the base dir covers codegen/JIT for both runs
+      gates.foreach(timeGate(spark, _, sfDir))
+      val rows = gates.map { g =>
+        val tb = timeGate(spark, g, sfDir)
+        val ts = timeGate(spark, g, outDir)
+        val f = if (tb > 0) ts / tb else Double.NaN
+        println(f"[scale-probe] $g%-28s base=$tb%7.2fs scaled=$ts%7.2fs factor=$f%5.1f")
+        val fl = if (failed.contains(g)) ""","failed":true""" else ""
+        s"""{"gate":"$g","base_s":$tb,"scaled_s":$ts,"factor":$f$fl}"""
+      }
+      println("[scale-probe-json] [" + rows.mkString(",") + "]")
+    } else {
+      graft.cli.ScaleProbe.buildScaled(spark, sfDir, outDir, factor,
+        scaleTpch = op == "buildfull")
+      println(s"[scale-probe] built ${factor}x corpus at $outDir")
+    }
+
+  private def sweep(spark: SparkSession, sfDir: String): Unit = {
+    val cpus = LocalSession.defaultCores
     // warmup: file indexes + reader paths + codegen pipeline
     Seq("region", "nation", "customer", "supplier", "part", "orders",
       "lineitem", "events", "documents", "embeddings").foreach { name =>
@@ -125,7 +258,7 @@ object Bench {
         .count()
       // exact-percentile + boundary-broadcast bucketize (the q_histogram /
       // q_percentile family): compile the ObjectHashAggregate percentile
-      // and the 1-row-broadcast CASE-chain off-clock — PerfProbe measured
+      // and the 1-row-broadcast CASE-chain off-clock — `Bench probe` measured
       // q_histogram 10.0 s first-run vs 3.0 s steady in a fresh JVM, the
       // same first-compile mechanism as the r3 join and r4 trainer holes
       val liP = li.select(cents(col("l_extendedprice")).as("c"))
@@ -229,7 +362,7 @@ object Bench {
     }
     // ranked-retrieval family: tf·idf scoring (term-filtered tf agg +
     // broadcast df + 1-row N crossJoin + micro-unit TakeOrdered ranking)
-    // and the hybrid candidate-broadcast cosine rerank. PerfProbe measured
+    // and the hybrid candidate-broadcast cosine rerank. `Bench probe` measured
     // q_doc_rank_search 7.3 s first-run vs 1.2 s steady in a cold JVM —
     // the same first-compile class as the r3 join / r4 trainer bumps, on
     // a family none of the other warmups compile. Also pre-builds the
@@ -484,22 +617,11 @@ object Bench {
         slice
       case None => allQs
     }
-    // a throwing query is REPORTED and fails the run — swallowing it would
-    // make a broken query look like a fast one and *improve* the total
-    var failed = List.empty[String]
-    val results = shardQs.map { case (name, fn) =>
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count(); () } catch { case e: Throwable =>
-        failed ::= name
-        System.err.println(s"[bench] $name FAILED: $e")
-      }
-      finally spark.catalog.clearCache() // bound intra-query persist() use
-      name -> (System.nanoTime() - t0) / 1e9
-    }
+    val results = shardQs.map { case (name, _) => name -> timeGate(spark, name, sfDir) }
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val total = results.map(_._2).sum
-    val failedJson = failed.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val failedJson = failed.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
     val warmJson = warmups.map { case (k, (sec, ok)) =>
       f""""$k":{"sec":$sec%.2f,"ok":$ok}"""
     }.mkString("{", ",", "}")
@@ -553,7 +675,5 @@ object Bench {
       .mkString("{", ",", "}")
     println(
       s"""{"metric":"total","value":$total,"unit":"sec","queries_top":$topQs,"n":${results.size},"failed":$failedJson,$hostJson,"sf":"$sfDir"$shardJson,"full":"$benchOut"}""")
-    spark.stop()
-    if (failed.nonEmpty) sys.exit(1)
   }
 }

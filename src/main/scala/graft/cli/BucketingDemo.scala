@@ -2,8 +2,6 @@ package graft.cli
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
-
 /** Bucketing demo/check: persist two tables bucketed by the join key, then
   * prove the join plans WITHOUT a shuffle on either side (no Exchange above
   * the scans) — the co-located-join strategy for repeated large-large joins
@@ -17,15 +15,9 @@ object BucketingDemo {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val wh = Files.createTempDirectory("graft-warehouse").toString
-    val spark = SparkSession.builder()
-      .master("local[4]").appName("graft-bucketing")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.warehouse.dir", wh)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1") // force the issue
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.LocalSession("4", conf = Map(
+      "spark.sql.warehouse.dir" -> wh,
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1")) // force the issue
 
     val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
     val o = spark.read.parquet(s"$sfDir/orders.parquet")

@@ -1,7 +1,5 @@
 package graft.cli
 
-import org.apache.spark.sql.SparkSession
-
 import graft.api.CorpusCleaner
 
 /** CLI for the corpus-cleaning pipeline.
@@ -13,15 +11,7 @@ object CorpusClean {
   def main(args: Array[String]): Unit = {
     val Array(in, out) = args.take(2)
     val minQuality = if (args.length > 2) args(2).toDouble else 0.3
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-corpus-clean")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.LocalSession()
     val docs = spark.read.parquet(in)
     val report = new CorpusCleaner(minQuality = minQuality).clean(docs)
     report.docs.write.mode("overwrite").parquet(out)

@@ -35,7 +35,7 @@ object ExplainCheck {
     "q_ts_densify" -> (Seq("MapPartitions", "BroadcastHashJoin"),
       Seq("CartesianProduct", "Window", "ObjectHashAggregate")),
     // signature agg runs as ObjectHashAggregate (typed Aggregator buffers)
-    // r16: signatures/shingle arrays are in-row (MinHashSig) — the old
+    // r16: signatures/shingle arrays are in-row (MinHashBuckets) — the old
     // per-doc ObjectHashAggregate shuffles are gone and must stay gone
     "q_doc_minhash_lsh" -> (Seq("Generate"),
       Seq("CartesianProduct", "ObjectHashAggregate")),
@@ -1228,13 +1228,7 @@ object ExplainCheck {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = if (args.length > 1) args.drop(1).toSeq else expectations.keys.toSeq
-    val spark = SparkSession.builder()
-      .master("local[4]").appName("graft-explain")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.LocalSession("4")
     val failures = audit(spark, sfDir, names, printPlans = true)
     failures.foreach(f => println(s"[explain-check] FAIL $f"))
     println(s"\n[explain-check] ${names.size} plans audited, ${failures.size} failures")

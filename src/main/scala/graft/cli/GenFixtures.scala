@@ -1,6 +1,6 @@
 package graft.cli
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Deterministic synthetic MIMIC-shaped fixture generator (FIXTURES.md):
@@ -25,14 +25,7 @@ object GenFixtures {
     val Array(outDir, nStaysS, perStayS) = args.take(3)
     val nStays = nStaysS.toLong
     val perStay = perStayS.toInt
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-genfixtures")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.LocalSession()
 
     val stays = spark.range(1, nStays + 1).toDF("stay_id")
       .withColumn("subject_id", col("stay_id") + 1000000)

@@ -1,7 +1,5 @@
 package graft.cli
 
-import org.apache.spark.sql.SparkSession
-
 import graft.api.{EventsAggregator, Sources}
 
 /** CLI mirroring the reference's `python -m mimic2ts src dst [--exclude
@@ -59,17 +57,9 @@ object Main {
         case other => System.err.println(s"unknown arg: $other\n$usage"); sys.exit(2)
       }
     }
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("graft")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.files.maxPartitionBytes", maxPartitionBytes)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.LocalSession(
+      master = Some(sys.env.getOrElse("SPARK_MASTER", "local[*]")),
+      conf = Map("spark.sql.files.maxPartitionBytes" -> maxPartitionBytes))
     // stage/row progress on the console — the reference's ProgressBar analog
     spark.sparkContext.addSparkListener(new ProgressListener)
     val sources = Sources.all.filterNot(s => exclude.contains(s.name))

@@ -3,10 +3,10 @@ package graft.cli
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Empirical scale probe: materialize a `factor`× replica of the driver
-  * corpus under /tmp, run named gates against base and scaled dirs, and
-  * report wall-clock scaling factors (SCALE.md's measured complement to
-  * the plan-shape review).
+/** The empirical scale probe's corpus: a `factor`× replica of the gate
+  * corpus. `graft.Bench scale` builds it and times named gates against the
+  * base and scaled dirs, reporting wall-clock scaling factors (SCALE.md's
+  * measured complement to the plan-shape review).
   *
   * Replication is deterministic and STRUCTURE-PRESERVING: replica r of a
   * document rotates its lowercase letters by r (`translate`), so texts
@@ -18,10 +18,9 @@ import org.apache.spark.sql.functions._
   * replica, no cross-replica collinearity); events replicate users with
   * fresh ids (per-user series identical, 10× users).
   *
-  * Usage: runMain graft.cli.ScaleProbe <sfDir> <scaledDir> <factor>
-  *          [build|buildfull|probe] <gate ...>
-  * (`buildfull` also replicates the TPC-H star fk-preservingly — the
-  * corpus for the full-surface sf1 sweep; `build` keeps it untouched.)
+  * `scaleTpch` also replicates the TPC-H star fk-preservingly — the
+  * corpus for the full-surface sf1 sweep (`Bench scale … buildfull`);
+  * without it the star is copied untouched (`build`).
   */
 object ScaleProbe {
 
@@ -111,52 +110,5 @@ object ScaleProbe {
     }
     evReps.reduce(_.unionAll(_)).write.mode("overwrite")
       .parquet(s"$outDir/events.parquet")
-  }
-
-  def main(args: Array[String]): Unit = {
-    val sfDir = args(0); val outDir = args(1); val factor = args(2).toInt
-    val mode = args(3)
-    val gates = args.drop(4).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-
-    if (mode == "build" || mode == "buildfull") {
-      // buildfull additionally replicates the TPC-H star (fk-preserving)
-      // — the full-surface sf1 sweep's corpus; plain build keeps the star
-      // as-is for the documents/embeddings/events per-gate probes
-      buildScaled(spark, sfDir, outDir, factor,
-        scaleTpch = mode == "buildfull")
-      println(s"[scale-probe] built ${factor}x corpus at $outDir")
-    } else {
-      def time(name: String, dir: String): Double = {
-        val t0 = System.nanoTime()
-        graft.SparkEntry.queries(name)(spark, dir).count()
-        spark.catalog.clearCache()
-        (System.nanoTime() - t0) / 1e9
-      }
-      // one warmup pass on the base dir covers codegen/JIT for both runs
-      gates.foreach { g =>
-        try time(g, sfDir)
-        catch { case e: Throwable =>
-          System.err.println(s"[scale-probe] warmup $g failed: $e") }
-      }
-      val rows = gates.map { g =>
-        val tb = time(g, sfDir)
-        val ts = time(g, outDir)
-        val f = if (tb > 0) ts / tb else Double.NaN
-        println(f"[scale-probe] $g%-28s base=$tb%7.2fs scaled=$ts%7.2fs factor=$f%5.1f")
-        s"""{"gate":"$g","base_s":$tb,"scaled_s":$ts,"factor":$f}"""
-      }
-      println("[scale-probe-json] [" + rows.mkString(",") + "]")
-    }
-    spark.stop()
   }
 }

@@ -92,14 +92,16 @@ object Stages {
     * raises `KeyError` there (`__init__.py:151-152`), so no silent semantic
     * widening either way. An event with a null time is dropped before the
     * clamp, which would otherwise put it in window 0 (`greatest` skips a
-    * null).
+    * null). An event with a null `feature_id` (an unparseable itemid) is
+    * dropped too: the reference raises on it (`int(row["itemid"])`), and
+    * a matrix line needs an id.
     *
     * Input: `(stay_id, event_epoch_time, feature_id, value)`.
     * Output: `(stay_id, feature_id, tidx, value, total_windows)`.
     */
   def bucketize(events: DataFrame, stayIdx: DataFrame, timestepSeconds: Long): DataFrame =
     events
-      .where(col("event_epoch_time").isNotNull)
+      .where(col("event_epoch_time").isNotNull && col("feature_id").isNotNull)
       .join(broadcast(stayIdx.select("stay_id", "intime", "total_windows")),
         Seq("stay_id"), "inner")
       .withColumn("tidx",

@@ -109,11 +109,6 @@ object GraftFunctions {
       rules: Seq[String] = graft.ops.PublicSuffixes.Default): Column =
     ColumnBridge.column(PslDomain(ColumnBridge.expression(host), rules))
 
-  /** In-row MinHash signature of a shingle array (xxhash64 base) — see
-    * [[MinHashSig]]. */
-  def minhash_sig(shingles: Column, n: Int): Column =
-    ColumnBridge.column(MinHashSig(ColumnBridge.expression(shingles), n))
-
   /** In-row MinHash signature over the 60-bit md5-prefix base — see
     * [[MinHashSigMd5]]. */
   def minhash_sig_md5(shingles: Column, n: Int): Column =

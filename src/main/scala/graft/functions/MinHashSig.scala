@@ -5,65 +5,13 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 
-/** In-row MinHash signature over a document's distinct-shingle ARRAY —
-  * bit-identical to the former explode → `xxhash64(sh)` →
-  * [[SigAggregators.MinHashAggregator]] grouping, with NO exploded rows
-  * and NO aggregation shuffle (guide §2.4: the per-doc signature is a
-  * pure function of the doc's own shingle set, so at any scale it belongs
-  * in the row, not behind a `groupBy(doc_id)` exchange of every
-  * (doc, shingle) pair).
-  *
-  * Per element: `base = xxhash64(sh) >>> 8` (the SAME
-  * [[XxHash64Function]] seed-42 hash the SQL `xxhash64` computes; a null
-  * element hashes to the untouched seed, exactly as the SQL function
-  * does), then the elementwise min over the seeded rehash family
-  * `(base · (2i+1)) XOR (i · φ64)` — the identical formula, identical
-  * overflow-free regime (`nHashes <= 64`, enforced by callers as before).
-  *
-  * An EMPTY shingle array yields NULL (the aggregation path produced no
-  * group for such a doc; downstream generators over a null signature
-  * produce no rows, so the drop-out semantics are preserved end to end).
-  */
-case class MinHashSig(child: Expression, n: Int)
-    extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case t =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"expected array<string>, got $t")
-    }
-
-  // empty input -> null regardless of child nullability
-  override def nullable: Boolean = true
-
-  override def nullSafeEval(input: Any): Any =
-    MinHashSigKernel.compute(input.asInstanceOf[ArrayData], n)
-
-  override protected def doGenCode(ctx: CodegenContext,
-      ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
-      s"""
-         |${ev.value} = graft.functions.MinHashSigKernel.compute($c, $n);
-         |${ev.isNull} = ${ev.value} == null;
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(
-      newChild: Expression): MinHashSig = copy(child = newChild)
-}
-
-/** In-row banded MinHash bucket keys: the [[MinHashSig]] signature
-  * sliced into `bands` sub-signatures of `r = n/bands` registers, each
-  * hashed to its band-bucket key with the SAME `xxhash64(slice, band)`
-  * the Column form computed — calling [[XxHash64Function]] over the
-  * slice (array<long> semantics: element-chained seeds) then the band
-  * index, so the bucket values are bit-identical. Why a fused kernel:
+/** In-row banded MinHash bucket keys: the [[MinHashSigKernel.compute]]
+  * signature sliced into `bands` sub-signatures of `r = n/bands`
+  * registers, each hashed to its band-bucket key with the SAME
+  * `xxhash64(slice, band)` the Column form computed — calling
+  * [[XxHash64Function]] over the slice (array<long> semantics:
+  * element-chained seeds) then the band index, so the bucket values are
+  * bit-identical. Why a fused kernel:
   * the Column form (`posexplode(transform(seq, b => xxhash64(slice(sig,
   * …), b)))`) references `sig` inside the lambda, and when the
   * signature is NOT a materialized attribute CollapseProject inlines the
@@ -106,8 +54,9 @@ case class MinHashBuckets(child: Expression, n: Int, bands: Int)
       newChild: Expression): MinHashBuckets = copy(child = newChild)
 }
 
-/** In-row MinHash over the md5-prefix base hash — the [[MinHashSig]] of
-  * the b-bit sketch path: per element the base is the 60-bit md5 prefix
+/** In-row MinHash over the md5-prefix base hash — the
+  * [[MinHashSigKernel.compute]] signature of the b-bit sketch path: per
+  * element the base is the 60-bit md5 prefix
   * (`conv(substring(md5(sh), 1, 15), 16, 10)`, i.e. the first 15 hex
   * nibbles = big-endian first-8-bytes >>> 4), fed through the identical
   * seeded family. Same empty-array → NULL drop-out semantics.
@@ -196,6 +145,21 @@ object MinHashSigKernel {
       java.security.MessageDigest.getInstance("MD5")
   }
 
+  /** In-row MinHash signature over a document's distinct-shingle array —
+    * bit-identical to the former explode → `xxhash64(sh)` →
+    * [[SigAggregators.MinHashAggregator]] grouping, with no exploded rows
+    * and no aggregation shuffle: the per-doc signature is a pure function
+    * of the doc's own shingle set, so it belongs in the row, not behind a
+    * `groupBy(doc_id)` exchange of every (doc, shingle) pair.
+    *
+    * Per element: `base = xxhash64(sh) >>> 8` (the same seed-42
+    * [[XxHash64Function]] hash the SQL `xxhash64` computes; a null element
+    * hashes to the untouched seed, as the SQL function does), then the
+    * elementwise min over the seeded rehash family
+    * `(base · (2i+1)) XOR (i · φ64)`, overflow-free for `n <= 64`
+    * (callers enforce it). An empty shingle array yields null: generators
+    * over a null signature produce no rows, so such a doc drops out.
+    */
   def compute(arr: ArrayData, n: Int): ArrayData = {
     val len = arr.numElements()
     if (len == 0) return null

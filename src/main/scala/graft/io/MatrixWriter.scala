@@ -226,9 +226,11 @@ object MatrixWriter {
   * `tidx = -1` row opens its stay's file and writes the header of width
   * `total_windows + 1`; the [[DensifyFillKernel.walk]] over the cells up
   * to the next header fills each (feature, window) run per `mode`, and
-  * each series is written as one line. A cell whose stay has no open
-  * header fails the task: no input of [[MatrixWriter]] reaches that case,
-  * and writing nothing for it would lose the line silently.
+  * each series is written as one line, its `feature_id` first. A cell
+  * whose stay has no open header, or whose `feature_id` is null, fails
+  * the task: no run reaches either case (bucketize drops a null feature),
+  * and writing the line without its header or its id would corrupt the
+  * file silently.
   */
 private final class CsvPartitionWriter(dstPath: String, sourceName: String, mode: Int,
     hconf: Option[SerializableHadoopConf]) extends (Iterator[Row] => Unit) with Serializable {
@@ -258,7 +260,10 @@ private final class CsvPartitionWriter(dstPath: String, sourceName: String, mode
         out.write(MatrixWriter.header(totalWindows))
         out.newLine()
         DensifyFillKernel.walk(cells, mode)(_ => n).foreach { s =>
-          if (s.feature != null) { out.write(s.feature.toString); out.write(',') }
+          if (s.feature == null) throw new IllegalStateException(
+            s"$sourceName: a cell of stay $stay with a null feature_id reached the writer")
+          out.write(s.feature.toString)
+          out.write(',')
           var t = 0
           while (t < n) {
             if (t > 0) out.write(',')

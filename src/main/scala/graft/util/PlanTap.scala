@@ -5,7 +5,7 @@ import org.apache.spark.sql.DataFrame
 /** Pre-materialization plan capture for the audit tools.
   *
   * An eager `localCheckpoint()` inside an operator truncates every plan a
-  * downstream tool can see — `PlanDump`/`ExplainCheck` dump an
+  * downstream tool can see — `Bench plans`/`ExplainCheck` dump an
   * `ExistingRDD` scan and the shape evidence for the expensive upstream
   * (the round-16 verdict's item 5: the trainer gates' "after" dumps were
   * 8-line checkpoint scans). Operators route gate-relevant checkpoints
@@ -16,7 +16,7 @@ import org.apache.spark.sql.DataFrame
   * Capture is process-wide, not per thread: between [[start]] and [[stop]]
   * every [[local]] call in the JVM records into the same buffer. It
   * assumes one thread constructs the plans being audited, as
-  * `ExplainCheck` and `PlanDump` do. A caller that builds plans from
+  * `ExplainCheck` and `Bench plans` do. A caller that builds plans from
   * several threads at once would see their captures interleaved;
   * `EventsAggregator.run` does (up to four source threads), but its
   * pipelines do not route through `local`.

@@ -309,7 +309,7 @@ class EngineSpec extends AnyFunSuite {
   test("long-parquet sink roundtrip matches the CSV matrices") {
     import org.apache.spark.sql.functions._
     import graft.etl.Stages.{ForwardFill, LinearInterp, ZeroFill}
-    // an unparseable itemid is a null feature_id: a series of its own
+    // an unparseable itemid is a null feature_id: dropped by bucketize
     val root = fixturesWith("chartevents.csv" ->
       "2,20,2,2020-01-01 01:10:00,2020-01-01 01:11:00,x,2,2.0,bpm,0")
     for (mode <- Seq(ZeroFill, ForwardFill, LinearInterp)) {
@@ -326,8 +326,8 @@ class EngineSpec extends AnyFunSuite {
       // sources surface as a Hive partition column (partition-pruned reads)
       assert(long.columns.toSet ==
         Set("stay_id", "feature_id", "tidx", "value", "source"))
-      // every (source, stay, feature) series, cell for cell; a CSV line one
-      // field short of its header is the null feature's
+      // every (source, stay, feature) series, cell for cell; every CSV line
+      // has its header's width
       val fromCsv = tree(csvDst).toSeq.flatMap { case (rel, text) =>
         val path = java.nio.file.Paths.get(rel)
         val stay = path.getName(0).toString.toLong
@@ -336,20 +336,20 @@ class EngineSpec extends AnyFunSuite {
         val width = lines.head.split(",").length
         lines.tail.map { l =>
           val f = l.split(",")
-          val (feature, vals) =
-            if (f.length == width) (Some(f(0).toLong), f.tail) else (None, f)
-          (source, stay, feature) -> vals.map(_.toDouble).toSeq
+          assert(f.length == width, s"$mode $rel: $l")
+          (source, stay, f(0).toLong) -> f.tail.map(_.toDouble).toSeq
         }
       }.toMap
+      assert(long.where(col("feature_id").isNull).isEmpty, s"$mode")
       val fromParquet = long.collect().groupBy { r =>
-        (r.getAs[String]("source"), r.getAs[Long]("stay_id"),
-          Option(r.getAs[java.lang.Long]("feature_id")).map(_.longValue))
+        (r.getAs[String]("source"), r.getAs[Long]("stay_id"), r.getAs[Long]("feature_id"))
       }.map { case (k, rs) =>
         val byT = rs.map(r => r.getAs[Long]("tidx") -> r.getAs[Double]("value")).sortBy(_._1)
         assert(byT.map(_._1).toSeq == byT.indices.map(_.toLong), s"$mode $k tidx")
         k -> byT.map(_._2).toSeq
       }
-      assert(fromCsv.keySet.contains(("chartevents", 2L, None)), s"$mode")
+      assert(!fromCsv.keySet.exists { case (s, stay, _) => s == "chartevents" && stay == 2L },
+        s"$mode")
       assert(fromParquet == fromCsv, s"$mode")
       // each stay's rows sit in exactly one file of its source
       val files = long.select(col("source"), col("stay_id"), input_file_name().as("file"))
@@ -437,7 +437,7 @@ class EngineSpec extends AnyFunSuite {
 
   test("CSV sink: run() writes the bytes MatrixWriter.write(aggregate) writes, every fill mode") {
     import graft.etl.Stages.{ForwardFill, LinearInterp, ZeroFill}
-    // an unparseable itemid is a null feature_id: still written, sorted first
+    // an unparseable itemid is a null feature_id: dropped by bucketize
     val root = fixturesWith("chartevents.csv" ->
       "2,20,2,2020-01-01 01:10:00,2020-01-01 01:11:00,x,2,2.0,bpm,0")
     for (mode <- Seq(ZeroFill, ForwardFill, LinearInterp)) {
@@ -451,11 +451,38 @@ class EngineSpec extends AnyFunSuite {
         agg.aggregate(src), agg.stayIndex, viaWrite.toString, src.name))
       val got = tree(viaRun)
       assert(got.size == 12, s"$mode: ${got.keySet}") // 3 stays × 4 sources
-      // stay 2: chartevents holds only the null-feature line; inputevents
-      // is header-only although outputevents has events
-      assert(got("2/chartevents_features.csv").linesIterator.size == 2, s"$mode")
+      // stay 2: chartevents and inputevents are header-only although
+      // outputevents has events; the null-feature row left no line
+      assert(got("2/chartevents_features.csv") == "feature_id,0,1,2,3,4\n", s"$mode")
       assert(got("2/inputevents_features.csv") == "feature_id,0,1,2,3,4\n", s"$mode")
       assert(got == tree(viaWrite), s"$mode")
+    }
+  }
+
+  test("CSV sink: every file it writes reads back through MatrixReader.readStay, every fill mode") {
+    import graft.cli.MatrixReader
+    import graft.etl.Stages.{ForwardFill, LinearInterp, ZeroFill}
+    // with an unparseable itemid among the events
+    val root = fixturesWith("chartevents.csv" ->
+      "2,20,2,2020-01-01 01:10:00,2020-01-01 01:11:00,x,2,2.0,bpm,0")
+    val sources = Sources.all.map(_.name)
+    val universe = Vector(100L, 200L, 300L, 400L, 500L)
+    for (mode <- Seq(ZeroFill, ForwardFill, LinearInterp)) {
+      val dst = Files.createTempDirectory("graft-out-readback")
+      new EventsAggregator(spark, root.toString, dst.toString, fillMode = Some(mode)).run()
+      val files = tree(dst)
+      assert(files.size == 12, s"$mode: ${files.keySet}")
+      for ((rel, text) <- files) {
+        val stay = java.nio.file.Paths.get(rel).getName(0).toString.toLong
+        val m = MatrixReader.readStay(dst.toString, stay, sources, universe)
+        val lines = text.linesIterator.toList
+        assert(m.width == lines.head.split(",").length - 1, s"$mode $rel")
+        lines.tail.foreach { l =>
+          val f = l.split(",")
+          assert(m.values(universe.indexOf(f(0).toLong)).toSeq == f.tail.map(_.toDouble).toSeq,
+            s"$mode $rel: $l")
+        }
+      }
     }
   }
 
@@ -601,6 +628,23 @@ class EngineSpec extends AnyFunSuite {
     }
     assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
       .exists(t => String.valueOf(t.getMessage).contains("stay 2 reached the writer without")))
+  }
+
+  test("CSV sink: a cell with a null feature_id fails the write") {
+    import org.apache.spark.sql.functions.{col, lit}
+    val root = Files.createTempDirectory("graft-mimic-nullfeat")
+    writeFixtures(root)
+    val dst = Files.createTempDirectory("graft-out-nullfeat")
+    val agg = new EventsAggregator(spark, root.toString, dst.toString)
+    val cells = agg.aggregate(Sources.chartevents)
+    val nullFeature = cells.where(col("stay_id") === 1L && col("feature_id") === 100L)
+      .withColumn("feature_id", lit(null).cast(cells.schema("feature_id").dataType))
+    val e = intercept[org.apache.spark.SparkException] {
+      graft.io.MatrixWriter.write(cells.unionByName(nullFeature), agg.stayIndex,
+        dst.toString, "chartevents")
+    }
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("null feature_id reached the writer")))
   }
 
   test("point sources: an empty or malformed event time drops the event, aborts nothing") {

@@ -5,7 +5,7 @@ Usage:
   python3 tools/factor_audit.py <bench_base.json> <bench_scaled.json> \
       [--data-factor 10] [--max-factor 10] [--allowlist tools/factor_allowlist.json]
 
-Reads the per-query seconds from two Bench/ScaleProbe-style JSON artifacts
+Reads the per-query seconds from two Bench or `Bench scale … probe` JSON artifacts
 (the `queries` object of the one-line bench JSON), computes each gate's
 wall factor scaled/base, and FAILS (exit 1) when any gate exceeds
 --max-factor without an allowlist entry. This turns the round-13 sf1-sweep
@@ -34,7 +34,7 @@ def load_queries(path):
     d = json.loads(Path(path).read_text())
     if "queries" in d:
         return d["queries"]
-    # ScaleProbe probe JSON: [{"gate":..,"base_s":..,"scaled_s":..}]
+    # `Bench scale ... probe` JSON: [{"gate":..,"base_s":..,"scaled_s":..}]
     if isinstance(d, list):
         return {r["gate"]: r for r in d}
     return d
@@ -75,7 +75,7 @@ def main():
     skipped_noise = set()
     for g in sorted(set(base) & set(scaled)):
         b, s = base[g], scaled[g]
-        if isinstance(b, dict):  # ScaleProbe row
+        if isinstance(b, dict):  # `Bench scale` probe row
             b, s = b["base_s"], s["scaled_s"]
         if b < args.min_base:
             skipped_noise.add(g)  # present, just too fast to judge —
