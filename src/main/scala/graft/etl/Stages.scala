@@ -10,9 +10,9 @@ import graft.functions.DensifyFillKernel
   * the long-form model `(stay_id, feature_id, tidx, value)` (SURVEY.md §1.1).
   * Every stage but [[densify]] is declarative Column algebra that Catalyst
   * fuses with whole-stage codegen (scan → project → broadcast join →
-  * partial agg → exchange → final agg); [[densify]] adds one exchange by
-  * stay and walks each task's sorted cells. Nothing here iterates rows on
-  * the driver.
+  * exchange by stay → agg); [[densify]] walks each task's sorted cells.
+  * The one exchange by stay is [[combine]]'s. Nothing here iterates rows
+  * on the driver.
   */
 object Stages {
 
@@ -96,10 +96,14 @@ object Stages {
     * dropped too: the reference raises on it (`int(row["itemid"])`), and
     * a matrix line needs an id.
     *
-    * Input: `(stay_id, event_epoch_time, feature_id, value)`.
-    * Output: `(stay_id, feature_id, tidx, value, total_windows)`.
+    * Input: `(stay_id, event_epoch_time, feature_id, value)` and any
+    * other columns, which pass through after the outputs (the streaming
+    * path keeps its `event_time` this way).
+    * Output: `(stay_id, feature_id, tidx, value, total_windows, ...)`.
     */
-  def bucketize(events: DataFrame, stayIdx: DataFrame, timestepSeconds: Long): DataFrame =
+  def bucketize(events: DataFrame, stayIdx: DataFrame, timestepSeconds: Long): DataFrame = {
+    val extra = events.columns.toSeq
+      .filterNot(Set("stay_id", "event_epoch_time", "feature_id", "value"))
     events
       .where(col("event_epoch_time").isNotNull && col("feature_id").isNotNull)
       .join(broadcast(stayIdx.select("stay_id", "intime", "total_windows")),
@@ -109,23 +113,30 @@ object Stages {
           floor((col("event_epoch_time") - col("intime")) / lit(timestepSeconds)).cast("long"),
           lit(0L)))
       .where(col("tidx") <= col("total_windows"))
-      .select("stay_id", "feature_id", "tidx", "value", "total_windows")
+      .select("stay_id", Seq("feature_id", "tidx", "value", "total_windows") ++ extra: _*)
+  }
 
   /** Per-(stay, feature, window) combine — the reference's three-level
     * groupby-apply pyramid (`__init__.py:213-214,170-173,119-123`) dissolved
-    * into ONE multi-key hash aggregation = one shuffle with map-side partial
-    * aggregation. `avg`/`sum` ignore nulls exactly like pandas skipna
-    * (SURVEY.md §2.4 A3). An input already hash-partitioned by `stay_id`
-    * (the CSV sink's, [[graft.io.MatrixWriter.writeMatrices]]) satisfies the
-    * grouping's distribution, so the aggregation adds no exchange.
+    * into ONE multi-key hash aggregation. `avg`/`sum` ignore nulls exactly
+    * like pandas skipna (SURVEY.md §2.4 A3).
+    *
+    * Combine owns the pipeline's one exchange: it starts with
+    * `repartition(stay_id)`, which satisfies the grouping's distribution,
+    * so every stay's cells leave it in one task — the clustering
+    * [[densify]] and both sinks need, with no exchange of their own. The
+    * cost is the map-side partial aggregate that an exchange on the three
+    * grouping keys would allow; it removes under 2% of rows on the
+    * measured traffic (a window rarely holds two events of one feature).
     */
   def combine(bucketized: DataFrame, combiner: graft.model.Combiner): DataFrame =
     bucketized
+      .repartition(col("stay_id"))
       .groupBy("stay_id", "feature_id", "tidx")
       .agg(combiner.agg(col("value")).as("value"),
         first("total_windows").as("total_windows"))
 
-  /** Gap policy of [[densify]]; `name` is the kernel's mode and the run
+  /** Gap policy of [[densify]] and the CSV sink; `name` is the run
     * manifest's fill policy. */
   sealed trait FillMode { def name: String }
   /** Gaps → 0.0 (the reference default, `__init__.py:132-136`). */
@@ -144,13 +155,17 @@ object Stages {
     * `(stay_id, feature_id, tidx, value)` with one row per `tidx ∈
     * 0..total_windows` for every observed (stay, feature) pair.
     *
-    * One exchange by `stay_id` and a sort within partitions put each
-    * (stay, feature) pair's cells in one task, in window order; the
-    * [[graft.functions.DensifyFillKernel]] walk turns each run into its
-    * dense, filled series in O(total_windows + cells) — no spine join, no
-    * Window, no per-pair aggregation buffer — and [[DensifyPartitions]]
-    * lays it out. The output stays clustered by stay and sorted, which
-    * [[graft.io.MatrixWriter.writeLongForm]] relies on. A cell whose
+    * A sort within partitions puts each (stay, feature) pair's cells in
+    * window order in the task that [[combine]]'s exchange gave the stay;
+    * the [[graft.functions.DensifyFillKernel]] walk turns each run into
+    * its dense, filled series in O(total_windows + cells) — no spine join,
+    * no Window, no per-pair aggregation buffer — and [[DensifyPartitions]]
+    * lays it out. The `repartition(stay_id)` here only serves a caller
+    * that passes cells not clustered by stay: after [[combine]], Spark's
+    * `EnsureRequirements` removes it as redundant, so the
+    * combine → densify plan has one exchange. The output stays clustered
+    * by stay and sorted, which [[graft.io.MatrixWriter.writeLongForm]]
+    * relies on. A cell whose
     * combined value is null (e.g. the mean of an all-null window) is a gap
     * in every mode, the same as a window with no cell.
     *
@@ -176,7 +191,7 @@ object Stages {
     */
   final case class DensifyPartitions(mode: FillMode) extends (Iterator[Row] => Iterator[Row]) {
     override def apply(rows: Iterator[Row]): Iterator[Row] =
-      DensifyFillKernel.walk(rows, DensifyFillKernel.modeCode(mode.name)) { r =>
+      DensifyFillKernel.walk(rows, mode) { r =>
         if (r.isNullAt(4)) 0 else DensifyFillKernel.seriesLength(r.getLong(4))
       }.flatMap(s => Iterator.tabulate(s.n)(t => Row(s.stay, s.feature, t.toLong, s.values(t))))
   }

@@ -3,6 +3,8 @@ package graft.functions
 import org.apache.spark.sql.Row
 import org.apache.spark.unsafe.array.ByteArrayMethods
 
+import graft.etl.Stages.{FillMode, LinearInterp, ZeroFill}
+
 /** The engine's one densify + fill, shared by [[graft.etl.Stages.densify]]
   * and the CSV sink: a walk over rows sorted by `(stay_id, feature_id,
   * tidx)` that turns each (stay, feature) run of cells into its dense
@@ -13,29 +15,18 @@ import org.apache.spark.unsafe.array.ByteArrayMethods
   *    outside `0..total_windows` are ignored; a repeated in-range or a
   *    null `tidx` raises;
   *  - walk the observations in order and fill the gaps between and after
-  *    them: `zero` leaves 0.0, `ffill` carries the previous observation,
-  *    `interp` computes `pv + (nv - pv) * (t - pt) / (nt - pt)` in exactly
-  *    that double operation order (bit-equal to the DuckDB oracle's
+  *    them per [[graft.etl.Stages.FillMode]]: `ZeroFill` leaves 0.0,
+  *    `ForwardFill` carries the previous observation, `LinearInterp`
+  *    computes `pv + (nv - pv) * (t - pt) / (nt - pt)` in exactly that
+  *    double operation order (bit-equal to the DuckDB oracle's
   *    window formulation); leading gaps are 0.0 in every mode and
-  *    trailing gaps carry the last observation in `ffill` and `interp`.
+  *    trailing gaps carry the last observation in the other two.
   *
   * A run is the longest stretch of rows with equal `stay_id` and
   * `feature_id`; a null `feature_id` is a run of its own. A negative or
   * null `total_windows` makes an empty series.
   */
 object DensifyFillKernel {
-  val Zero = 0
-  val Forward = 1
-  val Interp = 2
-
-  def modeCode(mode: String): Int = mode match {
-    case "zero" => Zero
-    case "ffill" => Forward
-    case "interp" => Interp
-    case m => throw new IllegalArgumentException(
-      s"densify: unknown fill mode '$m' (zero, ffill, interp)")
-  }
-
   // per-window cell state while scattering
   private val Absent: Byte = 0
   private val NullCell: Byte = 1
@@ -66,7 +57,7 @@ object DensifyFillKernel {
     * `(stay_id, feature_id, tidx)`; `width` gives the series length of
     * the run that a row starts (see [[seriesLength]]).
     */
-  def walk(rows: Iterator[Row], mode: Int)(width: Row => Int): Iterator[Series] =
+  def walk(rows: Iterator[Row], mode: FillMode)(width: Row => Int): Iterator[Series] =
     new scala.collection.AbstractIterator[Series] {
       private val in = rows.buffered
       private val s = new Series
@@ -114,8 +105,8 @@ object DensifyFillKernel {
   /** Fill the gaps of a scattered series `out(0 until n)` in place, per
     * `mode` (see [[DensifyFillKernel]]).
     */
-  private def fill(out: Array[Double], state: Array[Byte], n: Int, mode: Int): Unit =
-    if (mode != Zero) {
+  private def fill(out: Array[Double], state: Array[Byte], n: Int, mode: FillMode): Unit =
+    if (mode != ZeroFill) {
       // prev: the last observation so far (-1 = none, the leading gap
       // keeps 0.0); each gap between prev and the next observation t is
       // filled once, so the walk is linear
@@ -128,7 +119,7 @@ object DensifyFillKernel {
           var g = prev + 1
           while (prev >= 0 && g < t) {
             out(g) =
-              if (mode == Interp) pv + (nv - pv) * (g - prev).toDouble / (t - prev).toDouble
+              if (mode == LinearInterp) pv + (nv - pv) * (g - prev).toDouble / (t - prev).toDouble
               else pv
             g += 1
           }

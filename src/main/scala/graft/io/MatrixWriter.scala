@@ -7,25 +7,11 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.SerializableConfiguration
 
 import graft.etl.Stages
 import graft.functions.DensifyFillKernel
 import graft.model.Combiner
-
-/** Hadoop `Configuration` is not `Serializable`; this wrapper ships it to
-  * executor tasks via its `Writable` form (public Hadoop API) so tasks can
-  * open the SAME filesystem the driver resolved (s3a/hdfs credentials and
-  * all) instead of whatever a fresh `new Configuration()` would load.
-  */
-private class SerializableHadoopConf(@transient var value: Configuration)
-    extends Serializable {
-  private def writeObject(out: java.io.ObjectOutputStream): Unit = {
-    out.defaultWriteObject(); value.write(out)
-  }
-  private def readObject(in: java.io.ObjectInputStream): Unit = {
-    in.defaultReadObject(); value = new Configuration(false); value.readFields(in)
-  }
-}
 
 /** Sink selection for [[graft.api.EventsAggregator.run]]. */
 sealed trait SinkMode
@@ -45,9 +31,10 @@ case object LongParquetSink extends SinkMode
   *
   * Spark-first shape ([[writeMatrices]]), one exchange and one streaming
   * pass per source: one header row per stay-index stay (`tidx = -1`, which
-  * bucketize never emits) is unioned into the bucketized events, and ONE
-  * `repartition($"stay_id")` gives each stay's rows to one task. The
-  * combine aggregation reuses that partitioning, `sortWithinPartitions(
+  * bucketize never emits) is unioned into the bucketized events, and
+  * [[graft.etl.Stages.combine]]'s `repartition($"stay_id")` — the one
+  * exchange — gives each stay's rows to one task, with no partial
+  * aggregate in front of it (see combine). `sortWithinPartitions(
   * stay_id, feature_id, tidx)` puts each stay's header first and each
   * (stay, feature) run's cells in window order, and a [[CsvPartitionWriter]]
   * streams the stays: it opens a stay's file at its header, densifies and
@@ -62,7 +49,8 @@ case object LongParquetSink extends SinkMode
   * The header rows share the events' exchange on purpose: under a `Union`
   * of two separately repartitioned sides, AQE coalesces each side's
   * partitions on its own, so a stay's header and its lines can land in
-  * different tasks.
+  * different tasks. [[writeCombined]], whose cells skip combine, makes
+  * the same exchange itself.
   *
   * `dstPath` may carry any supported scheme: remote schemes (hdfs://,
   * s3a://, ...) write through the Hadoop `FileSystem` resolved from the
@@ -72,7 +60,10 @@ case object LongParquetSink extends SinkMode
   * `java.nio` branch: without libhadoop (NativeCodeLoader warns), Hadoop's
   * RawLocalFileSystem applies permissions by EXEC'ING a `chmod` process per
   * created file — measured ~5 ms/file, +60% wall on a 2001-file run. Only
-  * a remote destination ships the Hadoop configuration to the tasks.
+  * a remote destination ships the session's Hadoop configuration to the
+  * tasks (Spark's `SerializableConfiguration`), so a task opens the
+  * filesystem the driver resolved, credentials and all, not the one a
+  * fresh `Configuration` would load.
   *
   * For >100k stays the per-stay-file layout itself is the bottleneck
   * (millions of small files); [[writeLongForm]] is the scale alternative.
@@ -135,7 +126,8 @@ object MatrixWriter {
     */
   def writeCombined(combined: DataFrame, stayIdx: DataFrame, fill: Stages.FillMode,
       dstPath: String, sourceName: String): Unit =
-    writeSorted(withHeaders(combined, stayIdx), fill, dstPath, sourceName)
+    writeSorted(withHeaders(combined, stayIdx).repartition(col("stay_id")),
+      fill, dstPath, sourceName)
 
   /** Long-form adapter: writes the dense `(stay_id, feature_id, tidx,
     * value)` rows of [[graft.api.EventsAggregator.aggregate]] as they are
@@ -146,24 +138,21 @@ object MatrixWriter {
       sourceName: String): Unit =
     writeCombined(densified, stayIdx, Stages.ZeroFill, dstPath, sourceName)
 
-  /** `cells` plus one `tidx = -1` header row per `stayIdx` stay, in one
-    * hash partitioning by `stay_id`. */
+  /** `cells` plus one `tidx = -1` header row per `stayIdx` stay. */
   private def withHeaders(cells: DataFrame, stayIdx: DataFrame): DataFrame =
     stayIdx.select(col("stay_id"), lit(null).cast("long").as("feature_id"),
         lit(-1L).as("tidx"), lit(null).cast("double").as("value"), col("total_windows"))
       .unionByName(cells.select("stay_id", "feature_id", "tidx", "value"),
         allowMissingColumns = true)
-      .repartition(col("stay_id"))
 
   private def writeSorted(cells: DataFrame, fill: Stages.FillMode, dstPath: String,
       sourceName: String): Unit = {
     val hconf =
       if (isLocal(dstPath)) None
-      else Some(new SerializableHadoopConf(cells.sparkSession.sparkContext.hadoopConfiguration))
+      else Some(new SerializableConfiguration(cells.sparkSession.sparkContext.hadoopConfiguration))
     cells.select("stay_id", "feature_id", "tidx", "value", "total_windows")
       .sortWithinPartitions("stay_id", "feature_id", "tidx")
-      .foreachPartition(new CsvPartitionWriter(dstPath, sourceName,
-        DensifyFillKernel.modeCode(fill.name), hconf))
+      .foreachPartition(new CsvPartitionWriter(dstPath, sourceName, fill, hconf))
   }
 
   /** Long-form partitioned-parquet sink — the >100k-stays alternative to
@@ -174,9 +163,11 @@ object MatrixWriter {
     * under `{dst}/long/source={name}/` (sources as Hive-style partitions —
     * `spark.read.parquet("{dst}/long")` exposes a `source` column with
     * partition pruning). `densified` is [[graft.etl.Stages.densify]]'s
-    * output, already partitioned by stay and sorted by
-    * `(stay_id, feature_id, tidx)` within each partition, so it is written
-    * as it arrives, with no exchange of its own: each stay lives in one
+    * output, already clustered by stay by [[graft.etl.Stages.combine]]'s
+    * exchange (the write's only one, with no partial aggregate in front of
+    * it; see combine) and sorted by `(stay_id, feature_id, tidx)` within
+    * each partition, so it is written as it arrives, with no exchange of
+    * its own: each stay lives in one
     * file with tight row-group min/max stats on `stay_id` — a per-stay read
     * prunes to one row group instead of scanning the dataset. Another
     * input is written in its own order and layout. Use [[writeStayIndex]]
@@ -232,8 +223,9 @@ object MatrixWriter {
   * and writing the line without its header or its id would corrupt the
   * file silently.
   */
-private final class CsvPartitionWriter(dstPath: String, sourceName: String, mode: Int,
-    hconf: Option[SerializableHadoopConf]) extends (Iterator[Row] => Unit) with Serializable {
+private final class CsvPartitionWriter(dstPath: String, sourceName: String,
+    mode: Stages.FillMode, hconf: Option[SerializableConfiguration])
+    extends (Iterator[Row] => Unit) with Serializable {
 
   override def apply(rows: Iterator[Row]): Unit = {
     val in = rows.buffered

@@ -2,8 +2,9 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode}
 
+import graft.etl.Stages
 import graft.model.{Combiner, MeanCombine, SumCombine}
 
 /** Structured Streaming variant of the engine's bucketize → combine core
@@ -22,27 +23,25 @@ import graft.model.{Combiner, MeanCombine, SumCombine}
   * bounded and leaves memory as the watermark passes; the fold is a cheap
   * batch aggregation over the sink (or a `foreachBatch` merge).
   *
-  * Late/early semantics mirror the batch path (SURVEY.md §2.5 W4): events
-  * before `intime` clamp into window 0; events after the stay end are
-  * dropped; events later than the watermark are dropped by Spark.
+  * Late/early semantics are the batch path's, because the window
+  * assignment IS the batch [[graft.etl.Stages.bucketize]] (SURVEY.md §2.5
+  * W4): events before `intime` clamp into window 0; events after the stay
+  * end, and events with a null time or feature, are dropped; events later
+  * than the watermark are dropped by Spark.
   */
 object StreamingAggregator {
 
   /** Streaming partial aggregation of (stay_id, event_time: timestamp,
-    * feature_id, value) against a static broadcast stay index
-    * (stay_id, intime, total_windows).
+    * feature_id, value) against a static stay index (stay_id, intime,
+    * total_windows), which [[graft.etl.Stages.bucketize]] broadcasts.
     */
   def partials(events: DataFrame, stayIndex: DataFrame,
       timestepSeconds: Long, watermark: String = "2 hours"): DataFrame =
-    events
-      .withWatermark("event_time", watermark)
-      .withColumn("event_epoch_time", unix_timestamp(col("event_time")))
-      .join(broadcast(stayIndex.select("stay_id", "intime", "total_windows")),
-        Seq("stay_id"), "inner")
-      .withColumn("tidx",
-        greatest(floor((col("event_epoch_time") - col("intime")) / lit(timestepSeconds))
-          .cast("long"), lit(0L)))
-      .where(col("tidx") <= col("total_windows"))
+    Stages.bucketize(
+        events
+          .withWatermark("event_time", watermark)
+          .withColumn("event_epoch_time", unix_timestamp(col("event_time"))),
+        stayIndex, timestepSeconds)
       .groupBy(col("stay_id"), col("feature_id"), col("tidx"),
         window(col("event_time"), s"$timestepSeconds seconds"))
       .agg(sum(col("value")).as("value_sum"), count(col("value")).as("value_n"))
@@ -67,15 +66,6 @@ object StreamingAggregator {
     folded.select(col("stay_id"), col("feature_id"), col("tidx"),
       value.as("value"))
   }
-
-  /** Append-mode parquet sink for the partials. */
-  def sink(partials: DataFrame, path: String, checkpoint: String): DataStreamWriter[Row] =
-    partials.writeStream
-      .outputMode(OutputMode.Append)
-      .format("parquet")
-      .option("path", path)
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.ProcessingTime("10 seconds"))
 
   /** foreachBatch sink closing the streaming → matrix loop (SURVEY.md §7.5's
     * last step): each microbatch writes its watermark-evicted partials to a

@@ -140,15 +140,14 @@ object PropertySpec extends Properties("graft.stages") {
     * before / after t, and interpolation uses the same double op order.
     */
   private def denseRef(cells: List[(Long, Option[Double])], tw: Long,
-      mode: Int): Seq[Double] = {
-    import graft.functions.DensifyFillKernel.{Forward, Zero}
+      mode: Stages.FillMode): Seq[Double] = {
     val at = cells.toMap
     val col = (0L to tw).map(t => at.getOrElse(t, None))
     col.indices.map { t =>
       val prev = (0 to t).reverse.find(col(_).isDefined)
       val next = (t until col.size).find(col(_).isDefined)
-      if (mode == Zero) col(t).getOrElse(0.0)
-      else if (mode == Forward) prev.fold(0.0)(col(_).get)
+      if (mode == Stages.ZeroFill) col(t).getOrElse(0.0)
+      else if (mode == Stages.ForwardFill) prev.fold(0.0)(col(_).get)
       else (col(t), prev, next) match {
         case (Some(v), _, _) => v
         case (None, None, _) => 0.0
@@ -167,7 +166,7 @@ object PropertySpec extends Properties("graft.stages") {
     * rows, so it has no series either.
     */
   private def walked(series: List[(Long, List[(Long, Option[Double])])],
-      mode: Int): Map[Int, Seq[Double]] = {
+      mode: Stages.FillMode): Map[Int, Seq[Double]] = {
     import org.apache.spark.sql.Row
     import graft.functions.DensifyFillKernel.{seriesLength, walk}
     def key(i: Int): (Long, java.lang.Long) =
@@ -184,9 +183,8 @@ object PropertySpec extends Properties("graft.stages") {
 
   property("densify kernel equals a brute-force reindex + fill, every mode") =
     forAll(Gen.listOfN(300, genSeries)) { series =>
-      import graft.functions.DensifyFillKernel.{Forward, Interp, Zero}
       val bad = for {
-        mode <- Seq(Zero, Forward, Interp)
+        mode <- Seq(Stages.ZeroFill, Stages.ForwardFill, Stages.LinearInterp)
         got = walked(series, mode)
         ((tw, cells), i) <- series.zipWithIndex
         want = Option.when(cells.nonEmpty)(denseRef(cells, tw, mode))
@@ -199,12 +197,11 @@ object PropertySpec extends Properties("graft.stages") {
   property("densify: a duplicate tidx in one series raises") = {
     import spark.implicits._
     import scala.util.Try
-    import graft.functions.DensifyFillKernel
     def raises(body: => Any): Boolean = Try(body).failed.toOption
       .exists(e => String.valueOf(e.getMessage).contains("duplicate tidx"))
     // straight on the walk, the second cell's value null
     val direct = raises(walked(List(4L -> List(2L -> Some(1.0), 2L -> None)),
-      DensifyFillKernel.Zero))
+      Stages.ZeroFill))
     // and through the stage, in every fill mode
     val dup = Seq((1L, 7L, 2L, 1.0, 4L), (1L, 7L, 2L, 3.0, 4L))
       .toDF("stay_id", "feature_id", "tidx", "value", "total_windows")

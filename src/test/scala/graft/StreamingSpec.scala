@@ -10,7 +10,9 @@ import graft.etl.Stages
 import graft.model.MeanCombine
 import graft.streaming.StreamingAggregator
 
-case class StreamEv(stay_id: Long, event_time: Timestamp, feature_id: Long, value: Double)
+// boxed feature_id: a stream event may carry a null one
+case class StreamEv(stay_id: Long, event_time: Timestamp, feature_id: java.lang.Long,
+    value: Double)
 
 /** Streaming bucketize/combine must agree with the batch path on the same
   * data, including a stay-relative (non-epoch-aligned) window grid and
@@ -23,16 +25,22 @@ class StreamingSpec extends AnyFunSuite {
 
   private def ts(s: String): Timestamp = Timestamp.valueOf(s)
 
-  test("foreachBatch matrix sink produces byte-identical files to the batch sink") {
+  /** The four events of the matrix-sink tests. */
+  private def sinkEvents: Seq[StreamEv] = Seq(
+    StreamEv(1L, ts("2020-01-01 00:40:00"), 7L, 2.0),
+    StreamEv(1L, ts("2020-01-01 01:20:00"), 7L, 4.0),
+    StreamEv(1L, ts("2020-01-01 01:40:00"), 7L, 6.0),
+    StreamEv(1L, ts("2020-01-01 03:05:00"), 9L, 5.0))
+
+  /** Stream `evs` in two microbatches through the foreachBatch matrix sink,
+    * materialize the matrix, and assert it is byte-identical to the batch
+    * sink's on the same events.
+    */
+  private def assertStreamedMatchesBatch(evs: Seq[StreamEv]): Unit = {
     implicit val sqlCtx = spark.sqlContext
     import java.nio.file.Files
     val stayIdx = Seq((1L, ts("2020-01-01 00:30:00").getTime / 1000, 5L))
       .toDF("stay_id", "intime", "total_windows")
-    val evs = Seq(
-      StreamEv(1L, ts("2020-01-01 00:40:00"), 7L, 2.0),
-      StreamEv(1L, ts("2020-01-01 01:20:00"), 7L, 4.0),
-      StreamEv(1L, ts("2020-01-01 01:40:00"), 7L, 6.0),
-      StreamEv(1L, ts("2020-01-01 03:05:00"), 9L, 5.0))
     val store = Files.createTempDirectory("graft-stream-store").toString + "/p"
     val ckpt = Files.createTempDirectory("graft-stream-ckpt").toString
     val streamDst = Files.createTempDirectory("graft-stream-dst")
@@ -70,6 +78,17 @@ class StreamingSpec extends AnyFunSuite {
     val a = Files.readAllLines(streamDst.resolve("1/chartevents_features.csv"))
     val b = Files.readAllLines(batchDst.resolve("1/chartevents_features.csv"))
     assert(a == b, "streamed matrix must be byte-identical to the batch matrix")
+  }
+
+  test("foreachBatch matrix sink produces byte-identical files to the batch sink") {
+    assertStreamedMatchesBatch(sinkEvents)
+  }
+
+  test("a streaming event with a null event_time or null feature_id is dropped, as in batch") {
+    // batch bucketize drops both; the writer fails on a null feature
+    assertStreamedMatchesBatch(sinkEvents ++ Seq(
+      StreamEv(1L, null, 7L, 50.0),
+      StreamEv(1L, ts("2020-01-01 02:10:00"), null, 60.0)))
   }
 
   test("streaming partials fold to the batch result across microbatches") {
